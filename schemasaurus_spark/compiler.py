@@ -28,13 +28,36 @@ Design invariants (SURVEY.md §4):
   (``compiler.js:156-173``).
 * **No per-row Python** — ``Conform.pandas_fn`` is the only Python on the
   executor path and it is an Arrow-vectorized ``pandas_udf``.
+
+One keyword table, two compile contexts. :data:`KEYWORDS` holds one
+immutable entry per scalar keyword: the dtypes it constrains, an ``ok(x)``
+pass-predicate builder and its violation arg (the code is the DSL's own
+``Constraint.code``). :func:`applies` is the single type-guard decision.
+Both contexts derive from them, like the reference's one recursive
+``step`` (``compiler.js:135-154``):
+
+* **row context** (``_dispatch_one``) — a keyword that does not apply to
+  the column's dtype compiles to nothing; otherwise its fragment fails on
+  ``~ok(col)``, null-guarded. Catalyst folds the negation back into the
+  plain comparison (``NOT (v >= 5)`` → ``v < 5``).
+* **element context** (``_element_predicate``) — ``ok`` itself, used as
+  the predicate inside ``exists``/``filter``/``forall`` for ``Items``
+  elements, ``fields=`` struct fields, map values and tuple positions. An
+  inapplicable keyword folds to the null-aware constant ``x.isNotNull()``
+  marked ``static_true``. Container keywords on an element (nested
+  ``Items``/``TupleItems``) are ``forall`` over the negation of the same
+  per-element fail builders the row context uses.
 """
 
 from __future__ import annotations
 
 import json
+import operator
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
-from typing import Optional, Sequence
+from functools import reduce
+from types import MappingProxyType
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -147,6 +170,9 @@ class CompiledColumn:
     # conjunction of all pass-predicates (used by combinator branches)
     valid: Optional[Column] = None
 
+    def add_valid(self, ok: Column) -> None:
+        self.valid = ok if self.valid is None else self.valid & ok
+
 
 @dataclass
 class ValidationPlan:
@@ -203,10 +229,32 @@ class SuiteCompileError(ValueError):
 # typeof guards, made static because the DataFrame schema is known)
 
 
-_NUMERIC = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DecimalType,
-)
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
+_NUMERIC = _INTEGRAL + _FRACTIONAL
+
+# draft-4 type name -> the Spark dtypes that statically hold it ("integer"
+# precedes "number", so the first match is the narrowest name; columnar
+# object = struct or map, SURVEY.md §1.2 mapping)
+DRAFT_TYPES = MappingProxyType({
+    "string": (T.StringType,),
+    "integer": _INTEGRAL,
+    "number": _NUMERIC,
+    "boolean": (T.BooleanType,),
+    "array": (T.ArrayType,),
+    "object": (T.StructType, T.MapType),
+})
+
+
+def _static_type_match(tname: str, dt) -> Optional[bool]:
+    """Whether dtype ``dt`` statically is draft type ``tname``; None when
+    only a runtime probe can tell: no schema, ``null``, an unknown name, or
+    ``integer`` on a fractional dtype (whole-valued doubles pass)."""
+    kinds = DRAFT_TYPES.get(tname)
+    if dt is None or kinds is None or (
+            tname == "integer" and isinstance(dt, _FRACTIONAL)):
+        return None
+    return isinstance(dt, kinds)
 
 
 def _dtype(schema: Optional[T.StructType], col: str):
@@ -233,16 +281,108 @@ def _has_path(schema: Optional[T.StructType], col: str) -> bool:
     return schema is None or _dtype(schema, col) is not None
 
 
-def _is_string(dt) -> bool:
-    return dt is None or isinstance(dt, T.StringType)
+@dataclass(frozen=True)
+class Keyword:
+    """One scalar keyword: the dtypes it constrains (None = every dtype),
+    its pass predicate ``ok(compiler, constraint, x)`` over a value Column
+    and its violation arg."""
+
+    kinds: Optional[tuple]
+    ok: Callable[..., Column]
+    arg: Callable[[dsl.Constraint], object] = lambda c: c.value
 
 
-def _is_numeric(dt) -> bool:
-    return dt is None or isinstance(dt, _NUMERIC)
+def _no_arg(c):
+    return None
 
 
-def _is_array(dt) -> bool:
-    return dt is None or isinstance(dt, T.ArrayType)
+_STRING, _ARRAY, _MAP = (T.StringType,), (T.ArrayType,), (T.MapType,)
+
+# Module-level and never mutated, so the threads that build official-suite
+# batches share it safely.
+KEYWORDS = MappingProxyType({
+    dsl.NotNull: Keyword(None, lambda k, c, x: x.isNotNull(), _no_arg),
+    dsl.Enum: Keyword(None, lambda k, c, x: x.isin(list(c.values)),
+                      lambda c: list(c.values)),
+    dsl.Minimum: Keyword(_NUMERIC, lambda k, c, x: x >= F.lit(c.value)),
+    dsl.ExclusiveMinimum: Keyword(_NUMERIC,
+                                  lambda k, c, x: x > F.lit(c.value)),
+    dsl.Maximum: Keyword(_NUMERIC, lambda k, c, x: x <= F.lit(c.value)),
+    dsl.ExclusiveMaximum: Keyword(_NUMERIC,
+                                  lambda k, c, x: x < F.lit(c.value)),
+    dsl.MultipleOf: Keyword(
+        _NUMERIC, lambda k, c, x: (x / F.lit(float(c.value))) % 1.0 == 0.0),
+    dsl.MinLength: Keyword(_STRING, lambda k, c, x: k._str_len(x) >= c.value),
+    dsl.MaxLength: Keyword(_STRING, lambda k, c, x: k._str_len(x) <= c.value),
+    # JS .match() is an unanchored search → rlike, not full match
+    dsl.Pattern: Keyword(_STRING, lambda k, c, x: x.rlike(c.regex),
+                         lambda c: c.regex),
+    dsl.Format: Keyword(_STRING,
+                        lambda k, c, x: x.rlike(get_format(c.name).regexp),
+                        lambda c: get_format(c.name).message),
+    dsl.MinItems: Keyword(_ARRAY, lambda k, c, x: F.size(x) >= c.value),
+    dsl.MaxItems: Keyword(_ARRAY, lambda k, c, x: F.size(x) <= c.value),
+    # pass test only: the row context extracts duplicate occurrences itself
+    dsl.UniqueItems: Keyword(
+        _ARRAY, lambda k, c, x: F.size(x) == F.size(F.array_distinct(x)),
+        _no_arg),
+    dsl.MinProperties: Keyword(
+        _MAP, lambda k, c, x: F.size(F.map_keys(x)) >= c.value),
+    dsl.MaxProperties: Keyword(
+        _MAP, lambda k, c, x: F.size(F.map_keys(x)) <= c.value),
+})
+
+# dtype guards of the container keywords, which compile through their own
+# methods instead of an ok predicate
+_CONTAINER_KINDS = MappingProxyType({
+    dsl.Items: _ARRAY,
+    dsl.TupleItems: _ARRAY,
+    dsl.KeyPattern: _MAP,
+    dsl.PatternProperties: (T.MapType, T.StructType),
+    dsl.StructClosed: (T.StructType,),
+})
+
+
+def applies(c: dsl.Constraint, dt) -> bool:
+    """Whether keyword ``c`` constrains values of dtype ``dt`` — the static
+    form of the reference's typeof guards (v4validator.js:194-206): on any
+    other dtype draft-4 passes the value, so the check compiles to nothing.
+    ``dt is None`` (no schema: value-validator mode) applies everything."""
+    kw = KEYWORDS.get(type(c))
+    kinds = kw.kinds if kw is not None else _CONTAINER_KINDS.get(type(c))
+    return dt is None or kinds is None or isinstance(dt, kinds)
+
+
+def _null_aware_true(x: Column) -> Column:
+    """Element predicate of a keyword that does not apply to the element
+    dtype: it never fails a present value. Items, ``fields=`` and map-value
+    compilers skip it (``static_true``); a tuple POSITION stays null-strict,
+    so a null there still fails its spec."""
+    return x.isNotNull()
+
+
+_null_aware_true.static_true = True
+
+
+def _element_fail(field: Optional[str], pred, required: bool):
+    """Per-element fail builder of an Items check on the element itself
+    (``field`` None) or on its struct field: null values skip value checks,
+    NotNull flags them. A closure factory — a default-arg lambda reads as
+    the (element, index) form to F.exists/filter."""
+    def fail(x):
+        v = x if field is None else x[field]
+        if required:
+            return v.isNull()
+        return v.isNotNull() & ~F.coalesce(pred(v), _lit_false())
+    return fail
+
+
+def _strict_fail(pred):
+    """Null-strict fail builder (tuple positions and extras): a null
+    element fails."""
+    def fail(x):
+        return ~F.coalesce(pred(x), _lit_false())
+    return fail
 
 
 # --------------------------------------------------------------------------
@@ -365,22 +505,10 @@ class ConstraintCompiler:
         (``src/int/matchers.js:31-63``)."""
         dt = _dtype(self.schema, col_name)
         out = CompiledColumn(col_name)
-
-        def emit(code, failed, value=None, arg=None, message=None):
-            # `failed` must be null-safe; guard converts null input → pass
-            # for every non-required check (optional-absent semantics,
-            # v4validator.js:67-79).
-            if null_guard:
-                failed = col.isNotNull() & F.coalesce(failed, _lit_true())
-            else:
-                failed = F.coalesce(failed, _lit_true())
-            msg = message or self._msg(code, arg)
-            out.fragments.append(
-                _scalar_fragment(failed, code, col_name, value if value is not None else col, arg, msg)
-            )
-            out.valid = ~failed if out.valid is None else (out.valid & ~failed)
-
+        if not applies(c, dt):
+            return out
         m = c.message  # per-constraint override
+        kw = KEYWORDS.get(type(c))
 
         if isinstance(c, dsl.NotNull):
             failed = col.isNull()
@@ -398,87 +526,43 @@ class ConstraintCompiler:
             )
             out.valid = ~failed
 
+        elif isinstance(c, dsl.UniqueItems):
+            self._compile_unique_items(out, col_name, col, c, m, null_guard)
+
+        elif kw is not None:
+            # `failed` must be null-safe; the guard converts null input →
+            # pass for every non-required check (optional-absent
+            # semantics, v4validator.js:67-79)
+            failed = F.coalesce(~kw.ok(self, c, col), _lit_true())
+            if null_guard:
+                failed = col.isNotNull() & failed
+            arg = kw.arg(c)
+            out.fragments.append(_scalar_fragment(
+                failed, c.code, col_name, col, arg, m or self._msg(c.code, arg)))
+            out.valid = ~failed
+
         elif isinstance(c, dsl.TypeIs):
             self._compile_type(out, col_name, col, c, m)
 
-        elif isinstance(c, dsl.Enum):
-            emit("enum", ~col.isin(list(c.values)), arg=list(c.values), message=m)
-
-        elif isinstance(c, dsl.Minimum):
-            if _is_numeric(dt):
-                emit("minimum", col < F.lit(c.value), arg=c.value, message=m)
-        elif isinstance(c, dsl.ExclusiveMinimum):
-            if _is_numeric(dt):
-                emit("minimum.exclusive", col <= F.lit(c.value), arg=c.value, message=m)
-        elif isinstance(c, dsl.Maximum):
-            if _is_numeric(dt):
-                emit("maximum", col > F.lit(c.value), arg=c.value, message=m)
-        elif isinstance(c, dsl.ExclusiveMaximum):
-            if _is_numeric(dt):
-                emit("maximum.exclusive", col >= F.lit(c.value), arg=c.value, message=m)
-        elif isinstance(c, dsl.MultipleOf):
-            if _is_numeric(dt):
-                emit("multipleOf", (col / F.lit(float(c.value))) % 1.0 != 0.0,
-                     arg=c.value, message=m)
-
-        elif isinstance(c, dsl.MinLength):
-            if _is_string(dt):
-                emit("minLength", self._str_len(col) < c.value, arg=c.value, message=m)
-        elif isinstance(c, dsl.MaxLength):
-            if _is_string(dt):
-                emit("maxLength", self._str_len(col) > c.value, arg=c.value, message=m)
-        elif isinstance(c, dsl.Pattern):
-            if _is_string(dt):
-                # JS .match() is an unanchored search → rlike, not full match
-                emit("pattern", ~col.rlike(c.regex), arg=c.regex, message=m)
-        elif isinstance(c, dsl.Format):
-            if _is_string(dt):
-                spec = get_format(c.name)
-                emit(f"format.{c.name}", ~col.rlike(spec.regexp),
-                     arg=spec.message, message=m or spec.message)
-
-        elif isinstance(c, dsl.MinItems):
-            if _is_array(dt):
-                emit("minItems", F.size(col) < c.value, arg=c.value, message=m)
-        elif isinstance(c, dsl.MaxItems):
-            if _is_array(dt):
-                emit("maxItems", F.size(col) > c.value, arg=c.value, message=m)
-
-        elif isinstance(c, dsl.UniqueItems):
-            if _is_array(dt):
-                self._compile_unique_items(out, col_name, col, c, m, null_guard)
-
         elif isinstance(c, dsl.Items):
-            if _is_array(dt):
-                self._compile_items(out, col_name, col, c, null_guard)
+            self._compile_items(out, col_name, col, c, null_guard)
 
         elif isinstance(c, dsl.TupleItems):
-            if _is_array(dt):
-                self._compile_tuple_items(out, col_name, col, c, null_guard)
-
-        elif isinstance(c, dsl.MinProperties):
-            if dt is None or isinstance(dt, T.MapType):
-                emit("minProperties", F.size(F.map_keys(col)) < c.value,
-                     arg=c.value, message=m)
-        elif isinstance(c, dsl.MaxProperties):
-            if dt is None or isinstance(dt, T.MapType):
-                emit("maxProperties", F.size(F.map_keys(col)) > c.value,
-                     arg=c.value, message=m)
+            self._compile_tuple_items(out, col_name, col, c, null_guard)
 
         elif isinstance(c, dsl.KeyPattern):
-            if dt is None or isinstance(dt, T.MapType):
-                self._compile_key_pattern(out, col_name, col, c, m, null_guard)
+            self._compile_key_pattern(out, col_name, col, c, m, null_guard)
 
         elif isinstance(c, dsl.PatternProperties):
-            if dt is None or isinstance(dt, T.MapType):
-                self._compile_pattern_properties(out, col_name, col, c,
-                                                 null_guard)
-            elif isinstance(dt, T.StructType):
+            if isinstance(dt, T.StructType):
                 self._compile_pattern_properties_struct(out, col_name, col,
                                                         c, null_guard)
+            else:
+                self._compile_pattern_properties(out, col_name, col, c,
+                                                 null_guard)
 
         elif isinstance(c, dsl.StructClosed):
-            if isinstance(dt, T.StructType):
+            if dt is not None:  # no schema, no static field list to check
                 self._compile_struct_closed(out, col_name, col, c, m,
                                             null_guard)
 
@@ -510,28 +594,14 @@ class ConstraintCompiler:
             self._compile_dependency(out, col_name, c, m)
 
         elif isinstance(c, dsl.Ref):
-            target = self.suite.definitions.get(c.name)
-            if target is None:
-                raise SuiteCompileError(
-                    f"Ref('{c.name}') has no entry in suite.definitions "
-                    f"(known: {sorted(self.suite.definitions)})")
-            if c.name in self._ref_stack:
-                raise SuiteCompileError(
-                    f"cyclic Ref('{c.name}') — recursive definitions have "
-                    f"no finite columnar plan")
-            self._ref_stack.add(c.name)
-            try:
-                # inline expansion: identical plan to writing the
-                # definition's constraints directly at this position
-                valids = []
+            # inline expansion: identical plan to writing the definition's
+            # constraints directly at this position
+            with self._resolving(c) as target:
                 for sub in target:
                     one = self._compile_one(col_name, col, sub, null_guard)
                     out.fragments.extend(one.fragments)
                     if one.valid is not None:
-                        valids.append(one.valid)
-                out.valid = _and_all(valids) if valids else None
-            finally:
-                self._ref_stack.discard(c.name)
+                        out.add_valid(one.valid)
 
         else:
             ext = dsl.get_extension(type(c))
@@ -540,6 +610,26 @@ class ConstraintCompiler:
             # V4Validator.extend analog: plugin appends fragments itself
             ext(self, out, col_name, col, c, m, null_guard)
         return out
+
+    @contextmanager
+    def _resolving(self, ref: dsl.Ref):
+        """Yield a Ref's target constraints, cycle-guarded (the reference's
+        $$visited marker, compiler.js:136-141): a definition reaching itself
+        has no finite columnar plan."""
+        target = self.suite.definitions.get(ref.name)
+        if target is None:
+            raise SuiteCompileError(
+                f"Ref('{ref.name}') has no entry in suite.definitions "
+                f"(known: {sorted(self.suite.definitions)})")
+        if ref.name in self._ref_stack:
+            raise SuiteCompileError(
+                f"cyclic Ref('{ref.name}') — recursive definitions have "
+                f"no finite columnar plan")
+        self._ref_stack.add(ref.name)
+        try:
+            yield target
+        finally:
+            self._ref_stack.discard(ref.name)
 
     # -- type ---------------------------------------------------------------
 
@@ -553,33 +643,11 @@ class ConstraintCompiler:
         types = c.type if isinstance(c.type, (list, tuple)) else [c.type]
         dt = _dtype(self.schema, col_name)
 
-        def static_matches(tname) -> Optional[bool]:
-            if dt is None:
-                return None
-            if tname == "string":
-                return isinstance(dt, T.StringType)
-            if tname == "integer":
-                if isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-                    return None  # whole-valued doubles pass: runtime % 1 check
-                return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
-            if tname == "number":
-                return isinstance(dt, _NUMERIC)
-            if tname == "boolean":
-                return isinstance(dt, T.BooleanType)
-            if tname == "array":
-                return isinstance(dt, T.ArrayType)
-            if tname == "object":
-                # columnar object = struct or map (SURVEY.md §1.2 mapping)
-                return isinstance(dt, (T.StructType, T.MapType))
-            if tname == "null":
-                return None  # always runtime
-            return None
-
         def runtime_probe(tname) -> Column:
             if tname == "null":
                 return col.isNull()
             if not c.runtime:
-                sm = static_matches(tname)
+                sm = _static_type_match(tname, dt)
                 if sm is not None:
                     return F.lit(sm) | col.isNull()
             # cast-probe path (permissive string ingest; try_cast is ANSI-safe)
@@ -590,11 +658,8 @@ class ConstraintCompiler:
                 return col.isNull() | col.try_cast("double").isNotNull()
             if tname == "boolean":
                 return col.isNull() | F.lower(col.cast("string")).isin("true", "false")
-            if tname == "string":
-                sm = static_matches(tname)
-                return F.lit(sm if sm is not None else True) | col.isNull()
-            if tname in ("array", "object"):
-                sm = static_matches(tname)
+            if tname in ("string", "array", "object"):
+                sm = _static_type_match(tname, dt)
                 return F.lit(sm if sm is not None else True) | col.isNull()
             raise SuiteCompileError(f"Unknown type '{tname}'")
 
@@ -606,14 +671,9 @@ class ConstraintCompiler:
             failed = ~F.coalesce(any_ok, _lit_false()) & ~F.coalesce(probe, _lit_false())
             if tname == "null":
                 failed = ~F.coalesce(any_ok, _lit_false())
-            code = {"string": "string", "number": "number", "integer": "integer",
-                    "boolean": "boolean", "array": "array", "null": "null",
-                    "object": "object"}[tname]
-            out.fragments.append(
-                _scalar_fragment(failed, code, col_name, col, None, m or self._msg(code))
-            )
-        valid = F.coalesce(any_ok, _lit_false())
-        out.valid = valid if out.valid is None else out.valid & valid
+            out.fragments.append(_scalar_fragment(
+                failed, tname, col_name, col, None, m or self._msg(tname)))
+        out.add_valid(F.coalesce(any_ok, _lit_false()))
 
     def _row_container_null(self, out, col_name, col, code, null_guard):
         """ROW-level (unguarded) container constraint on a NULL value: fail
@@ -629,8 +689,7 @@ class ConstraintCompiler:
         msg = self._msg(code)
         out.fragments.append(
             _scalar_fragment(null_failed, code, col_name, col, None, msg))
-        ok = ~null_failed
-        out.valid = ok if out.valid is None else out.valid & ok
+        out.add_valid(~null_failed)
         return True
 
     # -- arrays ---------------------------------------------------------------
@@ -641,16 +700,15 @@ class ConstraintCompiler:
         O(n) (`array_distinct` size); the O(n²) occurrence extraction runs
         only on failing rows, guarded by `when`."""
         null_guard = self._row_container_null(out, col_name, col, "uniqueItems", null_guard)
-        has_dup = F.size(col) != F.size(F.array_distinct(col))
+        has_dup = ~KEYWORDS[dsl.UniqueItems].ok(self, c, col)
         if null_guard:
             has_dup = col.isNotNull() & has_dup
         msg = m or self._msg("uniqueItems")
+        out.add_valid(~has_dup)
         if not c.extract_occurrences:
             out.fragments.append(
                 _scalar_fragment(has_dup, "uniqueItems", col_name, col, None, msg)
             )
-            ok = ~has_dup
-            out.valid = ok if out.valid is None else out.valid & ok
             return
         # element at 0-based index i is a duplicate occurrence iff it appears
         # among the first i elements; eqNullSafe so null duplicates (which
@@ -667,67 +725,77 @@ class ConstraintCompiler:
         out.fragments.append(
             F.when(has_dup, structs).otherwise(_empty_violations())
         )
-        ok = ~has_dup
-        out.valid = ok if out.valid is None else out.valid & ok
+
+    def _items_checks(self, c: dsl.Items, et):
+        """``(field, sub, code, arg, fail)`` per element check of an Items
+        schema, shared by the row compile and the element predicate.
+        ``field`` None checks the element itself (top-level Refs inlined so
+        violations carry the target's codes); a name checks that field of an
+        array<struct> element (processor.js:31-64: the items walk recurses
+        into object sub-schemas). Checks that provably cannot fail on their
+        dtype are dropped."""
+        pairs = [(None, s, et) for s in self._expand_element_refs(c.constraints)]
+        for fname, subs in c.field_items():
+            ft = (et[fname].dataType if isinstance(et, T.StructType)
+                  and fname in et.fieldNames() else None)
+            pairs += [(fname, s, ft) for s in subs]
+        checks = []
+        for fname, sub, t in pairs:
+            pred, code, arg = self._element_predicate(sub, t)
+            if not getattr(pred, "static_true", False):
+                fail = _element_fail(fname, pred, isinstance(sub, dsl.NotNull))
+                checks.append((fname, sub, code, arg, fail))
+        return checks
 
     def _compile_items(self, out, col_name, col, c: dsl.Items, null_guard):
         """Element-schema constraints (processor.js:31-47): pass test via
-        `forall`; offender extraction via `filter`+`transform`, one violation
+        `exists`; offender extraction via `filter`+`transform`, one violation
         per offending element — exactly the reference's per-element error
-        loop, with codes `items.<subcode>`.
+        loop, with codes `items.<subcode>`, or `items.<field>.<subcode>` with
+        value = the offending FIELD value for ``fields=`` checks.
 
-        Null elements follow COLUMN null semantics uniformly: they skip
-        every value check (the optional-absent convention,
-        v4validator.js:67-79, applied per element — same as `fields=`
-        descent), and `Items([NotNull()])` flags their presence. Before
-        round 3 the range fast-paths skipped nulls (array_min/max ignore
-        them) while enum/pattern/multipleOf failed them — and the offender
-        extractor flagged elements the pass test ignored. TupleItems stays
-        null-strict: a tuple POSITION holding null fails its spec
-        (presence is positional, pinned by the conformance_array oracle)."""
+        Null elements (and null fields) follow COLUMN null semantics
+        uniformly: they skip every value check (the optional-absent
+        convention, v4validator.js:67-79, applied per element), and
+        `Items([NotNull()])` flags their presence. Before round 3 the range
+        fast-paths skipped nulls (array_min/max ignore them) while
+        enum/pattern/multipleOf failed them — and the offender extractor
+        flagged elements the pass test ignored. TupleItems stays
+        null-strict: a tuple POSITION holding null fails its spec (presence
+        is positional, pinned by the conformance_array oracle)."""
         null_guard = self._row_container_null(out, col_name, col, "items", null_guard)
         dt = _dtype(self.schema, col_name)
         et = dt.elementType if isinstance(dt, T.ArrayType) else None
-        for sub in self._expand_element_refs(c.constraints):
-            pred, code, arg = self._element_predicate(sub, et)
-            if getattr(pred, "static_true", False):
-                continue  # provably can't fail on this element type
-            if isinstance(sub, dsl.NotNull):
-                failed_any = F.exists(col, lambda x: x.isNull())
-            # range checks get specialized O(n) pass tests (array_min/max
-            # beat a lambda loop in codegen, and skip nulls natively);
-            # offender extraction below only runs on failing rows
-            elif isinstance(sub, dsl.Minimum):
+        for fname, sub, code, arg, fail in self._items_checks(c, et):
+            if fname is None and isinstance(sub, (dsl.Minimum, dsl.Maximum)):
+                # range checks get specialized O(n) pass tests (array_min/max
+                # beat a lambda loop in codegen, and skip nulls natively);
+                # offender extraction below only runs on failing rows.
                 # array_min/max are NULL on empty arrays and the null_guard
                 # coalesces NULL to failed — but empty arrays must PASS
                 # (reference semantics; round-1 ADVICE): gate on size>0 and
                 # coalesce these branches to False, never True.
+                bound = (F.array_min(col) if isinstance(sub, dsl.Minimum)
+                         else F.array_max(col))
                 failed_any = F.coalesce(
-                    (F.size(col) > 0) & (F.array_min(col) < F.lit(sub.value)),
-                    _lit_false())
-            elif isinstance(sub, dsl.Maximum):
-                failed_any = F.coalesce(
-                    (F.size(col) > 0) & (F.array_max(col) > F.lit(sub.value)),
+                    (F.size(col) > 0) & ~KEYWORDS[type(sub)].ok(self, sub, bound),
                     _lit_false())
             else:
-                failed_any = F.exists(
-                    col,
-                    lambda x: x.isNotNull() & ~F.coalesce(pred(x), _lit_false()))
+                failed_any = F.exists(col, fail)
             if null_guard:
-                failed_any = col.isNotNull() & F.coalesce(failed_any, _lit_true())
+                # both defaults are equivalent (exists over a non-null array
+                # with a never-null lambda is never null); kept per accessor
+                # so plans stay byte-identical
+                failed_any = col.isNotNull() & F.coalesce(
+                    failed_any, _lit_true() if fname is None else _lit_false())
             msg = sub.message or self._msg(code, arg)
-            full_code = f"items.{code}"
+            full_code = f"items.{code}" if fname is None else f"items.{fname}.{code}"
             if c.extract_offenders:
-                if isinstance(sub, dsl.NotNull):
-                    offenders = F.filter(col, lambda x: x.isNull())
-                else:
-                    offenders = F.filter(
-                        col,
-                        lambda x: x.isNotNull() & ~F.coalesce(pred(x),
-                                                              _lit_false()))
                 structs = F.transform(
-                    offenders, lambda x: _vio_struct(full_code, col_name, x, arg, msg)
-                )
+                    F.filter(col, fail),
+                    lambda x: _vio_struct(full_code, col_name,
+                                          x if fname is None else x[fname],
+                                          arg, msg))
                 out.fragments.append(
                     F.when(failed_any, structs).otherwise(_empty_violations())
                 )
@@ -736,66 +804,24 @@ class ConstraintCompiler:
                 out.fragments.append(
                     _scalar_fragment(failed_any, full_code, col_name, col, arg, msg)
                 )
-            ok = ~failed_any
-            out.valid = ok if out.valid is None else out.valid & ok
-        self._compile_items_fields(out, col_name, col, c, null_guard)
+            out.add_valid(~failed_any)
 
-    def _compile_items_fields(self, out, col_name, col, c: dsl.Items,
-                              null_guard):
-        """array<struct> element descent (processor.js:31-64: the items walk
-        recurses into object sub-schemas): per (field, constraint), one
-        violation per offending ELEMENT with code ``items.<field>.<subcode>``
-        and value = the offending field value. NotNull = field required in
-        every element; other checks skip null fields (column-level null
-        semantics applied per element)."""
-        # closure factories throughout — a default-arg lambda reads as the
-        # (element, index) two-arg form to F.exists/filter/transform
-        # (CLAUDE.md round-1 gotcha)
-        def _failed_factory(fname, pred, is_required):
-            if is_required:
-                def f(x):
-                    return x[fname].isNull()
-            else:
-                def f(x):
-                    return x[fname].isNotNull() & ~F.coalesce(
-                        pred(x[fname]), _lit_false())
-            return f
-
-        def _vio_factory(fname, full_code, arg, msg):
-            def f(x):
-                return _vio_struct(full_code, col_name, x[fname], arg, msg)
-            return f
-
-        dt = _dtype(self.schema, col_name)
-        est = dt.elementType if isinstance(dt, T.ArrayType) else None
-        for fname, subs in (c.field_items() if c.fields else []):
-            ftype = None
-            if isinstance(est, T.StructType) and fname in est.fieldNames():
-                ftype = est[fname].dataType
-            for sub in subs:
-                pred, code, arg = self._element_predicate(sub, ftype)
-                if getattr(pred, "static_true", False):
-                    continue
-                elem_failed = _failed_factory(
-                    fname, pred, isinstance(sub, dsl.NotNull))
-                failed_any = F.exists(col, elem_failed)
-                if null_guard:
-                    failed_any = col.isNotNull() & F.coalesce(
-                        failed_any, _lit_false())
-                msg = sub.message or self._msg(code, arg)
-                full_code = f"items.{fname}.{code}"
-                if c.extract_offenders:
-                    offenders = F.filter(col, elem_failed)
-                    structs = F.transform(
-                        offenders, _vio_factory(fname, full_code, arg, msg))
-                    out.fragments.append(
-                        F.when(failed_any, structs)
-                         .otherwise(_empty_violations()))
-                else:
-                    out.fragments.append(_scalar_fragment(
-                        failed_any, full_code, col_name, col, arg, msg))
-                ok = ~failed_any
-                out.valid = ok if out.valid is None else out.valid & ok
+    def _tuple_checks(self, c: dsl.TupleItems, et):
+        """Null-strict fail builders of a TupleItems schema, shared by the
+        row compile and the element predicate: ``(i, sub, code, arg, fail)``
+        per check at 0-based position ``i`` and ``(sub, code, arg, fail)``
+        per check of the draft-4 additionalItems SCHEMA form. No static_true
+        skip: a null at a spec'd position fails even a statically matching
+        check (the null-aware constant preds handle it)."""
+        positions = [(i, sub, *self._element_predicate(sub, et))
+                     for i, spec in enumerate(c.specs) for sub in spec]
+        extra = [(sub, *self._element_predicate(sub, et))
+                 for sub in (self._expand_element_refs(c.additional)
+                             if isinstance(c.additional, tuple) else ())]
+        return ([(i, sub, code, arg, _strict_fail(pred))
+                 for i, sub, pred, code, arg in positions],
+                [(sub, code, arg, _strict_fail(pred))
+                 for sub, pred, code, arg in extra])
 
     def _compile_tuple_items(self, out, col_name, col, c: dsl.TupleItems,
                              null_guard):
@@ -806,64 +832,48 @@ class ConstraintCompiler:
         null_guard = self._row_container_null(out, col_name, col, "items", null_guard)
         dt = _dtype(self.schema, col_name)
         et = dt.elementType if isinstance(dt, T.ArrayType) else None
-        for i, spec in enumerate(c.specs):
-            elem = F.get(col, i)  # 0-based, null-safe (ANSI element_at throws)
-            for sub in spec:
-                # NO static_true skip here: tuple positions are null-strict
-                # (a null at a spec'd position fails), so even a
-                # statically-type-matching check can still fail on null —
-                # the null-aware const pred handles it
-                pred, code, arg = self._element_predicate(sub, et)
-                failed = F.size(col) > i
-                failed = failed & ~F.coalesce(pred(elem), _lit_false())
-                if null_guard:
-                    failed = col.isNotNull() & failed
-                msg = sub.message or self._msg(code, arg)
-                out.fragments.append(_scalar_fragment(
-                    failed, f"items.{i}.{code}", col_name, elem, arg, msg))
-                ok = ~failed
-                out.valid = ok if out.valid is None else out.valid & ok
-        if c.additional is not True:
-            n_spec = len(c.specs)
-            has_extra = F.size(col) > n_spec
+        positions, extra = self._tuple_checks(c, et)
+        # 0-based, null-safe (ANSI element_at throws)
+        elems = [F.get(col, i) for i in range(len(c.specs))]
+        for i, sub, code, arg, fail in positions:
+            failed = (F.size(col) > i) & fail(elems[i])
             if null_guard:
-                has_extra = col.isNotNull() & has_extra
-            extras = F.slice(col, n_spec + 1,
-                             F.greatest(F.size(col) - n_spec, F.lit(0)))
-            if c.additional is False or c.additional == ():
-                # forbid form: one violation per extra element
-                msg = c.message or self._msg("additionalItems")
-                structs = F.transform(
-                    extras,
-                    lambda x: _vio_struct("additionalItems", col_name, x,
-                                          None, msg))
-                out.fragments.append(
-                    F.when(has_extra, structs).otherwise(_empty_violations()))
-                ok = ~has_extra
-                out.valid = ok if out.valid is None else out.valid & ok
-            else:
-                # draft-4 SCHEMA form: each extra element must satisfy the
-                # sub-schema — null-strict like spec'd positions
-                for sub in self._expand_element_refs(c.additional):
-                    pred, code, arg = self._element_predicate(sub, et)
-                    msg = sub.message or self._msg(code, arg)
-                    full_code = f"additionalItems.{code}"
-                    # null-strict, like spec'd positions: a null extra
-                    # fails the sub-schema check
-                    bad = F.filter(
-                        extras,
-                        lambda x: ~F.coalesce(pred(x), _lit_false()))
-                    structs = F.transform(
-                        bad,
-                        lambda x: _vio_struct(full_code, col_name, x,
-                                              arg, msg))
-                    any_bad = has_extra & (F.size(bad) > 0)
-                    out.fragments.append(
-                        F.when(any_bad, structs)
-                         .otherwise(_empty_violations()))
-                    ok = ~F.coalesce(any_bad, _lit_false())
-                    out.valid = (ok if out.valid is None
-                                 else out.valid & ok)
+                failed = col.isNotNull() & failed
+            msg = sub.message or self._msg(code, arg)
+            out.fragments.append(_scalar_fragment(
+                failed, f"items.{i}.{code}", col_name, elems[i], arg, msg))
+            out.add_valid(~failed)
+        if c.additional is True:
+            return
+        n_spec = len(c.specs)
+        has_extra = F.size(col) > n_spec
+        if null_guard:
+            has_extra = col.isNotNull() & has_extra
+        extras = F.slice(col, n_spec + 1,
+                         F.greatest(F.size(col) - n_spec, F.lit(0)))
+        if c.additional is False or c.additional == ():
+            # forbid form: one violation per extra element
+            msg = c.message or self._msg("additionalItems")
+            structs = F.transform(
+                extras,
+                lambda x: _vio_struct("additionalItems", col_name, x,
+                                      None, msg))
+            out.fragments.append(
+                F.when(has_extra, structs).otherwise(_empty_violations()))
+            out.add_valid(~has_extra)
+        # draft-4 SCHEMA form: each extra element must satisfy the
+        # sub-schema — null-strict like spec'd positions
+        for sub, code, arg, fail in extra:
+            msg = sub.message or self._msg(code, arg)
+            full_code = f"additionalItems.{code}"
+            bad = F.filter(extras, fail)
+            structs = F.transform(
+                bad,
+                lambda x: _vio_struct(full_code, col_name, x, arg, msg))
+            any_bad = has_extra & (F.size(bad) > 0)
+            out.fragments.append(
+                F.when(any_bad, structs).otherwise(_empty_violations()))
+            out.add_valid(~F.coalesce(any_bad, _lit_false()))
 
     def _compile_key_pattern(self, out, col_name, col, c: dsl.KeyPattern, m,
                              null_guard):
@@ -871,13 +881,9 @@ class ConstraintCompiler:
         each emit `additionalProperties` carrying the key
         (processor.js:90-111 + v4validator.js:287)."""
         null_guard = self._row_container_null(out, col_name, col, "additionalProperties", null_guard)
-        def allowed(k):
-            ok = _lit_false()
-            for p in c.patterns:
-                ok = ok | k.rlike(p)
-            return ok
-
-        bad_keys = F.filter(F.map_keys(col), lambda k: ~allowed(k))
+        bad_keys = F.filter(
+            F.map_keys(col),
+            lambda k: ~_or_all([k.rlike(p) for p in c.patterns]))
         has_bad = F.size(bad_keys) > 0
         if null_guard:
             has_bad = col.isNotNull() & F.coalesce(has_bad, _lit_false())
@@ -888,8 +894,7 @@ class ConstraintCompiler:
                                   _render_arg(list(c.patterns)), msg))
         out.fragments.append(
             F.when(has_bad, structs).otherwise(_empty_violations()))
-        ok = ~has_bad
-        out.valid = ok if out.valid is None else out.valid & ok
+        out.add_valid(~has_bad)
 
     def _compile_struct_closed(self, out, col_name, col, c: dsl.StructClosed,
                                m, null_guard):
@@ -899,7 +904,7 @@ class ConstraintCompiler:
         (v4validator.js:287 at an object ctx). A field passes if it is in
         ``allowed`` or SEARCH-matches any draft-4 patternProperties regex.
 
-        Type guard (the dispatch applies this only to StructType): draft-4
+        Type guard (:func:`applies` admits only StructType): draft-4
         ``additionalProperties`` constrains OBJECTS only, so non-struct
         columns pass — the same silent type-guard every scalar keyword
         uses (maxLength on ints, minimum on strings). ``dt is None``
@@ -921,8 +926,7 @@ class ConstraintCompiler:
             out.fragments.append(_scalar_fragment(
                 failed, "additionalProperties", f"{col_name}.{fname}",
                 F.lit(fname), None, msg))
-            ok = ~failed
-            out.valid = ok if out.valid is None else out.valid & ok
+            out.add_valid(~failed)
 
     def _expand_element_refs(self, constraints):
         """Inline top-level Ref entries in an items element schema so their
@@ -931,18 +935,8 @@ class ConstraintCompiler:
         out = []
         for s in constraints:
             if isinstance(s, dsl.Ref):
-                target = self.suite.definitions.get(s.name)
-                if target is None:
-                    raise SuiteCompileError(
-                        f"Ref('{s.name}') has no entry in suite.definitions")
-                if s.name in self._ref_stack:
-                    raise SuiteCompileError(
-                        f"cyclic Ref('{s.name}') in items element schema")
-                self._ref_stack.add(s.name)
-                try:
+                with self._resolving(s) as target:
                     out.extend(self._expand_element_refs(target))
-                finally:
-                    self._ref_stack.discard(s.name)
             else:
                 out.append(s)
         return out
@@ -954,10 +948,7 @@ class ConstraintCompiler:
         preds = [self._element_predicate(s, elem_type)[0] for s in branch]
 
         def bp(x):
-            ok = _lit_true()
-            for q in preds:
-                ok = ok & F.coalesce(q(x), _lit_false())
-            return ok
+            return _and_all([F.coalesce(q(x), _lit_false()) for q in preds])
 
         return bp
 
@@ -1012,8 +1003,7 @@ class ConstraintCompiler:
                                       vio_factory(code, arg, msg))
                 out.fragments.append(
                     F.when(has, structs).otherwise(_empty_violations()))
-                ok = ~has
-                out.valid = ok if out.valid is None else out.valid & ok
+                out.add_valid(~has)
 
         for regex, subs in c.spec_items():
             emit_value_checks(regex, subs)
@@ -1033,20 +1023,15 @@ class ConstraintCompiler:
                                                    c.spec_items()]), msg))
             out.fragments.append(
                 F.when(has_bad, structs).otherwise(_empty_violations()))
-            ok = ~has_bad
-            out.valid = ok if out.valid is None else out.valid & ok
+            out.add_valid(~has_bad)
         elif c.additional is not None:
             emit_value_checks(None, list(c.additional))
 
     def _any_key_match(self, key: Column, c: dsl.PatternProperties) -> Column:
-        ok = _lit_false()
-        for r, _ in c.spec_items():
-            ok = ok | key.rlike(r)
-        for name in c.allowed:
-            # declared `properties` names are never "additional" (draft-4,
-            # v4validator.js:287) — exempt them from the additional policy
-            ok = ok | (key == F.lit(name))
-        return ok
+        # declared `properties` names are never "additional" (draft-4,
+        # v4validator.js:287) — exempt them from the additional policy
+        return _or_all([key.rlike(r) for r, _ in c.spec_items()]
+                       + [key == F.lit(name) for name in c.allowed])
 
     def _compile_pattern_properties_struct(self, out, col_name, col,
                                            c: dsl.PatternProperties,
@@ -1079,25 +1064,23 @@ class ConstraintCompiler:
                                                               f_.dataType)
                     if getattr(pred, "static_true", False):
                         continue
-                    if isinstance(sub, dsl.NotNull):
-                        failed = fcol.isNull()
-                    else:
-                        # null field value skips value checks (the engine's
-                        # missing/null collapse — a padded-absent property
-                        # must not fire)
-                        failed = fcol.isNotNull() & ~F.coalesce(
-                            pred(fcol), _lit_false())
+                    # null field value skips value checks (the engine's
+                    # missing/null collapse — a padded-absent property
+                    # must not fire)
+                    failed = _element_fail(
+                        None, pred, isinstance(sub, dsl.NotNull))(fcol)
                     if null_guard:
                         failed = col.isNotNull() & F.coalesce(failed,
                                                               _lit_false())
                     msg = sub.message or self._msg(code, arg)
                     out.fragments.append(_scalar_fragment(
                         failed, code, label, fcol, arg, msg))
-                    ok = ~failed
-                    out.valid = ok if out.valid is None else out.valid & ok
+                    out.add_valid(~failed)
 
     def _element_predicate(self, sub: dsl.Constraint, elem_type=None):
-        """Map a scalar constraint onto array elements (lambda-variable form).
+        """``(ok, code, arg)`` of a constraint in the element context: ``ok``
+        maps an element (lambda variable, struct field, map value or tuple
+        position) to its pass predicate.
 
         Combinators nest (the reference's items walk descends into arbitrary
         sub-schemas, processor.js:31-64): the element emits ONE violation
@@ -1106,9 +1089,14 @@ class ConstraintCompiler:
         bubbled sub-error would not identify which element it came from).
 
         ``elem_type`` is the element's Spark DataType (from the array/map
-        schema): TypeIs folds statically against it, exactly like the
-        column-level static DCE (double elements keep the whole-valued
-        runtime probe)."""
+        schema): the same :func:`applies` guard as the row context drops
+        inapplicable keywords, and TypeIs folds statically against it
+        (double elements keep the whole-valued runtime probe)."""
+        kw = KEYWORDS.get(type(sub))
+        if not applies(sub, elem_type):
+            return _null_aware_true, sub.code, kw.arg(sub) if kw else None
+        if kw is not None:
+            return (lambda x: kw.ok(self, sub, x)), sub.code, kw.arg(sub)
         if isinstance(sub, dsl.TypeIs):
             return self._element_type_pred(sub, elem_type)
         if isinstance(sub, (dsl.AllOf, dsl.AnyOf, dsl.OneOf)):
@@ -1119,17 +1107,11 @@ class ConstraintCompiler:
                             for b in sub.branches]
             if isinstance(sub, dsl.AllOf):
                 def pred_all(x):
-                    ok = _lit_true()
-                    for bp in branch_preds:
-                        ok = ok & bp(x)
-                    return ok
+                    return _and_all([bp(x) for bp in branch_preds])
                 return pred_all, "allOf", None
             if isinstance(sub, dsl.AnyOf):
                 def pred_any(x):
-                    ok = _lit_false()
-                    for bp in branch_preds:
-                        ok = ok | bp(x)
-                    return ok
+                    return _or_all([bp(x) for bp in branch_preds])
                 return pred_any, "anyOf", None
 
             def pred_one(x):
@@ -1145,145 +1127,42 @@ class ConstraintCompiler:
             # nested (inside a combinator branch) ref: AND of the target —
             # top-level items refs are pre-expanded in _expand_element_refs
             # so they keep the target's own codes
-            target = self.suite.definitions.get(sub.name)
-            if target is None:
-                raise SuiteCompileError(
-                    f"Ref('{sub.name}') has no entry in suite.definitions")
-            if sub.name in self._ref_stack:
-                raise SuiteCompileError(
-                    f"cyclic Ref('{sub.name}') in items element schema")
-            self._ref_stack.add(sub.name)
-            try:
-                bp = self._element_branch_pred(target, elem_type)
-            finally:
-                self._ref_stack.discard(sub.name)
-            return bp, f"ref.{sub.name}", None
-        if isinstance(sub, dsl.Minimum):
-            return (lambda x: x >= F.lit(sub.value)), "minimum", sub.value
-        if isinstance(sub, dsl.ExclusiveMinimum):
-            return (lambda x: x > F.lit(sub.value)), "minimum.exclusive", sub.value
-        if isinstance(sub, dsl.Maximum):
-            return (lambda x: x <= F.lit(sub.value)), "maximum", sub.value
-        if isinstance(sub, dsl.ExclusiveMaximum):
-            return (lambda x: x < F.lit(sub.value)), "maximum.exclusive", sub.value
-        if isinstance(sub, dsl.MultipleOf):
-            return (lambda x: (x / F.lit(float(sub.value))) % 1.0 == 0.0), "multipleOf", sub.value
-        if isinstance(sub, dsl.Enum):
-            return (lambda x: x.isin(list(sub.values))), "enum", list(sub.values)
-        if isinstance(sub, dsl.NotNull):
-            return (lambda x: x.isNotNull()), "required", None
-        if isinstance(sub, dsl.Pattern):
-            return (lambda x: x.rlike(sub.regex)), "pattern", sub.regex
-        if isinstance(sub, dsl.MinLength):
-            return (lambda x: self._str_len(x) >= sub.value), "minLength", sub.value
-        if isinstance(sub, dsl.MaxLength):
-            return (lambda x: self._str_len(x) <= sub.value), "maxLength", sub.value
-        if isinstance(sub, dsl.Format):
-            spec = get_format(sub.name)
-            return (lambda x: x.rlike(spec.regexp)), f"format.{sub.name}", spec.message
+            with self._resolving(sub) as target:
+                return (self._element_branch_pred(target, elem_type),
+                        f"ref.{sub.name}", None)
         # ---- container constraints ON an element (arbitrary-depth descent,
         # processor.js:31-64 recursion): array<array<…>> and
-        # array<struct<…, array<…>>> element schemas. The element emits ONE
-        # violation with the container's code — per-inner-element error
-        # extraction is a top-level feature (an inner offender would not
-        # identify its outer element), same convention as combinators.
-        if isinstance(sub, dsl.MinItems):
-            return (lambda x: F.size(x) >= sub.value), "minItems", sub.value
-        if isinstance(sub, dsl.MaxItems):
-            return (lambda x: F.size(x) <= sub.value), "maxItems", sub.value
-        if isinstance(sub, dsl.UniqueItems):
-            return (lambda x: F.size(x) == F.size(F.array_distinct(x))), \
-                "uniqueItems", None
+        # array<struct<…, array<…>>> element schemas pass iff no row-context
+        # fail builder fires. The element emits ONE violation with the
+        # container's code — per-inner-element error extraction is a
+        # top-level feature (an inner offender would not identify its outer
+        # element), same convention as combinators.
+        inner = (elem_type.elementType
+                 if isinstance(elem_type, T.ArrayType) else None)
         if isinstance(sub, dsl.Items):
-            return self._nested_items_pred(sub, elem_type), "items", None
+            fails = [f for *_, f in self._items_checks(sub, inner)]
+
+            def items_ok(x):
+                return F.forall(x, lambda y: _and_all([~f(y) for f in fails]))
+            return items_ok, "items", None
         if isinstance(sub, dsl.TupleItems):
-            return self._nested_tuple_pred(sub, elem_type), "items", None
+            positions, extra = self._tuple_checks(sub, inner)
+            n_spec = len(sub.specs)
+
+            def tuple_ok(x):
+                ok = [~((F.size(x) > i) & f(F.get(x, i)))
+                      for i, *_, f in positions]
+                if sub.additional is False or sub.additional == ():
+                    ok.append(~(F.size(x) > n_spec))
+                for *_, f in extra:
+                    extras = F.slice(x, n_spec + 1,
+                                     F.greatest(F.size(x) - n_spec, F.lit(0)))
+                    ok.append(F.forall(extras, lambda e: ~f(e)))
+                return _and_all(ok)
+            return tuple_ok, "items", None
         raise SuiteCompileError(
             f"{type(sub).__name__} not supported as an items() element constraint"
         )
-
-    def _nested_items_pred(self, sub: dsl.Items, elem_type):
-        """Predicate form of an Items schema applied to an ARRAY-typed
-        element/field: forall inner elements pass. Inner null elements
-        follow the engine-wide convention (skip checks, NotNull flags);
-        struct fields= descend recursively at any depth."""
-        inner_et = (elem_type.elementType
-                    if isinstance(elem_type, T.ArrayType) else None)
-        scalar = []   # (pred, is_required)
-        for s in self._expand_element_refs(sub.constraints):
-            pred, _, _ = self._element_predicate(s, inner_et)
-            if getattr(pred, "static_true", False):
-                continue
-            scalar.append((pred, isinstance(s, dsl.NotNull)))
-        fields = []   # (fname, pred, is_required)
-        if sub.fields:
-            for fname, fsubs in sub.field_items():
-                ftype = None
-                if (isinstance(inner_et, T.StructType)
-                        and fname in inner_et.fieldNames()):
-                    ftype = inner_et[fname].dataType
-                for fs in fsubs:
-                    fp, _, _ = self._element_predicate(fs, ftype)
-                    if getattr(fp, "static_true", False):
-                        continue
-                    fields.append((fname, fp, isinstance(fs, dsl.NotNull)))
-
-        def elem_ok_factory():
-            def elem_ok(y):
-                ok = _lit_true()
-                for q, req in scalar:
-                    ok = ok & (y.isNotNull() if req else
-                               (y.isNull()
-                                | F.coalesce(q(y), _lit_false())))
-                for fname, q, req in fields:
-                    fv = y[fname]
-                    ok = ok & (fv.isNotNull() if req else
-                               (fv.isNull()
-                                | F.coalesce(q(fv), _lit_false())))
-                return ok
-            return elem_ok
-
-        elem_ok = elem_ok_factory()
-
-        def pred(x):
-            return F.forall(x, elem_ok)
-        return pred
-
-    def _nested_tuple_pred(self, sub: dsl.TupleItems, elem_type):
-        """Predicate form of a positional TupleItems schema on an
-        ARRAY-typed element (null-strict per position, like the top-level
-        compile; additional=False bounds the size)."""
-        inner_et = (elem_type.elementType
-                    if isinstance(elem_type, T.ArrayType) else None)
-        spec_preds = []
-        for i, spec in enumerate(sub.specs):
-            for s in spec:
-                # no static_true skip: tuple positions stay null-strict
-                q, _, _ = self._element_predicate(s, inner_et)
-                spec_preds.append((i, q))
-        addl_preds = []
-        if isinstance(sub.additional, tuple):
-            for s in self._expand_element_refs(sub.additional):
-                q, _, _ = self._element_predicate(s, inner_et)
-                addl_preds.append(q)
-
-        n_spec = len(sub.specs)
-
-        def pred(x):
-            ok = _lit_true()
-            for i, q in spec_preds:
-                ok = ok & ((F.size(x) <= i)
-                           | F.coalesce(q(F.get(x, i)), _lit_false()))
-            if sub.additional is False or sub.additional == ():
-                ok = ok & (F.size(x) <= n_spec)
-            for q in addl_preds:
-                extras = F.slice(x, n_spec + 1,
-                                 F.greatest(F.size(x) - n_spec, F.lit(0)))
-                ok = ok & F.forall(
-                    extras,
-                    lambda e: F.coalesce(q(e), _lit_false()))
-            return ok
-        return pred
 
     def _element_type_pred(self, sub: dsl.TypeIs, elem_type):
         """``items: {type: ...}`` — static against the element's Spark type
@@ -1302,21 +1181,11 @@ class ConstraintCompiler:
                 raise SuiteCompileError(
                     f"TypeIs('{tname}') as an element constraint needs a "
                     f"typed schema (compile with df.schema)")
-            if tname == "integer" and isinstance(
-                    elem_type, (T.FloatType, T.DoubleType, T.DecimalType)):
-                return lambda x: (x % F.lit(1.0)) == 0.0
-            static = {
-                "string": isinstance(elem_type, T.StringType),
-                "integer": isinstance(
-                    elem_type, (T.ByteType, T.ShortType, T.IntegerType,
-                                T.LongType)),
-                "number": isinstance(elem_type, _NUMERIC),
-                "boolean": isinstance(elem_type, T.BooleanType),
-                "array": isinstance(elem_type, T.ArrayType),
-                "object": isinstance(elem_type, (T.StructType, T.MapType)),
-            }.get(tname)
-            if static is None:
+            if tname not in DRAFT_TYPES:
                 raise SuiteCompileError(f"Unknown type '{tname}'")
+            static = _static_type_match(tname, elem_type)
+            if static is None:  # integer on a fractional dtype
+                return lambda x: (x % F.lit(1.0)) == 0.0
 
             # null-AWARE constant: a null element is NOT of type `tname`
             # (draft-4: null only matches "null"). Where the caller's null
@@ -1332,10 +1201,7 @@ class ConstraintCompiler:
         members = [member_factory(t) for t in types]
 
         def pred(x):
-            ok = _lit_false()
-            for mp in members:
-                ok = ok | mp(x)
-            return ok
+            return _or_all([mp(x) for mp in members])
 
         # static DCE: if any member folds to a constant TRUE, the check can
         # never fail — mark it so the items compilers emit NOTHING (a
@@ -1469,17 +1335,11 @@ class ConstraintCompiler:
 
 
 def _and_all(cols: list[Column]) -> Column:
-    out = _lit_true()
-    for c in cols:
-        out = out & c
-    return out
+    return reduce(operator.and_, cols) if cols else _lit_true()
 
 
 def _or_all(cols: list[Column]) -> Column:
-    out = _lit_false()
-    for c in cols:
-        out = out | c
-    return out
+    return reduce(operator.or_, cols) if cols else _lit_false()
 
 
 def _concat_all(frags: list[Column]) -> Column:

@@ -112,59 +112,6 @@ def corrupt_enum(df: DataFrame, every: int = 20) -> DataFrame:
     return df.withColumn("source", F.when(m, F.lit("sp4m")).otherwise(F.col("source")))
 
 
-def corrupt_size_mismatch(df: DataFrame, every: int = 20) -> DataFrame:
-    """V-size-mismatch → `custom.size_eq_n_tok` (conform, v4validator.js:305-322)."""
-    m = _mark(every, 106)
-    return df.withColumn(
-        "n_tok", F.when(m, F.size("tokens") + 7).otherwise(F.col("n_tok"))
-    )
-
-
-def corrupt_items(df: DataFrame, every: int = 20) -> DataFrame:
-    """V-minitems/V-maxitems → `minItems`/`maxItems` (v4validator.js:219-231)."""
-    lo = _mark(every, 107)
-    hi = _mark(every, 108)
-    big = F.sequence(F.lit(0), F.lit(2999)).cast("array<int>")
-    return df.withColumn(
-        "tokens",
-        F.when(lo, F.lit([]).cast("array<int>")).when(hi, big).otherwise(F.col("tokens")),
-    )
-
-
-def corrupt_elem_range(df: DataFrame, every: int = 20) -> DataFrame:
-    """V-elem-range → `items.minimum` / `items.maximum` (processor.js:31-47)."""
-    lo = _mark(every, 109)
-    hi = _mark(every, 110)
-    return df.withColumn(
-        "tokens",
-        F.when(lo, F.concat(F.col("tokens"), F.array(F.lit(-5).cast("int"))))
-        .when(hi, F.concat(F.col("tokens"), F.array(F.lit(99_999).cast("int"))))
-        .otherwise(F.col("tokens")),
-    ).withColumn(
-        "n_tok",
-        F.when(lo | hi, F.col("n_tok") + 1).otherwise(F.col("n_tok")),
-    )
-
-
-def corrupt_intra_dup(df: DataFrame, every: int = 20) -> DataFrame:
-    """V-intra-dup → `uniqueItems` (v4validator.js:233-246): force tokens[1]
-    to repeat tokens[0].
-
-    CONTRACT CAVEAT (round-4 review): clean generated token arrays ALSO
-    collide naturally at high rates (birthday bound over VOCAB=50257:
-    ~9% at n_tok=100, near-certain at n_tok~1800), so the marked-row
-    predicate identifies a SUBSET of uniqueItems violations, never the
-    full expected set. Tests over uniqueItems-enabled suites must assert
-    membership ("every marked row violates"), not equality of counts."""
-    m = _mark(every, 111) & (F.size("tokens") >= 2)
-    dup = F.concat(
-        F.slice("tokens", 1, 1),
-        F.slice("tokens", 1, 1),
-        F.slice(F.col("tokens"), 3, F.greatest(F.size("tokens") - 2, F.lit(0))),
-    )
-    return df.withColumn("tokens", F.when(m, dup).otherwise(F.col("tokens")))
-
-
 def corrupt_dup_docid(df: DataFrame, every: int = 50) -> DataFrame:
     """V-dup-docid → `unique.doc_id`: append exact copies of marked rows
     (they land in other partitions on repartition), so each duplicated

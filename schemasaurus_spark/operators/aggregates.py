@@ -384,7 +384,6 @@ def uniqueness_check(
     df: DataFrame,
     key: str | Sequence[str] = "doc_id",
     salt_buckets: int = 64,
-    hll_rsd: float = 0.01,
 ) -> UniquenessResult:
     """Cross-row uniqueness — exact salted two-phase groupBy, ALWAYS run
     (north_star). Emits one violation per duplicate occurrence beyond the
@@ -399,7 +398,6 @@ def uniqueness_check(
     computed from the same salted aggregation tree: one scan, one
     map-side-combined shuffle of (key, salt) partials, and the violations
     collection reuses the completed shuffle stages (same plan instance).
-    `hll_rsd` is kept for API compatibility; it is no longer load-bearing.
 
     ``key`` may be a single column or a list (composite key): phase 1 then
     groups on all key columns + salt, and violation rows carry the

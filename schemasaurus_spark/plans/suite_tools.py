@@ -697,23 +697,6 @@ def _lint_scope(path: str, constraints, findings: list, severity: str,
                         f"column {target!r}", "warning")
 
 
-def _draft_type_of_dtype(dt) -> Optional[str]:
-    from pyspark.sql import types as T
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BooleanType):
-        return "boolean"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "integer"
-    if isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-        return "number"
-    if isinstance(dt, T.ArrayType):
-        return "array"
-    if isinstance(dt, (T.StructType, T.MapType)):
-        return "object"
-    return None
-
-
 def lint_suite(suite: dsl.Suite, schema=None) -> list:
     """Static pre-flight lint: returns :class:`LintFinding` rows, empty for
     a healthy suite. ``severity="error"`` findings mean every non-null
@@ -722,9 +705,9 @@ def lint_suite(suite: dsl.Suite, schema=None) -> list:
     spark-submit, not after).
 
     ``schema`` (optional ``StructType`` or DataFrame) adds dtype
-    applicability checks: a statically-impossible TypeIs, string
-    constraints on numeric columns, array constraints on scalars, and
-    suite columns missing from the table.
+    applicability checks: a statically-impossible TypeIs, a keyword the
+    compiler drops because it does not apply to the column's dtype
+    (``compiler.applies``), and suite columns missing from the table.
     """
     findings: list[LintFinding] = []
     known = set(suite.columns)
@@ -736,7 +719,7 @@ def lint_suite(suite: dsl.Suite, schema=None) -> list:
     if schema is not None:
         if hasattr(schema, "schema"):  # DataFrame passed
             schema = schema.schema
-        from schemasaurus_spark.compiler import _dtype
+        from schemasaurus_spark.compiler import DRAFT_TYPES, _dtype, applies
         for path, constraints in suite.columns.items():
             dt = _dtype(schema, path)
             if dt is None:
@@ -745,7 +728,8 @@ def lint_suite(suite: dsl.Suite, schema=None) -> list:
                     f"suite constrains {path!r} but the table schema has "
                     f"no such column/path"))
                 continue
-            draft = _draft_type_of_dtype(dt)
+            draft = next((t for t, kinds in DRAFT_TYPES.items()
+                          if isinstance(dt, kinds)), None)
             scope = _flatten_allof(constraints)
             types = _scope_types(scope)
             if types is not None and draft is not None:
@@ -759,27 +743,12 @@ def lint_suite(suite: dsl.Suite, schema=None) -> list:
                         f"declared type(s) {sorted(types)} can never match "
                         f"physical dtype {dt.simpleString()}"))
             for c in scope:
-                if isinstance(c, (dsl.MinLength, dsl.MaxLength,
-                                  dsl.Pattern, dsl.Format)) \
-                        and draft not in ("string", None):
+                if not applies(c, dt):
                     findings.append(LintFinding(
                         "warning", path, "dtype-mismatch",
-                        f"{c.code} on {dt.simpleString()} column: value is "
-                        f"cast to string first — usually a suite bug"))
-                if isinstance(c, (dsl.MinItems, dsl.MaxItems,
-                                  dsl.UniqueItems, dsl.Items,
-                                  dsl.TupleItems)) and draft != "array":
-                    findings.append(LintFinding(
-                        "warning", path, "dtype-mismatch",
-                        f"{c.code} on non-array column "
-                        f"({dt.simpleString()})"))
-                if isinstance(c, (dsl.MinProperties, dsl.MaxProperties,
-                                  dsl.StructClosed, dsl.PatternProperties,
-                                  dsl.KeyPattern)) and draft != "object":
-                    findings.append(LintFinding(
-                        "warning", path, "dtype-mismatch",
-                        f"{c.code} on non-object column "
-                        f"({dt.simpleString()})"))
+                        f"{c.code} does not apply to a {dt.simpleString()} "
+                        f"column: the check compiles to nothing — usually "
+                        f"a suite bug"))
     return findings
 
 

@@ -151,6 +151,7 @@ SCHEMA = T.StructType([
     T.StructField("tokens", T.ArrayType(T.IntegerType())),
     T.StructField("n_tok", T.IntegerType()),
     T.StructField("source", T.StringType()),
+    T.StructField("meta", T.StructType([T.StructField("lang", T.StringType())])),
 ])
 
 
@@ -169,10 +170,13 @@ def test_schema_missing_column_and_type_vs_dtype():
 def test_schema_dtype_mismatch_warnings():
     s = dsl.Suite(columns={
         "n_tok": [dsl.MinLength(3)],        # string check on int column
-        "source": [dsl.MinItems(1)],        # array check on string column
+        "source": [dsl.MinItems(1),         # array check on string column
+                   dsl.Minimum(0)],         # numeric check on string column
+        "meta": [dsl.MinProperties(1)],     # map check on struct column
     })
     out = lint_suite(s, SCHEMA)
-    assert codes(out, "warning").count("dtype-mismatch") == 2
+    assert codes(out, "warning").count("dtype-mismatch") == 4
+    assert all("compiles to nothing" in f.message for f in out)
     # string columns never flag type-vs-dtype (permissive ingest cast-probe)
     probed = dsl.Suite(columns={"source": [dsl.TypeIs("integer")]})
     assert lint_suite(probed, SCHEMA) == []

@@ -45,6 +45,39 @@ def _normalize(rows, cols):
     return sorted(out)
 
 
+# A scan DataFilter is evaluated interpreted, row by row (BENCH.md round 2
+# 'filter-pushdown pathology'): none may carry a higher-order function, a
+# hash or a regex rewrite.
+SLOW_DATA_FILTERS = ("lambdafunction", "md5(", "regexp_replace(")
+
+
+def _scan_data_filters(plan):
+    """DataFilters of every file scan in a physical plan, through AQE query
+    stages and cached relations. Read from the scan nodes because the plan
+    string abbreviates each to 100 characters."""
+    name = plan.getClass().getSimpleName()
+    if name == "FileSourceScanExec":
+        yield plan.dataFilters().mkString(", ")
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif name == "InMemoryTableScanExec":
+        kids = [plan.relation().cachedPlan()]
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for k in kids:
+        yield from _scan_data_filters(k)
+
+
+def _assert_no_slow_data_filter(name, sdf):
+    plan = sdf._jdf.queryExecution().executedPlan()
+    slow = [f for f in _scan_data_filters(plan)
+            if any(t in f for t in SLOW_DATA_FILTERS)]
+    assert not slow, f"{name}: interpreted scan DataFilters {slow}"
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     if name not in ORACLES:
@@ -52,10 +85,12 @@ def test_query_matches_oracle(spark, duck, name):
         # a stable schema; the driver records the weaker check
         sdf = QUERIES[name](spark, SF_DIR)
         assert sdf.columns and sdf.count() >= 0
+        _assert_no_slow_data_filter(name, sdf)
         return
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
+    _assert_no_slow_data_filter(name, sdf)
 
     cur = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in cur.description]

@@ -62,9 +62,10 @@ def test_unique_items_occurrence_count(spark, arr):
 
 
 def _ev_element(c, x):
-    """Pure-Python truth of an element predicate — the oracle for
-    compiler._element_predicate. Called only on non-null elements (null
-    elements skip value checks, column null semantics per element)."""
+    """Pure-Python truth of an element check — the oracle for the element
+    context of the compiler's keyword table. Called only on non-null
+    elements (null elements skip value checks, column null semantics per
+    element)."""
     if isinstance(c, dsl.AllOf):
         return all(all(_ev_element(s, x) for s in b) for b in c.branches)
     if isinstance(c, dsl.AnyOf):
@@ -82,6 +83,71 @@ def _ev_element(c, x):
     if isinstance(c, dsl.Enum):
         return x in list(c.values)
     raise AssertionError(type(c))
+
+
+# Every keyword of compiler.KEYWORDS on a dtype it applies to and on one it
+# does not (NotNull and Enum apply to every dtype: two applicable ones), as
+# (keyword, ddl, [passing value, failing value], applies) — on a dtype the
+# keyword does not apply to, both values pass.
+_KEYWORD_DTYPES = [
+    (kw, ddl, values, applies)
+    for kw, applicable, other in [
+        (dsl.NotNull(), ("int", [1, None]), ("string", ["a", None])),
+        (dsl.Enum([1, 2]), ("int", [1, 3]), ("double", [2.0, 2.5])),
+        (dsl.Minimum(0), ("int", [0, -1]), ("string", ["a", "-1"])),
+        (dsl.ExclusiveMinimum(0), ("int", [1, 0]), ("string", ["a", "0"])),
+        (dsl.Maximum(9), ("int", [9, 10]), ("string", ["a", "10"])),
+        (dsl.ExclusiveMaximum(9), ("int", [8, 9]), ("string", ["a", "9"])),
+        (dsl.MultipleOf(2), ("int", [4, 3]), ("string", ["a", "3"])),
+        (dsl.MinLength(2), ("string", ["ab", "a"]), ("int", [1, 5])),
+        (dsl.MaxLength(2), ("string", ["ab", "abc"]), ("int", [1, 12345])),
+        (dsl.Pattern("^x"), ("string", ["xa", "a"]), ("int", [1, 2])),
+        (dsl.Format("ipv4"), ("string", ["1.2.3.4", "a"]), ("int", [1, 2])),
+        (dsl.MinItems(2), ("array<int>", [[1, 2], [1]]), ("int", [1, 2])),
+        (dsl.MaxItems(1), ("array<int>", [[1], [1, 2]]), ("string", ["a", "ab"])),
+        (dsl.UniqueItems(), ("array<int>", [[1, 2], [1, 1]]), ("int", [1, 1])),
+        (dsl.MinProperties(1), ("map<string,int>", [{"a": 1}, {}]),
+         ("int", [1, 2])),
+        (dsl.MaxProperties(1), ("map<string,int>", [{"a": 1}, {"a": 1, "b": 2}]),
+         ("array<int>", [[1], [1, 2]])),
+    ]
+    for (ddl, values), applies in (
+        (applicable, True), (other, isinstance(kw, (dsl.NotNull, dsl.Enum))))
+]
+
+
+@pytest.fixture(scope="module")
+def keyword_verdicts(spark):
+    """All cases in ONE frame and ONE suite: case n puts its value in
+    scalar column s<n>, in the one-element array a<n> under Items([kw]) and
+    in the array<struct<f>> column f<n> under Items(fields={"f": [kw]}).
+    Returns {(n, row): (scalar failed, items failed, fields failed)}."""
+    ddl, columns, rows = ["i int"], {}, [[0], [1]]
+    for n, (kw, t, values, _) in enumerate(_KEYWORD_DTYPES):
+        ddl += [f"s{n} {t}", f"a{n} array<{t}>", f"f{n} array<struct<f: {t}>>"]
+        columns.update({f"s{n}": [kw], f"a{n}": [dsl.Items([kw])],
+                        f"f{n}": [dsl.Items(fields={"f": [kw]})]})
+        for row, v in zip(rows, values):
+            row += [v, [v], [(v,)]]
+    df = spark.createDataFrame([tuple(r) for r in rows], ", ".join(ddl))
+    bad = {(r["i"], r["column"])
+           for r in validate(df, dsl.Suite(id_column="i", columns=columns))
+           .violations().collect()}
+    return {(n, i): tuple((i, f"{c}{n}") in bad for c in "saf")
+            for n in range(len(_KEYWORD_DTYPES)) for i in (0, 1)}
+
+
+@pytest.mark.parametrize(
+    "n", range(len(_KEYWORD_DTYPES)),
+    ids=[f"{type(kw).__name__}-{t}" for kw, t, _, _ in _KEYWORD_DTYPES])
+def test_element_keyword_verdict_matches_scalar(keyword_verdicts, n):
+    """Row and element contexts share one keyword table and one dtype
+    guard: a keyword gives the same verdict on a scalar column, on the
+    same value as an Items element and as an Items(fields=) struct field —
+    including compiling to nothing on a dtype it does not apply to."""
+    applies = _KEYWORD_DTYPES[n][3]
+    assert keyword_verdicts[n, 0] == (False, False, False)
+    assert keyword_verdicts[n, 1] == (applies,) * 3
 
 
 @settings(max_examples=15, deadline=None)
