@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Cluster entry point: checkpointed, resumable validation of a snapshot
-table.
+table. Run ``python package.py`` first to build the archive:
 
     spark-submit --py-files dist/schemasaurus_spark.zip \
         jobs/validate_job.py --table /path/to/table --state /path/to/state \

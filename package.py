@@ -11,12 +11,12 @@ ROOT = Path(__file__).resolve().parent
 OUT = ROOT / "dist" / "schemasaurus_spark.zip"
 
 
-def build() -> Path:
-    OUT.parent.mkdir(exist_ok=True)
-    with zipfile.ZipFile(OUT, "w", zipfile.ZIP_DEFLATED) as z:
+def build(out: Path = OUT) -> Path:
+    out.parent.mkdir(parents=True, exist_ok=True)
+    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sorted((ROOT / "schemasaurus_spark").rglob("*.py")):
             z.write(p, p.relative_to(ROOT))
-    return OUT
+    return out
 
 
 if __name__ == "__main__":

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from schemasaurus_spark.session import local_frame
+
 SEED = 42
 VOCAB = 50257
 SOURCES = ["web", "books", "code", "wiki", "forums"]
@@ -128,6 +130,5 @@ def corrupt_ref_source(df: DataFrame, every: int = 25) -> DataFrame:
 
 def sources_dim(spark: SparkSession) -> DataFrame:
     """FIXTURES T2 — the referential dimension (broadcast side)."""
-    return spark.createDataFrame(
-        [(s, True) for s in SOURCES], "source string, license_ok boolean"
-    )
+    return local_frame(spark, [(s, True) for s in SOURCES],
+                       "source string, license_ok boolean")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from schemasaurus_spark.compiler import VIOLATIONS_COL
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.operators import aggregates as agg
+from schemasaurus_spark.session import local_frame
 from schemasaurus_spark.validate import ValidationResult, validate
 
 VIOLATION_COLS = ["doc_id", "constraint_id", "column", "value", "arg", "message"]
@@ -108,8 +109,8 @@ class FullValidationResult:
         base = self.row.verdicts()
         spark = base.sparkSession
         n_agg = self._agg_count()
-        extra = spark.createDataFrame(
-            [(-1, 0, n_agg, n_agg == 0)],
+        extra = local_frame(
+            spark, [(-1, 0, n_agg, n_agg == 0)],
             "partition_id int, n_rows long, n_violations long, pass boolean",
         )
         return base.unionByName(extra)
@@ -125,9 +126,9 @@ class FullValidationResult:
 
 
 def _empty_violations_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [], "doc_id string, constraint_id string, column string, "
-            "value string, arg string, message string")
+    return local_frame(
+        spark, [], "doc_id string, constraint_id string, column string, "
+                   "value string, arg string, message string")
 
 
 def run_full_validation(df: DataFrame, suite: Suite,

@@ -54,6 +54,7 @@ from schemasaurus_spark.schema_json import (
     merge_object_allof, pattern_properties_of, struct_closed_from,
     suite_from_json_schema,
 )
+from schemasaurus_spark.session import local_frame
 from schemasaurus_spark.validate import validate
 
 # mirror of /root/reference/test/ignored.json (substring match on either
@@ -460,7 +461,7 @@ def _execute_batch(spark: SparkSession,
         columns.update(cols)
         rowcs.extend(rcs)
         defs.update(plan.defs)
-    df = spark.createDataFrame([tuple(row)], ", ".join(fields))
+    df = local_frame(spark, [tuple(row)], ", ".join(fields))
     suite = dsl.Suite(id_column="cid", columns=columns, row=rowcs,
                       definitions=defs)
     got: dict[int, bool] = {i: True for i in range(len(tests))}

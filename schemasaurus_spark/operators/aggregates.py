@@ -39,6 +39,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from schemasaurus_spark.messages import render_message
+from schemasaurus_spark.session import local_frame
 
 
 # ----------------------------------------------------------------- stats
@@ -304,8 +305,8 @@ def null_rate_violations_from_stats(spark, fused: FusedAggStats,
                     (None if gk is None else str(gk), c, float(rate),
                      str(max_rate),
                      render_message("stats.null_rate", max_rate)))
-    tiny = spark.createDataFrame(
-        offender_rows,
+    tiny = local_frame(
+        spark, offender_rows,
         "group_key string, column string, null_rate double, "
         "arg string, message string")
     return tiny.select(
@@ -358,9 +359,9 @@ def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
             if mx is not None and "max_value" in spec and mx > spec["max_value"]:
                 _emit(gk, "stats.value_bound", c, mx,
                       "max_value", spec["max_value"])
-    tiny = spark.createDataFrame(
-        rows, "group_key string, constraint_id string, column string, "
-              "observed double, arg string, message string")
+    tiny = local_frame(
+        spark, rows, "group_key string, constraint_id string, column string, "
+                     "observed double, arg string, message string")
     return tiny.select(
         F.col("group_key").alias("doc_id"),
         "constraint_id", "column",
@@ -442,8 +443,8 @@ def uniqueness_check(
     clean = int(screen["max_occ"]) <= 1
 
     if clean:
-        empty = spark.createDataFrame(
-            [],
+        empty = local_frame(
+            spark, [],
             "doc_id string, constraint_id string, column string, value string, arg string, message string",
         )
         return UniquenessResult(total, distinct, True, empty)
@@ -593,7 +594,7 @@ def referential_check_scaled(
     shape = (f"doc_id string, constraint_id string, column string, "
              f"value string, arg string, message string")
     if n_missing_keys == 0:
-        return df.sparkSession.createDataFrame([], shape)
+        return local_frame(df.sparkSession, [], shape)
     rows = facts.join(F.broadcast(missing.select(column)),
                       on=column, how="left_semi")
     return rows.select(
@@ -785,8 +786,8 @@ def drift_violations(spark, results: list[DriftResult], psi_threshold: float,
             rows.append((r.group_key, f"drift.ks.{r.metric}", r.metric,
                          f"{r.ks:.6f}", str(ks_threshold),
                          render_message("drift.ks", ks_threshold)))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "doc_id string, constraint_id string, column string, value string, arg string, message string",
     )
 

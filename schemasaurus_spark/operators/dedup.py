@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from schemasaurus_spark.operators import spread_scan
 from schemasaurus_spark.operators import text as text_fns
 from schemasaurus_spark.operators.text import words
+from schemasaurus_spark.session import local_frame
 
 
 def shingles(text: Column, k: int = 5) -> Column:
@@ -497,7 +498,7 @@ class IncrementalDedup:
         try:
             return self.store.read(spark)
         except FileNotFoundError:
-            return spark.createDataFrame([], "fp string, doc_id string")
+            return local_frame(spark, [], "fp string, doc_id string")
 
     _NORMALIZERS = {
         "raw": lambda c: c,

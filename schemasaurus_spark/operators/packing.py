@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from schemasaurus_spark.session import local_frame
+
 __all__ = ["pack_concat", "pack_greedy"]
 
 
@@ -97,7 +99,7 @@ def pack_concat(df: DataFrame, max_tokens: int,
         base += int(totals[b])
     if not offsets:
         offsets = [(0, 0)]  # empty input: keep the join schema stable
-    bases = spark.createDataFrame(offsets, "__bucket int, __base long")
+    bases = local_frame(spark, offsets, "__bucket int, __base long")
 
     # phase 2: within-bucket running sum -> global [start, end) per doc
     w = (Window.partitionBy("__bucket")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from schemasaurus_spark.operators import spread_scan
+from schemasaurus_spark.session import local_frame
 
 WORD_SPLIT = r"\s+"
 
@@ -185,8 +186,8 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
         # empty corpus (e.g. an empty incremental delta): sum() aggregates
         # to NULL and every downstream float(total) would TypeError —
         # return the well-typed empty result instead
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, logprob double")
+        return local_frame(
+            df.sparkSession, [], f"{id_col} long, logprob double")
     if max_vocab is not None:
         # top-K by (n desc, word asc) runs as TakeOrderedAndProject and is
         # COLLECTED (K rows, driver-bounded by the user's own valve): the
@@ -198,8 +199,9 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
                     .limit(max_vocab).collect())
         tail_n = max(int(total - sum(r["n"] for r in top_rows)), 1)
         spark = df.sparkSession
-        vocab = spark.createDataFrame(
-            [(r["word"], r["n"]) for r in top_rows], "word string, n long")
+        vocab = local_frame(
+            spark, [(r["word"], r["n"]) for r in top_rows],
+            "word string, n long")
         # one LEFT join: in-vocab words score n/total, everything else
         # folds to the <unk> tail mass — mass-preserving
         lp = F.log(F.coalesce(F.col("n"), F.lit(int(tail_n)))

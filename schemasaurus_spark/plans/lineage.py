@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from schemasaurus_spark.compiler import VIOLATIONS_COL, compile_suite
 from schemasaurus_spark.dsl import Suite
+from schemasaurus_spark.session import local_frame
 from schemasaurus_spark.sources.storage import SnapshotStore, file_record_count
 
 LINEAGE_SCHEMA = (
@@ -141,7 +142,7 @@ class ValidationCheckpoint:
         and duplicate committed violations via the semi-join."""
         p = self._table("lineage")
         if not p.exists():
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(spark, [], LINEAGE_SCHEMA)
         from pyspark.sql.window import Window
 
         w = Window.partitionBy("suite_hash", "file").orderBy(
@@ -158,7 +159,7 @@ class ValidationCheckpoint:
         the semi-join broadcasts."""
         p = self._table("violations")
         if not p.exists() or not any(p.rglob("*.parquet")):
-            return spark.createDataFrame([], VIOLATIONS_EMPTY_SCHEMA)
+            return local_frame(spark, [], VIOLATIONS_EMPTY_SCHEMA)
         raw = spark.read.parquet(str(p))
         committed = self.lineage(spark).select(
             "snapshot_id", "suite_hash", "file", "attempt_id")
@@ -170,10 +171,11 @@ class ValidationCheckpoint:
         """Committed per-constraint metric rows (attempt present in lineage)."""
         p = self._table("metrics")
         if not p.exists():
-            return spark.createDataFrame(
-                [], "constraint_id string, column string, n_violations long, "
-                    "snapshot_id string, suite_hash string, wall_ts double, "
-                    "attempt_id string")
+            return local_frame(
+                spark, [],
+                "constraint_id string, column string, n_violations long, "
+                "snapshot_id string, suite_hash string, wall_ts double, "
+                "attempt_id string")
         raw = spark.read.parquet(str(p))
         committed = self.lineage(spark).select("attempt_id").distinct()
         return raw.join(F.broadcast(committed), ["attempt_id"], "left_semi")
@@ -298,7 +300,7 @@ class ValidationCheckpoint:
 
         # Lineage LAST — the commit point. A crash before this line leaves
         # only invisible orphans (filtered out by violations()/metrics()).
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1) \
+        local_frame(spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1) \
             .write.mode("append").parquet(str(self._table("lineage")))
 
         # carried-over files' totals come from their original lineage rows

@@ -27,6 +27,7 @@ from schemasaurus_spark.validate import validate
 from schemasaurus_spark.compiler import VIOLATIONS_COL
 from schemasaurus_spark.operators import aggregates as agg
 from schemasaurus_spark.operators import dedup, similarity, text
+from schemasaurus_spark.session import local_frame
 
 # --------------------------------------------------------------------- util
 
@@ -205,7 +206,7 @@ FROM c
 
 
 def q_ref_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark_dim = spark.createDataFrame([(x,) for x in DOC_LANGS], "lang string")
+    spark_dim = local_frame(spark, [(x,) for x in DOC_LANGS], "lang string")
     v = agg.referential_check(
         _t(spark, sf_dir, "documents"), spark_dim, column="lang", id_column="doc_id"
     )
@@ -1460,9 +1461,9 @@ def q_full_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed-baseline stand-in: the staged frame's own histogram
     # under a 3x shift (groups x buckets rows — sketch-sized collect)
     shifted = staged.withColumn("n_chars", F.col("n_chars") * 3)
-    baseline = spark.createDataFrame(
-        [(r["group_key"], r["bucket"], r["count"]) for r in
-         agg.histogram(shifted, "n_chars", edges, by="lang2").collect()],
+    hist = agg.histogram(shifted, "n_chars", edges, by="lang2").collect()
+    baseline = local_frame(
+        spark, [(r["group_key"], r["bucket"], r["count"]) for r in hist],
         "group_key string, bucket int, count long")
     suite = dsl.Suite(id_column="doc_id2",
                       columns={"n_chars": [dsl.Maximum(400)]},
@@ -1617,8 +1618,8 @@ def q_tdigest_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = approx.get(key, [None, None])
         rows.append((lang, "p50", close(a[0], r["q50"])))
         rows.append((lang, "p95", close(a[1], r["q95"])))
-    return spark.createDataFrame(
-        rows, "lang string, q string, within_tol boolean")
+    return local_frame(
+        spark, rows, "lang string, q string, within_tol boolean")
 
 
 SQL_TDIGEST_ACCURACY = """
@@ -1707,9 +1708,9 @@ def q_official_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = run_official_tests(spark, tests)
     rows = [(t.file, t.case, t.test, True) for t in res.passed]
     rows += [(t.file, t.case, t.test, False) for t, _ in res.failed]
-    return spark.createDataFrame(
-        rows, "file string, case_desc string, test_desc string, "
-              "passed boolean")
+    return local_frame(
+        spark, rows, "file string, case_desc string, test_desc string, "
+                     "passed boolean")
 
 
 def _official_suite_oracle_sql() -> str:

@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Repo root (parent of the package). Production ships the package with
 # `spark-submit --py-files schemasaurus_spark.zip`; in local mode the Python
@@ -76,3 +77,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A driver-side frame of ``rows`` (tuples or Rows in ``schema``'s field
+    order; ``schema`` a DDL string or StructType) as a local relation.
+
+    ``spark.createDataFrame(list_of_tuples, ddl)`` plans as ``Scan
+    ExistingRDD``: a pickled Python RDD that every action re-runs through
+    forked Python workers. Built column by column as a pyarrow Table the
+    same rows plan as ``LocalTableScan`` and are read in the JVM. A schema
+    Arrow cannot represent raises rather than falling back."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (schema if isinstance(schema, T.StructType)
+              else T._parse_datatype_string(schema))
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, struct)

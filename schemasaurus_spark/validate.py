@@ -28,6 +28,7 @@ from schemasaurus_spark.compiler import (
     compile_suite,
 )
 from schemasaurus_spark.dsl import Suite
+from schemasaurus_spark.session import local_frame
 
 
 @dataclass
@@ -74,7 +75,7 @@ class ValidationResult:
             rows = [(None, "additionalProperties", c, None, None, msg, 0)
                     for c in extra]
             schema_cols = out.schema
-            out = out.unionByName(spark.createDataFrame(rows, schema_cols))
+            out = out.unionByName(local_frame(spark, rows, schema_cols))
         return out
 
     def undeclared_columns(self) -> list[str]:
@@ -116,8 +117,8 @@ class ValidationResult:
         if not extra:
             return base
         spark = self.validated.sparkSession
-        pseudo = spark.createDataFrame(
-            [(-2, 0, len(extra), False)],
+        pseudo = local_frame(
+            spark, [(-2, 0, len(extra), False)],
             "partition_id int, n_rows long, n_violations long, pass boolean")
         return base.unionByName(pseudo)
 
@@ -137,8 +138,8 @@ class ValidationResult:
         if not extra:
             return base
         spark = self.validated.sparkSession
-        static = spark.createDataFrame(
-            [("additionalProperties", c, 1) for c in extra],
+        static = local_frame(
+            spark, [("additionalProperties", c, 1) for c in extra],
             "constraint_id string, column string, n_violations long")
         return base.unionByName(static)
 
@@ -303,7 +304,7 @@ def make_value_validator(spark, suite: Suite, schema: str):
 
     def validator(value: dict) -> dict:
         row = tuple(value.get(f.name) for f in t.fields)
-        df = spark.createDataFrame([row], t)
+        df = local_frame(spark, [row], t)
         rows = ValidationResult(plan, plan.apply(df)).violations().collect()
         errors = [
             {"code": r["constraint_id"], "message": r["message"],

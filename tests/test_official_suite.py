@@ -12,6 +12,8 @@ from pathlib import Path
 
 import pytest
 
+from plan_walk import executed_nodes, python_rdd_scans
+from schemasaurus_spark import official_suite
 from schemasaurus_spark.official_suite import (
     OfficialTest, REFERENCE_IGNORED, is_ignored, load_official_suite,
     run_official_tests,
@@ -64,6 +66,28 @@ def test_single_file_load_and_run(spark):
     # every minimum.json test grades (none skip) and passes
     assert not res.failed and not res.skipped
     assert len(res.passed) == len(tests)
+
+
+def test_corpus_batch_frame_is_local_relation(spark, monkeypatch):
+    """A corpus batch's one-row frame (struct and array columns included)
+    is a local relation, not a ``Scan ExistingRDD`` that each action
+    re-runs through Python workers."""
+    frames = []
+    real_validate = official_suite.validate
+
+    def recording_validate(df, suite):
+        frames.append(df)
+        return real_validate(df, suite)
+
+    monkeypatch.setattr(official_suite, "validate", recording_validate)
+    res = run_official_tests(
+        spark, load_official_suite(CORPUS / "properties.json"))
+    assert res.passed and not res.failed
+    assert frames
+    for df in frames:
+        nodes = executed_nodes(df)
+        assert not python_rdd_scans(nodes)
+        assert [n.nodeName() for n in nodes] == ["LocalTableScan"]
 
 
 def test_corpus_has_at_least_300_tests():

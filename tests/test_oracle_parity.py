@@ -5,10 +5,12 @@ parquet; rows are compared order-insensitively with columns sorted by name.
 
 import math
 import os
+import re
 
 import duckdb
 import pytest
 
+from plan_walk import executed_nodes, python_rdd_scans
 from schemasaurus_spark.queries import QUERIES, build_oracles
 
 ORACLES = build_oracles()
@@ -47,35 +49,23 @@ def _normalize(rows, cols):
 
 # A scan DataFilter is evaluated interpreted, row by row (BENCH.md round 2
 # 'filter-pushdown pathology'): none may carry a higher-order function, a
-# hash or a regex rewrite.
-SLOW_DATA_FILTERS = ("lambdafunction", "md5(", "regexp_replace(")
+# hash, a regex rewrite, or a size() over a computed tree (size of a bare
+# column, `size(tokens#12, false)`, is fine).
+SLOW_DATA_FILTERS = re.compile(
+    r"lambdafunction|md5\(|regexp_replace\(|size\((?!\w+#\d+L?[,)])")
 
 
-def _scan_data_filters(plan):
-    """DataFilters of every file scan in a physical plan, through AQE query
-    stages and cached relations. Read from the scan nodes because the plan
-    string abbreviates each to 100 characters."""
-    name = plan.getClass().getSimpleName()
-    if name == "FileSourceScanExec":
-        yield plan.dataFilters().mkString(", ")
-    if name == "AdaptiveSparkPlanExec":
-        kids = [plan.executedPlan()]
-    elif name.endswith("QueryStageExec"):
-        kids = [plan.plan()]
-    elif name == "InMemoryTableScanExec":
-        kids = [plan.relation().cachedPlan()]
-    else:
-        seq = plan.children()
-        kids = [seq.apply(i) for i in range(seq.size())]
-    for k in kids:
-        yield from _scan_data_filters(k)
-
-
-def _assert_no_slow_data_filter(name, sdf):
-    plan = sdf._jdf.queryExecution().executedPlan()
-    slow = [f for f in _scan_data_filters(plan)
-            if any(t in f for t in SLOW_DATA_FILTERS)]
+def _assert_plan_pins(name, sdf):
+    nodes = executed_nodes(sdf)
+    # DataFilters read from the scan nodes: the plan string abbreviates
+    # each list to 100 characters
+    filters = [n.dataFilters().mkString(", ") for n in nodes
+               if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    slow = [f for f in filters if SLOW_DATA_FILTERS.search(f)]
     assert not slow, f"{name}: interpreted scan DataFilters {slow}"
+    # driver-built frames are local relations, never a Python RDD
+    rdd = python_rdd_scans(nodes)
+    assert not rdd, f"{name}: Python-worker scans {rdd}"
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -85,12 +75,12 @@ def test_query_matches_oracle(spark, duck, name):
         # a stable schema; the driver records the weaker check
         sdf = QUERIES[name](spark, SF_DIR)
         assert sdf.columns and sdf.count() >= 0
-        _assert_no_slow_data_filter(name, sdf)
+        _assert_plan_pins(name, sdf)
         return
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
-    _assert_no_slow_data_filter(name, sdf)
+    _assert_plan_pins(name, sdf)
 
     cur = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in cur.description]

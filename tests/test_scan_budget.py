@@ -28,6 +28,8 @@ from schemasaurus_spark import NotNull, Pattern, Suite, datagen
 from schemasaurus_spark.engine import AggregateChecks, run_full_validation
 from schemasaurus_spark.operators import aggregates as agg
 
+from plan_walk import executed_nodes, python_rdd_scans
+
 
 def _bytes_read(spark) -> int:
     st = (spark.sparkContext._jvm.org.apache.hadoop.fs.FileSystem
@@ -120,6 +122,32 @@ def test_aggregate_path_is_two_scans(spark, table, monkeypatch):
     # clean families stayed clean (so no targeted offender scans hid here)
     assert not any(c.startswith("ref.") or c.startswith("unique.")
                    for c in codes)
+
+
+@pytest.mark.parametrize("dirty", [False, True], ids=["clean_key", "dup_key"])
+def test_gate_frames_need_no_python_worker(spark, table, dirty):
+    """The frames a gate consumes carry no ``Scan ExistingRDD``: the
+    driver-built pieces (undeclared-column rows, the -1/-2 verdict
+    pseudo-rows, the empty uniqueness result, the stats violations) are
+    local relations, so no action re-runs them through Python workers.
+    Plan walk only — no Spark job beyond the gate's own."""
+    input_df = spark.read.parquet(table)
+    if dirty:
+        input_df = input_df.unionByName(
+            input_df.where(F.col("n_tok") % 5 == 0))
+    # tokens, n_tok, source and lang stay undeclared
+    suite = Suite(id_column="doc_id", columns={"doc_id": [NotNull()]},
+                  allow_undeclared_columns=False)
+    res = run_full_validation(input_df, suite, AggregateChecks(
+        sources_dim=datagen.sources_dim(spark),
+        null_rate_max={"lang": 0.01}))
+    assert res.row.undeclared_columns()
+    for name, frame in [("verdicts", res.verdicts()),
+                        ("metrics", res.row.metrics()),
+                        ("violations", res.violations())]:
+        nodes = executed_nodes(frame)
+        assert not python_rdd_scans(nodes), name
+        assert any(n.nodeName() == "LocalTableScan" for n in nodes), name
 
 
 def test_fused_matches_standalone_checks(spark, table):

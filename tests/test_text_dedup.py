@@ -134,6 +134,23 @@ def test_precomputed_fp_col_paths_match_default(spark):
     assert got_surv == want_surv == [1, 3, 4, 5]
 
 
+def test_fingerprint_null_only_for_null_text(spark):
+    """``content_fingerprint`` is NULL exactly when the text is NULL: text
+    that normalizes to nothing (empty, whitespace, emoji only) still has
+    the md5 of "". q_dedup_exact relies on this when it marks ``fp``
+    non-nullable with a never-firing ``coalesce``."""
+    df = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "\t\n"), (4, "\U0001F600\U0001F680"),
+         (5, None)],
+        "doc_id long, text string")
+    got = {r["doc_id"]: r["fp"] for r in df.select(
+        "doc_id", text.content_fingerprint(F.col("text")).alias("fp"))
+        .collect()}
+    empty_md5 = "d41d8cd98f00b204e9800998ecf8427e"
+    assert got == {1: empty_md5, 2: empty_md5, 3: empty_md5, 4: empty_md5,
+                   5: None}
+
+
 def test_duplicate_clusters_nonconvergence_is_loud(spark):
     """A component whose diameter exceeds max_iters must raise, not return
     silently split clusters (round-4 review)."""
