@@ -105,11 +105,12 @@ def run_sequences_bench(spark, path: str) -> dict:
     t_compile0 = time.time()
     df = spark.read.parquet(path)
     res = validate(df, full_sequences_suite())
-    verdicts = res.verdicts()
     compile_s = time.time() - t_compile0
 
     t0 = time.time()
-    verd = verdicts.collect()
+    # verdicts() runs the counts aggregate itself (the frame it returns is
+    # a local relation), so it belongs to the timed execution
+    verd = res.verdicts().collect()
     wall = time.time() - t0
     n_rows = sum(r["n_rows"] for r in verd)
     return {

@@ -490,10 +490,11 @@ def main() -> int:
             dim = spark.read.parquet(args.ref_dim)
             if args.ref_scaled:
                 # the scaled path must never broadcast the dim, so it
-                # cannot ride the fused (broadcast-join) scan
+                # cannot ride the fused (broadcast-join) scan; its screen
+                # already counted the missing rows (no semi-join re-count)
                 n_ref = agg.referential_check_scaled(
                     df, dim, args.ref_column,
-                    id_column=suite.id_column).count()
+                    id_column=suite.id_column).n_rows
                 report["ref_missing_rows"] = int(n_ref)
                 report["ref_pass"] = n_ref == 0
                 agg_pass &= n_ref == 0
@@ -525,11 +526,11 @@ def main() -> int:
                       file=sys.stderr)
                 return 2
 
-        def _row_dicts(frame):
+        def _row_dicts(checked):
             return [
                 {"group": r["doc_id"], "constraint_id": r["constraint_id"],
                  "column": r["column"], "value": r["value"], "arg": r["arg"]}
-                for r in frame.collect()]
+                for r in checked.violations.collect()]
 
         def _report_stat_bounds(fused):
             ok = True

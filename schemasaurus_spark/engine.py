@@ -28,7 +28,8 @@ from schemasaurus_spark.compiler import VIOLATIONS_COL
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.operators import aggregates as agg
 from schemasaurus_spark.session import local_frame
-from schemasaurus_spark.validate import ValidationResult, validate
+from schemasaurus_spark.validate import (
+    VERDICT_SCHEMA, ValidationResult, validate)
 
 VIOLATION_COLS = ["doc_id", "constraint_id", "column", "value", "arg", "message"]
 
@@ -82,17 +83,11 @@ class AggregateChecks:
 @dataclass
 class FullValidationResult:
     row: ValidationResult
-    agg_violations: DataFrame  # stacked aggregate-check violations
+    agg_violations: DataFrame  # stacked aggregate-check violations (lazy)
+    # rows of agg_violations, counted on the driver from the totals each
+    # check already brought back — agg_violations is never run to count it
+    n_agg: int
     drift: list = field(default_factory=list)
-    _n_agg: Optional[int] = field(default=None, init=False, repr=False)
-
-    def _agg_count(self) -> int:
-        """Count aggregate violations once per result object — verdicts()
-        and is_valid() are often both called on the same run, and the
-        aggregate stack re-executes its whole plan per action otherwise."""
-        if self._n_agg is None:
-            self._n_agg = self.agg_violations.count()
-        return self._n_agg
 
     def violations(self) -> DataFrame:
         """Row-level + aggregate violations, one schema."""
@@ -104,25 +99,17 @@ class FullValidationResult:
 
     def verdicts(self) -> DataFrame:
         """Per-partition verdicts; aggregate-check failures are appended as
-        pseudo-partition rows (partition_id = -1 per family) so a partition
-        table consumer sees the whole-table checks too."""
-        base = self.row.verdicts()
-        spark = base.sparkSession
-        n_agg = self._agg_count()
-        extra = local_frame(
-            spark, [(-1, 0, n_agg, n_agg == 0)],
-            "partition_id int, n_rows long, n_violations long, pass boolean",
-        )
-        return base.unionByName(extra)
+        a pseudo-partition row (partition_id = -1) so a partition table
+        consumer sees the whole-table checks too. One local relation over
+        the row result's memoized counts aggregate."""
+        return local_frame(
+            self.row.validated.sparkSession,
+            self.row.verdict_rows()
+            + [(-1, 0, self.n_agg, self.n_agg == 0)],
+            VERDICT_SCHEMA)
 
     def is_valid(self) -> bool:
-        if not self.row.is_valid():
-            return False
-        # populate the shared count cache: the natural gate-then-report
-        # order (is_valid() then verdicts()) must execute the aggregate
-        # plan once, not twice. The frame is per-check-sized (never data-
-        # sized), so count() over take(1) costs nothing material.
-        return self._agg_count() == 0
+        return self.row.is_valid() and self.n_agg == 0
 
 
 def _empty_violations_df(spark) -> DataFrame:
@@ -139,10 +126,15 @@ def run_full_validation(df: DataFrame, suite: Suite,
     and the referential miss count — is ONE fused grouped-aggregation scan
     (``fused_aggregate_pass``); uniqueness is a second scan (its grouping
     key is the row key, not a dimension — unfusable by shape). All
-    aggregate violation frames are then driver-built LocalTableScans, so
-    consuming ``agg_violations`` re-reads NOTHING. The only extra scans
-    ever taken are targeted offender extractions on DIRTY tables
-    (referential row listing, duplicate-key listing) —
+    null-rate, stat-bound and drift violation frames are then driver-built
+    LocalTableScans. ``agg_violations`` stays lazy: on a CLEAN table
+    consuming it re-reads nothing, but on a DIRTY one its uniqueness part
+    re-runs the salted aggregation and its referential part the anti-join
+    (or the scaled semi-join) — both re-scan the table to list offending
+    rows. ``n_agg`` never runs it: every check's violation count is
+    already on the driver (uniqueness ``screen_total - screen_distinct``,
+    the fused referential miss total, the scaled screen's row count, the
+    lengths of the driver-built row lists) —
     tests/test_scan_budget.py pins the 2-scan budget."""
     checks = checks or AggregateChecks()
     spark = df.sparkSession
@@ -192,9 +184,13 @@ def run_full_validation(df: DataFrame, suite: Suite,
             "empty — the frozen bucket edges are required to compare "
             "against the checkpointed baseline")
 
-    parts: list[DataFrame] = []
+    # every check's violations with their count, known on the driver
+    parts: list[agg.CheckViolations] = []
     if unique_key:
-        parts.append(agg.uniqueness_check(df, unique_key).violations)
+        uniq = agg.uniqueness_check(df, unique_key)
+        # sequence(2, occ) emits occ - 1 rows per duplicated key
+        parts.append(agg.CheckViolations(
+            uniq.violations, uniq.screen_total - uniq.screen_distinct))
 
     # ONE fused scan for null-rate + drift + referential-miss-count.
     null_rate_max = checks.null_rate_max or {}
@@ -227,12 +223,14 @@ def run_full_validation(df: DataFrame, suite: Suite,
             drift_is_array=checks.drift_is_array,
             stat_bound_cols=list(stat_bounds),
         )
-        if fused_dim is not None and fused.ref_missing_total() > 0:
+        n_ref_missing = (fused.ref_missing_total()
+                         if fused_dim is not None else 0)
+        if n_ref_missing > 0:
             # dirty path only: a targeted anti-join lists the offending
             # rows; the clean path never takes this scan
-            parts.append(agg.referential_check(
+            parts.append(agg.CheckViolations(agg.referential_check(
                 df, checks.sources_dim, checks.ref_column,
-                id_column=suite.id_column))
+                id_column=suite.id_column), n_ref_missing))
         if null_rate_max:
             parts.append(agg.null_rate_violations_from_stats(
                 spark, fused, null_rate_max))
@@ -252,5 +250,6 @@ def run_full_validation(df: DataFrame, suite: Suite,
 
     stacked = _empty_violations_df(spark)
     for p in parts:
-        stacked = stacked.unionByName(p.select(*VIOLATION_COLS))
-    return FullValidationResult(row_res, stacked, drift_results)
+        stacked = stacked.unionByName(p.violations.select(*VIOLATION_COLS))
+    return FullValidationResult(row_res, stacked,
+                                sum(p.n_rows for p in parts), drift_results)

@@ -16,6 +16,10 @@ A per-suite / per-constraint override map plays the role of the reference's
 
 from __future__ import annotations
 
+import logging
+
+_log = logging.getLogger("schemasaurus_spark")
+
 DEFAULT_MESSAGES: dict[str, str] = {
     "string": "shall be a string",
     "null": "shall be null",
@@ -110,7 +114,9 @@ def render_message(
             if "%s" in msg:
                 msg = msg.replace("%s", _fmt_arg(arg))
         except Exception:
-            pass
+            # keep the template uninterpolated rather than fail the compile
+            _log.warning("message %r: could not interpolate arg %r",
+                         code, arg, exc_info=True)
     return msg
 
 

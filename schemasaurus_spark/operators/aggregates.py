@@ -112,6 +112,15 @@ def null_rate_check(df: DataFrame, column: str, max_rate: float,
     )
 
 
+@dataclass
+class CheckViolations:
+    """A check's violation frame plus its row count, which the driver
+    knows when it builds the frame — consumers count without running it."""
+
+    violations: DataFrame
+    n_rows: int
+
+
 # ---------------------------------------------------------- fused one-pass
 
 
@@ -290,7 +299,7 @@ def fused_aggregate_pass(
 
 def null_rate_violations_from_stats(spark, fused: FusedAggStats,
                                     null_rate_max: dict[str, float]
-                                    ) -> DataFrame:
+                                    ) -> CheckViolations:
     """Driver-built `stats.null_rate` violations from the fused pass —
     LocalTableScan only. Value formatting goes through the SAME Spark
     expressions as :func:`null_rate_check` (round → cast string on a
@@ -309,17 +318,17 @@ def null_rate_violations_from_stats(spark, fused: FusedAggStats,
         spark, offender_rows,
         "group_key string, column string, null_rate double, "
         "arg string, message string")
-    return tiny.select(
+    return CheckViolations(tiny.select(
         F.col("group_key").alias("doc_id"),
         F.lit("stats.null_rate").alias("constraint_id"),
         F.col("column"),
         F.round("null_rate", 6).cast("string").alias("value"),
         "arg", "message",
-    )
+    ), len(offender_rows))
 
 
 def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
-                                     stat_bounds: dict) -> DataFrame:
+                                     stat_bounds: dict) -> CheckViolations:
     """Driver-built Deequ-style aggregate assertions from the fused pass
     (LocalTableScan only — no second scan). ``stat_bounds`` maps column ->
     spec with any of ``min_mean`` / ``max_mean`` (per-group mean bounds;
@@ -362,12 +371,12 @@ def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
     tiny = local_frame(
         spark, rows, "group_key string, constraint_id string, column string, "
                      "observed double, arg string, message string")
-    return tiny.select(
+    return CheckViolations(tiny.select(
         F.col("group_key").alias("doc_id"),
         "constraint_id", "column",
         F.round("observed", 6).cast("string").alias("value"),
         "arg", "message",
-    )
+    ), len(rows))
 
 
 # ------------------------------------------------------------- uniqueness
@@ -547,7 +556,7 @@ def referential_check_scaled(
     dim_column: str | None = None,
     id_column: str = "doc_id",
     max_missing_keys: int = 100_000,
-) -> DataFrame:
+) -> CheckViolations:
     """Exact referential check for dimensions too LARGE to broadcast —
     a doc-id-like FK whose dimension is another 10^12-row table's key
     column. Same error shape/code as :func:`referential_check`
@@ -564,6 +573,9 @@ def referential_check_scaled(
        per-row violations. Like ``uniqueness_check``, the screen count
        and the violations collection are actions on one plan instance, so
        the completed phase-1/2 shuffle stages are reused, not re-scanned.
+
+    Returns the violations with the screen's row count (``n_rows``), so
+    a caller that only needs the count never runs phase 3.
 
     ``max_missing_keys`` guards phase 3: a missing-key set beyond it
     means the wrong dimension was wired up (systematic breakage) and
@@ -582,11 +594,11 @@ def referential_check_scaled(
         F.count(F.lit(1)).alias("k"),
         F.coalesce(F.sum("__n"), F.lit(0)).alias("rows"),
     ).first()
-    n_missing_keys = int(screen["k"])
+    n_missing_keys, n_rows = int(screen["k"]), int(screen["rows"])
     if n_missing_keys > max_missing_keys:
         raise ValueError(
             f"referential_check_scaled: {n_missing_keys} distinct "
-            f"{column!r} keys ({int(screen['rows'])} rows) are missing from "
+            f"{column!r} keys ({n_rows} rows) are missing from "
             f"dim({dim_column}) — above max_missing_keys={max_missing_keys}. "
             f"This is systematic (wrong dimension table?); refusing to "
             f"broadcast the missing-key set back for per-row attribution.")
@@ -594,17 +606,17 @@ def referential_check_scaled(
     shape = (f"doc_id string, constraint_id string, column string, "
              f"value string, arg string, message string")
     if n_missing_keys == 0:
-        return local_frame(df.sparkSession, [], shape)
+        return CheckViolations(local_frame(df.sparkSession, [], shape), 0)
     rows = facts.join(F.broadcast(missing.select(column)),
                       on=column, how="left_semi")
-    return rows.select(
+    return CheckViolations(rows.select(
         F.col(id_column).cast("string").alias("doc_id"),
         F.lit(f"ref.{column}").alias("constraint_id"),
         F.lit(column).alias("column"),
         F.col(column).cast("string").alias("value"),
         F.lit(f"dim({dim_column})").alias("arg"),
         F.lit(msg).alias("message"),
-    )
+    ), n_rows)
 
 
 # ------------------------------------------------------------------ drift
@@ -775,7 +787,7 @@ def drift_from_counts(curm: dict, basem: dict, n_buckets: int, column: str,
 
 
 def drift_violations(spark, results: list[DriftResult], psi_threshold: float,
-                     ks_threshold: float) -> DataFrame:
+                     ks_threshold: float) -> CheckViolations:
     rows = []
     for r in results:
         if r.psi > psi_threshold:
@@ -786,10 +798,10 @@ def drift_violations(spark, results: list[DriftResult], psi_threshold: float,
             rows.append((r.group_key, f"drift.ks.{r.metric}", r.metric,
                          f"{r.ks:.6f}", str(ks_threshold),
                          render_message("drift.ks", ks_threshold)))
-    return local_frame(
+    return CheckViolations(local_frame(
         spark, rows,
         "doc_id string, constraint_id string, column string, value string, arg string, message string",
-    )
+    ), len(rows))
 
 
 # ------------------------------------------------- embedding drift

@@ -181,40 +181,36 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     w = F.explode(words(F.lower(F.col(text_col)))).alias("word")
     tokens = spread_scan(df).select(F.col(id_col), w)
     freq = tokens.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
-    total = freq.agg(F.sum("n").alias("t")).first()["t"]
-    if not total:
-        # empty corpus (e.g. an empty incremental delta): sum() aggregates
-        # to NULL and every downstream float(total) would TypeError —
-        # return the well-typed empty result instead
-        return local_frame(
-            df.sparkSession, [], f"{id_col} long, logprob double")
-    if max_vocab is not None:
+    # the corpus total rides the scoring plan as a 1-row cross join over
+    # the vocab aggregate — no driver-side total; an empty corpus joins
+    # nothing and yields the empty result
+    total = freq.agg(F.sum("n").alias("__total"))
+    if max_vocab is None:
+        # the join and the total share the vocab aggregate, so its
+        # exchange is reused instead of built twice
+        n = F.col("n")
+        scored = tokens.join(freq, "word")
+    else:
         # top-K by (n desc, word asc) runs as TakeOrderedAndProject and is
         # COLLECTED (K rows, driver-bounded by the user's own valve): the
-        # join side becomes a local relation, so the final plan does not
-        # recompute the corpus-wide aggregation and the tail sum costs
-        # nothing — two full scans total (the `total` agg and the top-K),
-        # plus the scoring scan, instead of the previous four.
+        # join side becomes a local relation, so the scoring plan does not
+        # re-join against the corpus-wide aggregation. One LEFT join:
+        # in-vocab words score n/total, everything else folds to the <unk>
+        # tail mass (total minus the top-K mass, at least 1) —
+        # mass-preserving.
         top_rows = (freq.orderBy(F.desc("n"), F.col("word"))
                     .limit(max_vocab).collect())
-        tail_n = max(int(total - sum(r["n"] for r in top_rows)), 1)
-        spark = df.sparkSession
+        top_n = sum(r["n"] for r in top_rows)
         vocab = local_frame(
-            spark, [(r["word"], r["n"]) for r in top_rows],
+            df.sparkSession, [(r["word"], r["n"]) for r in top_rows],
             "word string, n long")
-        # one LEFT join: in-vocab words score n/total, everything else
-        # folds to the <unk> tail mass — mass-preserving
-        lp = F.log(F.coalesce(F.col("n"), F.lit(int(tail_n)))
-                   / F.lit(float(total)))
-        return (tokens.join(vocab, "word", "left")
-                .groupBy(id_col)
-                .agg(F.round(F.avg(lp), round_to).alias("logprob")))
-    lp = F.log(F.col("n") / F.lit(float(total)))
-    return (
-        tokens.join(freq, "word")
-        .groupBy(id_col)
-        .agg(F.round(F.avg(lp), round_to).alias("logprob"))
-    )
+        n = F.coalesce(F.col("n"),
+                       F.greatest(F.col("__total") - F.lit(top_n), F.lit(1)))
+        scored = tokens.join(vocab, "word", "left")
+    lp = F.log(n / F.col("__total"))
+    return (scored.crossJoin(total)
+            .groupBy(id_col)
+            .agg(F.round(F.avg(lp), round_to).alias("logprob")))
 
 
 def quality_scores(df: DataFrame, text_col: str = "text",

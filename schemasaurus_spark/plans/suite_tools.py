@@ -17,10 +17,13 @@ tools are built on it:
 
 from __future__ import annotations
 
+import logging
 from typing import Callable, Optional
 
 from schemasaurus_spark import dsl
 from schemasaurus_spark.messages import render_message
+
+_log = logging.getLogger("schemasaurus_spark")
 
 
 class SuiteVisitor:
@@ -139,6 +142,8 @@ def _describe(c: dsl.Constraint) -> str:
     try:
         return render_message(c.code, arg)
     except Exception:
+        _log.warning("no description for constraint %r; using its code",
+                     c.code, exc_info=True)
         return c.code
 
 

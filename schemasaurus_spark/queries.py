@@ -16,6 +16,7 @@ Numeric-parity rules used throughout:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from collections.abc import Callable
@@ -28,6 +29,8 @@ from schemasaurus_spark.compiler import VIOLATIONS_COL
 from schemasaurus_spark.operators import aggregates as agg
 from schemasaurus_spark.operators import dedup, similarity, text
 from schemasaurus_spark.session import local_frame
+
+_log = logging.getLogger("schemasaurus_spark")
 
 # --------------------------------------------------------------------- util
 
@@ -479,7 +482,10 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             _DEDUP_EXACT_HANDLES.pop().unpersist()
         except Exception:
-            pass
+            # the next invocation recomputes from parquet either way; a
+            # failed release only leaves cached blocks behind
+            _log.warning("dedup_exact: could not unpersist the previous "
+                         "fingerprint frame", exc_info=True)
     fpf = (d.where(F.col("text").isNotNull())
            .select(F.col("doc_id"),
                    F.coalesce(text.content_fingerprint(F.col("text")),

@@ -9,16 +9,21 @@ of ``valid = errors.length === 0``.
 Execution shape (scale notes):
 
 * ``apply`` is a narrow projection — zero shuffle, whole-stage codegen.
-* ``verdicts()`` groups on ``spark_partition_id()`` — partial aggregation
-  means each task emits ONE partial row; the shuffle moves O(#partitions)
-  rows, not data.
+* ``verdicts()``, ``metrics()`` and ``is_valid()`` are computed ONCE per
+  result: one counts aggregate (:meth:`ValidationResult.counts_frame`)
+  groups one partition entry per row plus one pair entry per violation,
+  is collected on first use and memoized on the result — partial
+  aggregation means each task emits one partial row per group, and the
+  collected output is partitions + failing pairs rows. The verdict and
+  metrics frames are local relations built from it, so collecting them
+  runs no Spark job.
 * ``violations()`` explodes the violation arrays — rows flow only for
   failing checks, so a clean 10^12-row table emits nothing.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -30,11 +35,31 @@ from schemasaurus_spark.compiler import (
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.session import local_frame
 
+VERDICT_SCHEMA = ("partition_id int, n_rows long, n_violations long, "
+                  "pass boolean")
+METRICS_SCHEMA = "constraint_id string, column string, n_violations long"
+
 
 @dataclass
 class ValidationResult:
+    """The outcome of :func:`validate` on one input frame.
+
+    ``violations()`` (and the row filters and ``write_split``) are lazy
+    frames, re-planned and re-read on every call. ``verdicts()``,
+    ``metrics()``, ``is_valid()`` and ``register_views()`` read ONE counts
+    aggregate that runs at the first of those calls and is kept for the
+    life of the result, so calling them starts a Spark job at call time and
+    later calls see the input as it was then. If the input is re-read
+    (a parquet path rewritten, an incremental snapshot advanced), call
+    :func:`validate` again rather than mixing a fresh ``violations()`` with
+    counts taken earlier."""
+
     plan: ValidationPlan
     validated: DataFrame  # input + __violations array column
+    # (partition rows, (constraint_id, column) rows) of the collected
+    # counts aggregate; filled on first use by _counts()
+    _count_rows: tuple | None = field(default=None, init=False, repr=False,
+                                      compare=False)
 
     @property
     def id_column(self) -> str:
@@ -98,50 +123,81 @@ class ValidationResult:
         declared |= {r.split(".")[0] for r in refs}
         return [c for c in self.validated.columns if c not in declared]
 
+    def counts_frame(self) -> DataFrame:
+        """The ONE aggregate behind verdicts(), metrics() and is_valid().
+
+        Each row explodes ``[null] + __violations``: the null head (pos 0)
+        is the row's partition entry, keyed ``(partition_id, null, null)``
+        and carrying ``size(__violations)``; each violation is a pair
+        entry keyed ``(null, constraint_id, column)``. One ``groupBy`` on
+        the three keys then returns partitions + failing pairs rows
+        (a pair row has a null ``partition_id``). A clean row costs one
+        generated row and one hash probe; grouping sets would feed every
+        row to the aggregate once per set, and a 3-key groupBy on the
+        plain explode would return partitions x pairs rows."""
+        v = F.col(VIOLATIONS_COL)
+        elem = self.validated.schema[VIOLATIONS_COL].dataType.elementType
+        head = F.col("pos") == 0
+        return (
+            self.validated.select(
+                F.spark_partition_id().alias("__pid"),
+                F.size(v).alias("__n"),
+                F.posexplode(F.concat(F.array(F.lit(None).cast(elem)), v))
+                .alias("pos", "v"))
+            .groupBy(F.when(head, F.col("__pid")).alias("partition_id"),
+                     F.col("v.constraint_id").alias("constraint_id"),
+                     F.col("v.column").alias("column"))
+            .agg(F.count(F.when(head, F.lit(1))).alias("n_rows"),
+                 F.sum(F.when(head, F.col("__n")).otherwise(1))
+                 .alias("n_violations"))
+        )
+
+    def _counts(self) -> tuple[list, list]:
+        """Collect :meth:`counts_frame` once per result: sorted
+        (partition_id, n_rows, n_violations) and (constraint_id, column,
+        n_violations) tuples, the latter only for pairs that failed."""
+        if self._count_rows is None:
+            parts, pairs = [], []
+            for r in self.counts_frame().collect():
+                if r["partition_id"] is not None:
+                    parts.append((r["partition_id"], r["n_rows"],
+                                  r["n_violations"]))
+                else:
+                    pairs.append((r["constraint_id"], r["column"],
+                                  r["n_violations"]))
+            self._count_rows = (
+                sorted(parts),
+                sorted(pairs, key=lambda t: (str(t[0]), str(t[1]))))
+        return self._count_rows
+
+    def verdict_rows(self) -> list[tuple]:
+        """The rows of :meth:`verdicts`, in ``VERDICT_SCHEMA`` order."""
+        rows = [(p, n, v, v == 0) for p, n, v in self._counts()[0]]
+        extra = self.undeclared_columns()
+        if extra:
+            rows.append((-2, 0, len(extra), False))
+        return rows
+
     def verdicts(self) -> DataFrame:
         """Per-partition (partition_id, n_rows, n_violations, pass).
         Undeclared-column violations (static, not row-scoped) append as a
         pseudo-partition row (partition_id = -2; the engine's aggregate
         checks use -1) so verdict consumers see what violations() reports
-        instead of passing a table the violation report calls invalid."""
-        base = (
-            self.validated
-            .groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
-            )
-            .withColumn("pass", F.col("n_violations") == 0)
-        )
-        extra = self.undeclared_columns()
-        if not extra:
-            return base
-        spark = self.validated.sparkSession
-        pseudo = local_frame(
-            spark, [(-2, 0, len(extra), False)],
-            "partition_id int, n_rows long, n_violations long, pass boolean")
-        return base.unionByName(pseudo)
+        instead of passing a table the violation report calls invalid.
+        A local relation over the memoized counts aggregate."""
+        return local_frame(self.validated.sparkSession, self.verdict_rows(),
+                           VERDICT_SCHEMA)
 
     def metrics(self) -> DataFrame:
         """Violation counts per (constraint_id, column) — the metrics table.
         Includes the STATIC undeclared-column additionalProperties counts:
         violations()/verdicts()/is_valid() all report them, and a metrics
         consumer must not see a clean table the other surfaces call
-        invalid (round-4 review)."""
-        base = (
-            self.validated
-            .select(F.explode(VIOLATIONS_COL).alias("v"))
-            .groupBy("v.constraint_id", "v.column")
-            .agg(F.count(F.lit(1)).alias("n_violations"))
-        )
-        extra = self.undeclared_columns()
-        if not extra:
-            return base
-        spark = self.validated.sparkSession
-        static = local_frame(
-            spark, [("additionalProperties", c, 1) for c in extra],
-            "constraint_id string, column string, n_violations long")
-        return base.unionByName(static)
+        invalid (round-4 review). A local relation over the memoized
+        counts aggregate."""
+        rows = self._counts()[1] + [("additionalProperties", c, 1)
+                                    for c in self.undeclared_columns()]
+        return local_frame(self.validated.sparkSession, rows, METRICS_SCHEMA)
 
     def violation_examples(self, k: int = 5) -> DataFrame:
         """Up to k example violations per (constraint_id, column) — the
@@ -161,7 +217,9 @@ class ValidationResult:
     def register_views(self, prefix: str = "validation") -> list[str]:
         """Expose the result as temp views for the SQL surface:
         <prefix>_violations / _verdicts / _metrics — `spark.sql` users get
-        the same lazily-planned DataFrames."""
+        the same DataFrames (violations lazily planned; verdicts and
+        metrics local relations over the counts aggregate, which this
+        call runs)."""
         names = []
         for suffix, df in (("violations", self.violations()),
                            ("verdicts", self.verdicts()),
@@ -250,15 +308,10 @@ class ValidationResult:
         return counts
 
     def is_valid(self) -> bool:
-        """Table-level verdict (collects one aggregate row). Includes the
-        static undeclared-column check — violations() reports those, so the
-        boolean verdict must agree."""
-        if self.undeclared_columns():
-            return False
-        row = self.validated.select(
-            F.sum(F.size(VIOLATIONS_COL)).alias("n")
-        ).first()
-        return (row["n"] or 0) == 0
+        """Table-level verdict, read off the memoized counts aggregate.
+        Includes the static undeclared-column check — violations() reports
+        those, so the boolean verdict must agree."""
+        return all(r[3] for r in self.verdict_rows())
 
 
 def split_frame(validated: DataFrame, flag_col: str = "quarantined",

@@ -1,4 +1,22 @@
-"""Walk a physical plan's nodes for plan-shape pins (no Spark job)."""
+"""Walk a physical plan's nodes for plan-shape pins (no Spark job), and
+count the Spark jobs a block of code starts."""
+
+from contextlib import contextmanager
+
+
+@contextmanager
+def spark_jobs(spark, group: str):
+    """Yields a list that, after the block, holds the ids of the Spark jobs
+    the block started (through a job group on this thread)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    out: list = []
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        out.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def plan_nodes(plan):

@@ -76,7 +76,7 @@ def test_drift_psi_ks(spark):
     by_key = {r.group_key: r for r in bad}
     assert not by_key["web"].passed and by_key["web"].psi > 0.2
     assert by_key["books"].passed
-    viol = agg.drift_violations(spark, bad, 0.2, 0.15)
+    viol = agg.drift_violations(spark, bad, 0.2, 0.15).violations
     assert viol.where("doc_id = 'web'").count() >= 1
 
 
@@ -265,9 +265,12 @@ def test_referential_scaled_matches_broadcast_variant(spark):
     dim = datagen.sources_dim(spark)
     want = sorted((r["doc_id"], r["value"])
                   for r in agg.referential_check(df, dim, "source").collect())
-    v = agg.referential_check_scaled(df, dim, "source")
+    checked = agg.referential_check_scaled(df, dim, "source")
+    v = checked.violations
     got = sorted((r["doc_id"], r["value"]) for r in v.collect())
     assert got == want and want                       # non-vacuous parity
+    # the screen's row count equals the attributed rows (no re-count)
+    assert checked.n_rows == len(want)
     assert v.columns == ["doc_id", "constraint_id", "column", "value",
                          "arg", "message"]
     plan = v._jdf.queryExecution().executedPlan().toString()
@@ -279,14 +282,14 @@ def test_referential_scaled_matches_broadcast_variant(spark):
 
     # clean facts -> empty violations, stable schema
     clean = datagen.finalize(datagen.gen_sequences(spark, 100, 4))
-    empty = agg.referential_check_scaled(clean, dim, "source")
+    empty = agg.referential_check_scaled(clean, dim, "source").violations
     assert empty.count() == 0
     assert empty.columns == v.columns
 
     # NULL fact keys skip (engine-wide optional-null convention)
     fact = spark.createDataFrame(
         [(1, "web"), (2, None), (3, "bogus")], "doc_id long, source string")
-    rows = agg.referential_check_scaled(fact, dim).collect()
+    rows = agg.referential_check_scaled(fact, dim).violations.collect()
     assert [(r["doc_id"], r["value"]) for r in rows] == [("3", "bogus")]
 
     # systematic breakage refuses per-row attribution loudly
@@ -313,7 +316,7 @@ def test_stat_bounds_ride_fused_pass(spark):
 
     v = agg.stat_bound_violations_from_stats(
         spark, fused, {"x": {"max_mean": 2.5, "min_value": 2.0,
-                             "max_value": 5.0}})
+                             "max_value": 5.0}}).violations
     rows = {(r["doc_id"], r["constraint_id"], r["arg"])
             for r in v.collect()}
     # a: mean 2.0 passes; min 1.0 < 2.0 fires; max 3.0 passes

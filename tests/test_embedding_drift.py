@@ -94,15 +94,17 @@ def test_job_embedding_drift_bootstrap_then_compare(spark, tmp_path):
     with open(doc_path, "w") as f:
         json.dump(doc, f)
 
+    from test_job import _job_env
+
     def run(extra=()):
-        env = dict(os.environ, SPARK_GRAFT_CPUS="4")
         out = subprocess.run(
             [sys.executable, os.path.join(repo, "jobs", "validate_job.py"),
              "--table", str(tmp_path / "tbl"), "--state",
              str(tmp_path / "state"), "--schema-json", doc_path,
              "--aggregate", "--drift-by", "source",
              "--embedding-column", "embedding", *extra],
-            capture_output=True, text=True, timeout=600, cwd=repo, env=env)
+            capture_output=True, text=True, timeout=600, cwd=repo,
+            env=_job_env())
         lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
         assert lines, f"no JSON:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}"
         return json.loads(lines[-1]), out.returncode

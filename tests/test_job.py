@@ -10,11 +10,18 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _job_env() -> dict:
+    """Environment of a job subprocess: local[4] and a 1 GB driver heap —
+    the inputs are at most 1k rows, and each job JVM runs next to the
+    test session's own."""
+    return dict(os.environ, SPARK_GRAFT_CPUS="4",
+                SPARK_GRAFT_DRIVER_MEM="1g")
+
+
 def _run_job(*args):
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"), *args],
-        capture_output=True, text=True, timeout=600, cwd=REPO, env=env)
+        capture_output=True, text=True, timeout=600, cwd=REPO, env=_job_env())
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     assert lines, f"no JSON from job:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}"
     return json.loads(lines[-1]), out.returncode
@@ -133,7 +140,7 @@ def test_job_drift_config_mismatch_is_usage_error(spark, tmp_path):
          "--table", str(tmp_path / "tbl"), "--state", state,
          "--aggregate", "--drift-by", "source"],
         capture_output=True, text=True, timeout=600, cwd=REPO,
-        env=dict(os.environ, SPARK_GRAFT_CPUS="4"))
+        env=_job_env())
     assert out.returncode == 2
     assert "drift baseline" in out.stderr
 
@@ -145,7 +152,8 @@ def test_job_usage_errors_exit_2(spark, tmp_path):
             [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
              "--table", str(tmp_path / "t"), "--state", str(tmp_path / "s"),
              *extra],
-            capture_output=True, text=True, timeout=120, cwd=REPO)
+            capture_output=True, text=True, timeout=120, cwd=REPO,
+            env=_job_env())
         assert out.returncode == 2, (extra, out.stderr[-300:])
 
 
@@ -169,7 +177,7 @@ def test_job_lint_gate(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", state,
          "--schema-json", str(bad_path), "--lint"],
-        capture_output=True, text=True, timeout=300, cwd=REPO)
+        capture_output=True, text=True, timeout=300, cwd=REPO, env=_job_env())
     assert out.returncode == 2, out.stderr[-500:]
     assert "bounds-unsatisfiable" in out.stderr
     # refusal happened pre-scan: no lineage was committed
@@ -224,7 +232,8 @@ def test_job_sequence_layout_suite(spark, tmp_path):
             [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
              "--table", str(tmp_path / "tbl"), "--state",
              str(tmp_path / "s3"), *extra],
-            capture_output=True, text=True, timeout=120, cwd=REPO)
+            capture_output=True, text=True, timeout=120, cwd=REPO,
+            env=_job_env())
         assert out.returncode == 2, (extra, out.stderr[-300:])
 
 
@@ -335,13 +344,13 @@ def test_job_sample_smoke_mode(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", state,
          "--sample", "0.5", "--aggregate"],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out.returncode == 2
     out2 = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", state,
          "--sample", "1.5"],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out2.returncode == 2
 
 
@@ -376,7 +385,8 @@ def test_job_referential_flag(spark, tmp_path):
             [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
              "--table", str(tmp_path / "tbl"),
              "--state", str(tmp_path / "s3"), *bad],
-            capture_output=True, text=True, timeout=120, cwd=REPO)
+            capture_output=True, text=True, timeout=120, cwd=REPO,
+            env=_job_env())
         assert out.returncode == 2
 
 
@@ -425,7 +435,7 @@ def test_job_stat_bounds_flag(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", str(tmp_path / "s3"),
          "--stat-bounds", '{"n_tok": {"max_mean": 1}}'],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out.returncode == 2          # requires --aggregate
 
 
@@ -457,7 +467,7 @@ def test_job_suggest_flag(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", str(tmp_path / "s3"),
          "--suggest", "--aggregate"],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out.returncode == 2
 
 
@@ -495,13 +505,13 @@ def test_job_unique_key_override(spark, tmp_path):
              "--state", str(tmp_path / "s3"),
              "--aggregate", "--drift-by", "none", *bad],
             capture_output=True, text=True, timeout=300, cwd=REPO,
-            env=dict(os.environ, SPARK_GRAFT_CPUS="4"))
+            env=_job_env())
         assert out.returncode == 2
     out2 = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", str(tmp_path / "s4"),
          "--unique-key", "doc_id"],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out2.returncode == 2       # requires --aggregate
 
 
@@ -550,7 +560,7 @@ def test_job_null_rate_flag(spark, tmp_path):
              "--table", str(tmp_path / "tbl"),
              "--state", str(tmp_path / "s2"), "--drift-by", "none", *bad],
             capture_output=True, text=True, timeout=300, cwd=REPO,
-            env=dict(os.environ, SPARK_GRAFT_CPUS="4"))
+            env=_job_env())
         assert out.returncode == 2, (bad, out.stderr[-300:])
 
 
@@ -591,7 +601,7 @@ def test_job_config_file(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", str(tmp_path / "s3"),
          "--config", cfg_path],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out.returncode == 2 and "unknown --config key" in out.stderr
 
 
@@ -625,7 +635,7 @@ def test_job_config_cli_precedence_and_typing(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", str(tmp_path / "s2"),
          "--config", cfg_path],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out.returncode == 2 and "not a valid float" in out.stderr
 
     # config typing: a quoted "true" for a store_true flag is refused
@@ -637,7 +647,7 @@ def test_job_config_cli_precedence_and_typing(spark, tmp_path):
         [sys.executable, os.path.join(REPO, "jobs", "validate_job.py"),
          "--table", str(tmp_path / "tbl"), "--state", str(tmp_path / "s2b"),
          "--config", cfg_path],
-        capture_output=True, text=True, timeout=120, cwd=REPO)
+        capture_output=True, text=True, timeout=120, cwd=REPO, env=_job_env())
     assert out.returncode == 2 and "not a valid boolean" in out.stderr
 
     # malformed --stat-bounds is exit 2, never a crash wearing exit 1
@@ -649,5 +659,5 @@ def test_job_config_cli_precedence_and_typing(spark, tmp_path):
              "--state", str(tmp_path / "s3"),
              "--aggregate", "--drift-by", "none", "--stat-bounds", bad],
             capture_output=True, text=True, timeout=300, cwd=REPO,
-            env=dict(os.environ, SPARK_GRAFT_CPUS="4"))
+            env=_job_env())
         assert out2.returncode == 2, (bad, out2.stderr[-300:])

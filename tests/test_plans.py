@@ -49,11 +49,27 @@ def test_verdicts_shuffle_is_partial_agg_only(spark):
     from schemasaurus_spark import validate
     from bench import full_sequences_suite
     res = validate(df, full_sequences_suite())
-    p = _plan(res.verdicts())
-    # partial agg before the exchange => only aggregated rows move
-    before_exchange = p.split("Exchange")[0]
-    assert "HashAggregate" in p
+    # verdicts()/metrics() are local relations over the one counts
+    # aggregate; the shuffle pin lives on that aggregate's plan
+    assert "LocalTableScan" in _plan(res.verdicts())
+    p = _plan(res.counts_frame())
+    # partial agg before the exchange => only aggregated rows move (the
+    # plan prints top-down, so the partial agg is listed below it)
+    below_exchange = p.split("Exchange", 1)[1]
+    assert "HashAggregate" in p and "partial_count" in below_exchange
     assert p.count("Exchange") == 1
+
+
+def test_counts_aggregate_does_not_expand_rows(spark):
+    """A clean row feeds the counts aggregate ONE generated row (its
+    partition entry), as the per-partition groupBy it replaced did: no
+    Expand node, which would feed every row to the aggregate once per
+    grouping set."""
+    df = datagen.finalize(datagen.gen_sequences(spark, 100, 2))
+    from schemasaurus_spark import validate
+    from bench import full_sequences_suite
+    p = _plan(validate(df, full_sequences_suite()).counts_frame())
+    assert "Expand" not in p and "Generate" in p
 
 
 def test_referential_check_broadcasts_dimension(spark):

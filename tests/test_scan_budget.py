@@ -167,7 +167,7 @@ def test_fused_matches_standalone_checks(spark, table):
     drift = agg.drift_check(input_df, checks.drift_baseline, "n_tok",
                             list(checks.drift_edges), by="source")
     parts.append(agg.drift_violations(spark, drift, checks.psi_threshold,
-                                      checks.ks_threshold))
+                                      checks.ks_threshold).violations)
     standalone = parts[0]
     for p in parts[1:]:
         standalone = standalone.unionByName(p)

@@ -262,3 +262,37 @@ def test_suite_diff_reports_changes(spark):
             name="sz", expr=lambda c: F.size("tokens") >= F.col("n_tok")))])
     rk = {c.kind for c in suite_diff(v1, v3)}
     assert rk == {"row_rule_removed", "row_rule_added"}
+
+
+def test_swallowed_fallbacks_are_logged(spark, caplog, tmp_path):
+    """The three fallbacks keep their result and log the exception on the
+    ``schemasaurus_spark`` logger: an undescribable constraint, a message
+    arg that cannot be interpolated, a failed unpersist."""
+    import logging
+
+    from schemasaurus_spark import queries
+    from schemasaurus_spark.messages import UnknownMessageError, render_message
+    from schemasaurus_spark.plans.suite_tools import _describe
+    from schemasaurus_spark.session import local_frame
+
+    class _Unknown(dsl.Constraint):
+        code = "no.such.code"
+
+    class _Stuck:
+        def unpersist(self):
+            raise RuntimeError("block manager gone")
+
+    local_frame(spark, [(1, "a b")], "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    with caplog.at_level(logging.WARNING, logger="schemasaurus_spark"):
+        assert _describe(_Unknown()) == "no.such.code"
+        assert render_message("enum", [object()]) == \
+            "shall be one of values %s"
+        queries._DEDUP_EXACT_HANDLES.append(_Stuck())
+        queries.q_dedup_exact(spark, str(tmp_path))
+    queries._DEDUP_EXACT_HANDLES.pop().unpersist()
+    records = [r for r in caplog.records if r.name == "schemasaurus_spark"]
+    assert [r.exc_info[0] for r in records] == [
+        UnknownMessageError, TypeError, RuntimeError]
+    assert "no.such.code" in records[0].getMessage()
+    assert "unpersist" in records[2].getMessage()

@@ -4,8 +4,11 @@ under real duplicates (the round-2 vacuous-gate fix)."""
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
-from schemasaurus_spark.operators import dedup, text
+from schemasaurus_spark.operators import dedup, spread_scan, text
+
+from plan_walk import executed_nodes, spark_jobs
 
 
 def _corpus(spark):
@@ -41,6 +44,32 @@ def test_unigram_logprob_no_broadcast_hint(spark):
     assert "UnresolvedHint" not in plan and "hints=[broadcast]" not in plan
 
 
+def test_unigram_logprob_total_rides_the_plan(spark):
+    """The default path folds the corpus total into the plan (a 1-row
+    cross join over the vocab aggregate): building the frame starts no
+    job, the vocab exchange is reused, and the whole query takes fewer
+    jobs than a driver-side total followed by the join, with the same
+    scores."""
+    df = _corpus(spark)
+    with spark_jobs(spark, "unigram_build") as build:
+        out = text.unigram_logprob(df)
+    with spark_jobs(spark, "unigram_run") as run:
+        got = sorted(map(tuple, out.collect()))
+    with spark_jobs(spark, "unigram_driver_total") as ref_jobs:
+        tokens = spread_scan(df).select(
+            "doc_id", F.explode(text.words(F.lower("text"))).alias("word"))
+        freq = tokens.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
+        total = freq.agg(F.sum("n").alias("t")).first()["t"]
+        want = sorted(map(tuple, (
+            tokens.join(freq, "word").groupBy("doc_id")
+            .agg(F.round(F.avg(F.log(F.col("n") / F.lit(float(total)))), 6)
+                 .alias("logprob"))).collect()))
+    assert got == want and len(got) == 5
+    assert build == []
+    assert len(run) < len(ref_jobs), (run, ref_jobs)
+    assert any(n.nodeName() == "ReusedExchange" for n in executed_nodes(out))
+
+
 def test_unigram_logprob_max_vocab_unk_fold(spark):
     """Top-K vocab + <unk> tail: every word outside the top K scores the
     folded tail mass; per-doc logprob stays finite and mass-preserving."""
@@ -57,6 +86,32 @@ def test_unigram_logprob_max_vocab_unk_fold(spark):
     # identical across all-tail docs (the fold is uniform)
     assert capped[5] > full[5]
     assert capped[3] == capped[5]
+
+
+def test_unigram_logprob_max_vocab_matches_driver_total(spark):
+    """The max_vocab path reads the corpus total from the plan (the same
+    1-row cross join as the default path): its scores equal the
+    driver-side total and tail mass computed by hand."""
+    df = _corpus(spark)
+    tokens = spread_scan(df).select(
+        "doc_id", F.explode(text.words(F.lower("text"))).alias("word"))
+    freq = {r["word"]: r["n"] for r in
+            tokens.groupBy("word").agg(F.count(F.lit(1)).alias("n")).collect()}
+    total = sum(freq.values())
+    top = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
+    tail_n = max(total - sum(n for _, n in top), 1)
+    vocab = dict(top)
+    want = {}
+    for r in tokens.collect():
+        want.setdefault(r["doc_id"], []).append(
+            math.log(vocab.get(r["word"], tail_n) / total))
+    got = {r["doc_id"]: r["logprob"]
+           for r in text.unigram_logprob(df, max_vocab=3).collect()}
+    assert got == pytest.approx(
+        {d: round(sum(v) / len(v), 6) for d, v in want.items()}, abs=1e-6)
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    out = text.unigram_logprob(empty, max_vocab=3)
+    assert out.count() == 0 and set(out.columns) == {"doc_id", "logprob"}
 
 
 def test_duplicate_clusters_releases_cache(spark):
