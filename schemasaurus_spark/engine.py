@@ -9,7 +9,6 @@ one run over a sequences table:
 * referential check against the sources dimension           → violations
 * per-source null-rate thresholds                           → violations
 * PSI/KS drift vs a checkpointed baseline histogram         → violations
-* one-pass column stats + quantile sketch                   → metrics
 
 All violation families share one schema
 (doc_id, constraint_id, column, value, arg, message) and stack with

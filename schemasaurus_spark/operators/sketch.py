@@ -1,147 +1,49 @@
-"""Mergeable quantile sketch (t-digest-style) via Arrow-vectorized pandas.
+"""Mergeable quantile sketches: Spark's native KLL aggregates.
 
-North-star requirement: "n_tok distribution via t-digest quantile sketches
-... via applyInPandas partial+merge" (BASELINE.json; cf. PAPERS.md quantile-
-sketch entries). The reference has no counterpart (its only aggregation is
-intra-array, ``/root/reference/src/v4validator.js:233-246``); this is the
-engine's custom partial/final aggregate:
+North-star requirement: "n_tok distribution via quantile sketches"
+(BASELINE.json; cf. PAPERS.md quantile-sketch entries). A sketch is one
+``kll_sketch_agg_double`` binary per key, built and merged by codegen'd JVM
+aggregates — no Python worker. KLL merges by construction, so a sketch table
+can be stored and merged with a later snapshot's (:func:`merge_sketches`)
+instead of rescanning; its rank error is bounded by the sketch's ``k``
+(Spark's default).
 
-* **partial**: each partition compresses its values into ≤ ``compression``
-  weighted centroids (quantile-spaced, like a t-digest's size bound) inside
-  ``mapInPandas`` — Arrow batches, no per-row Python.
-* **merge**: centroids (tiny: partitions × compression rows) are grouped per
-  key and re-compressed in ``applyInPandas``.
-* **query**: interpolate quantiles from the merged centroid CDF.
-
-Shuffle volume is O(partitions × compression), independent of row count —
-the property that makes this viable at 10^12 rows.
-
-For plain quantile needs prefer Spark's built-in ``percentile_approx``
-(JVM-side); this sketch exists for checkpointable, mergeable digests that
-can be stored in the baseline table and merged incrementally across
-snapshots.
+An empty sketch (a key whose values are all NULL) makes
+``kll_sketch_get_quantile_*`` abort the job
+(``KLL_INVALID_INPUT_SKETCH_BUFFER``): read quantiles only through
+:func:`sketch_quantiles`, which returns NULL for it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame, functions as F
-
-SKETCH_SCHEMA = "key string, mean double, weight double"
+from pyspark.sql import Column, DataFrame, functions as F
 
 
-def _compress(means: np.ndarray, weights: np.ndarray, compression: int):
-    """Re-compress weighted points into ≤ compression centroids with
-    quantile-spaced boundaries (uniform-in-rank, the scale function k0)."""
-    if len(means) == 0:
-        return means, weights
-    order = np.argsort(means, kind="stable")
-    means, weights = means[order], weights[order]
-    total = weights.sum()
-    if len(means) <= compression:
-        return means, weights
-    # target cumulative-weight boundaries
-    bounds = np.linspace(0, total, compression + 1)
-    cum = np.cumsum(weights)
-    idx = np.searchsorted(cum, bounds[1:-1], side="left")
-    out_means, out_weights = [], []
-    start = 0
-    for end in list(idx) + [len(means)]:
-        end = max(end, start + 1)
-        if start >= len(means):
-            break
-        w = weights[start:end]
-        m = means[start:end]
-        tw = w.sum()
-        if tw > 0:
-            out_means.append(float(np.dot(m, w) / tw))
-            out_weights.append(float(tw))
-        start = end
-    return np.asarray(out_means), np.asarray(out_weights)
+def quantile_sketch(df: DataFrame, column: str, by: str | None = None) -> DataFrame:
+    """``(key string, sketch binary)``: one KLL sketch of ``column`` per
+    ``by`` group (key ``"*"`` without ``by``). A NULL key is its own group;
+    NULL values are skipped."""
+    key = F.col(by).cast("string") if by else F.lit("*")
+    return df.groupBy(key.alias("key")).agg(
+        F.kll_sketch_agg_double(F.col(column).cast("double")).alias("sketch"))
 
 
-def tdigest_sketch(
-    df: DataFrame,
-    column: str,
-    by: str | None = None,
-    compression: int = 128,
-) -> DataFrame:
-    """Return a centroid table (key, mean, weight) — ≤ compression rows per
-    key. Partial per partition (mapInPandas), merge per key (applyInPandas)."""
-
-    key_col = F.col(by).cast("string") if by else F.lit("*")
-    slim = df.select(key_col.alias("key"), F.col(column).cast("double").alias("x")).where(
-        F.col("x").isNotNull()
-    )
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # memory-bounded: re-compress whenever a key's buffer exceeds
-        # ~4x compression — O(compression) state per key, never the raw
-        # partition (buffering every value would hold ~GBs per 100M-row
-        # partition for an algorithm that only needs <= compression
-        # centroids). dropna=False: a NULL group key is a legitimate group
-        # (histogram()/groupBy keep it; silently dropping it loses the
-        # null-`by` population's quantiles).
-        cap = compression * 4
-        acc: dict = {}
-        for pdf in batches:
-            for k, grp in pdf.groupby("key", dropna=False):
-                x = grp["x"].to_numpy()
-                if k in acc:
-                    m0, w0 = acc[k]
-                    m = np.concatenate([m0, x])
-                    w = np.concatenate([w0, np.ones_like(x)])
-                else:
-                    m, w = x, np.ones_like(x)
-                if len(m) > cap:
-                    m, w = _compress(m, w, compression)
-                acc[k] = (m, w)
-        rows = []
-        for k, (m, w) in acc.items():
-            m, w = _compress(m, w, compression)
-            for mm, ww in zip(m, w):
-                rows.append((None if pd.isna(k) else k,
-                             float(mm), float(ww)))
-        yield pd.DataFrame(rows, columns=["key", "mean", "weight"])
-
-    partials = slim.mapInPandas(partial, SKETCH_SCHEMA)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _compress(
-            pdf["mean"].to_numpy(), pdf["weight"].to_numpy(), compression
-        )
-        return pd.DataFrame(
-            {"key": pdf["key"].iloc[0], "mean": m, "weight": w}
-        )
-
-    return partials.groupBy("key").applyInPandas(merge, SKETCH_SCHEMA)
+def merge_sketches(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two sketch tables key by key (e.g. baseline + delta snapshot)."""
+    return a.unionByName(b).groupBy("key").agg(
+        F.kll_merge_agg_double("sketch").alias("sketch"))
 
 
-def merge_sketches(a: DataFrame, b: DataFrame, compression: int = 128) -> DataFrame:
-    """Merge two centroid tables (e.g. baseline + delta snapshot) — the
-    incremental-validation path: sketches are mergeable state."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _compress(pdf["mean"].to_numpy(), pdf["weight"].to_numpy(), compression)
-        return pd.DataFrame({"key": pdf["key"].iloc[0], "mean": m, "weight": w})
-
-    return a.unionByName(b).groupBy("key").applyInPandas(merge, SKETCH_SCHEMA)
+def sketch_quantiles(sketch: Column, probs: list[float]) -> Column:
+    """The quantiles of ``sketch`` at ``probs`` as an array, NULL for an
+    empty sketch."""
+    ranks = F.array(*[F.lit(float(p)) for p in probs])
+    return F.when(F.kll_sketch_get_n_double(sketch) > 0,
+                  F.kll_sketch_get_quantile_double(sketch, ranks))
 
 
-def quantiles_from_sketch(sketch: DataFrame, probs: list[float]) -> dict[str, list[float]]:
-    """Interpolate quantiles from merged centroids (collects ≤ compression
-    rows per key — sketch-sized, never data-sized)."""
-    pdf = sketch.orderBy("key", "mean").toPandas()
-    out: dict[str, list[float]] = {}
-    for k, grp in pdf.groupby("key", dropna=False):
-        means = grp["mean"].to_numpy()
-        weights = grp["weight"].to_numpy()
-        cum = np.cumsum(weights) - weights / 2.0
-        total = weights.sum()
-        qs = [float(np.interp(p * total, cum, means)) for p in probs]
-        out[k] = qs
-    return out
+def quantiles_from_sketch(sketch: DataFrame, probs: list[float]) -> dict:
+    """``{key: [q…]}`` from a sketch table (one row per key collected)."""
+    rows = sketch.select(
+        "key", sketch_quantiles(F.col("sketch"), probs).alias("q")).collect()
+    return {r["key"]: r["q"] for r in rows}

@@ -3,9 +3,10 @@
 SURVEY.md §2.4: the corpus is a static snapshot table, so the streaming
 story is *incremental validation of snapshot deltas* (Iceberg incremental
 read semantics), not Structured Streaming state: each new snapshot's added
-files are validated (cheap — only the delta), lineage/metrics are appended,
-and mergeable sketch state (operators/sketch.py) is folded in, so
-whole-table statistics stay current without rescanning history.
+files are validated (cheap — only the delta) and lineage/metrics are
+appended. Whole-table quantiles need no rescan of history either: a KLL
+sketch table (``operators/sketch.py``) of each delta *can* be merged into
+the previous one with ``merge_sketches``; nothing here stores one yet.
 
 A true Structured Streaming source could feed the same ValidationPlan
 (the plan is a pure projection and works on streaming DataFrames); that

@@ -275,9 +275,10 @@ class ValidationResult:
         filter at all), no second scan, no shuffle; the dynamic-partition
         writer's per-task sort is over one boolean. Contrast
         ``valid_rows()``/``invalid_rows()``: TWO scans each re-evaluating
-        the constraint tree. Counts come from the written parquet FOOTERS
-        (pyarrow metadata.num_rows — zero data read, the lineage module's
-        manifest trick).
+        the constraint tree. Counts come from the parquet FOOTERS of the
+        files this call wrote (pyarrow metadata.num_rows — zero data read,
+        the lineage module's manifest trick); with ``mode="append"`` the
+        files already under ``out_dir`` are not counted.
 
         Static undeclared-column ``additionalProperties`` violations are
         table-scoped, not row-scoped — they never quarantine rows; check
@@ -289,21 +290,26 @@ class ValidationResult:
         a string flag round-trips type-stably (filter with
         ``col(flag_col) == "true"``).
         """
-        out = split_frame(self.validated, flag_col, report_col)
-        (out.write.mode(mode)
-            .option("compression", compression)
-            .partitionBy(flag_col)
-            .parquet(out_dir))
-        counts = {"n_valid": 0, "n_quarantined": 0}
         import glob as _glob
         import os as _os
 
         import pyarrow.parquet as _pq
 
-        for side, key in ((f"{flag_col}=false", "n_valid"),
-                          (f"{flag_col}=true", "n_quarantined")):
-            for f in _glob.glob(_os.path.join(out_dir, side, "*.parquet")):
-                counts[key] += _pq.ParquetFile(f).metadata.num_rows
+        sides = {"n_valid": f"{flag_col}=false",
+                 "n_quarantined": f"{flag_col}=true"}
+
+        def files(side):
+            return set(_glob.glob(_os.path.join(out_dir, side, "*.parquet")))
+
+        before = {key: files(side) for key, side in sides.items()}
+        out = split_frame(self.validated, flag_col, report_col)
+        (out.write.mode(mode)
+            .option("compression", compression)
+            .partitionBy(flag_col)
+            .parquet(out_dir))
+        counts = {key: sum(_pq.ParquetFile(f).metadata.num_rows
+                           for f in files(side) - before[key])
+                  for key, side in sides.items()}
         counts["out_dir"] = out_dir
         return counts
 

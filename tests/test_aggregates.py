@@ -5,6 +5,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
+from plan_walk import spark_jobs
 from schemasaurus_spark import datagen
 from schemasaurus_spark.operators import aggregates as agg
 from schemasaurus_spark.operators import sketch
@@ -82,14 +83,13 @@ def test_drift_psi_ks(spark):
 
 def test_tdigest_sketch_quantiles(spark):
     df = datagen.finalize(datagen.gen_sequences(spark, 3000, 8))
-    sk = sketch.tdigest_sketch(df, "n_tok", by="source", compression=64)
-    per_key = sk.groupBy("key").count().collect()
-    assert all(r["count"] <= 64 for r in per_key)
+    sk = sketch.quantile_sketch(df, "n_tok", by="source")
     q = sketch.quantiles_from_sketch(sk, [0.5])
     exact = {
         r["source"]: r["med"]
         for r in df.groupBy("source").agg(F.expr("percentile(n_tok, 0.5)").alias("med")).collect()
     }
+    assert q.keys() == exact.keys()
     for k, (med,) in q.items():
         assert abs(med - exact[k]) <= max(6.0, 0.15 * exact[k]), (k, med, exact[k])
 
@@ -99,9 +99,9 @@ def test_sketch_merge_is_associative_enough(spark):
     b = datagen.finalize(datagen.gen_sequences(spark, 1000, 4)).withColumn(
         "n_tok", F.least(F.col("n_tok") * 2, F.lit(2048))
     )
-    sa = sketch.tdigest_sketch(a, "n_tok", compression=64)
-    sb = sketch.tdigest_sketch(b, "n_tok", compression=64)
-    merged = sketch.merge_sketches(sa, sb, compression=64)
+    sa = sketch.quantile_sketch(a, "n_tok")
+    sb = sketch.quantile_sketch(b, "n_tok")
+    merged = sketch.merge_sketches(sa, sb)
     q = sketch.quantiles_from_sketch(merged, [0.5])["*"][0]
     union = a.unionByName(b)
     exact = union.selectExpr("percentile(n_tok, 0.5) as m").first()["m"]
@@ -241,15 +241,66 @@ def test_column_stats_skips_map_columns(spark):
 def test_tdigest_keeps_null_group(spark):
     """NULL group keys form their own sketch group (review fix: pandas
     groupby dropna silently lost the null-`by` population)."""
-    from schemasaurus_spark.operators import sketch
-
     df = spark.createDataFrame(
         [(None, float(i)) for i in range(50)]
         + [("web", float(i)) for i in range(50)], "src string, v double")
-    sk = sketch.tdigest_sketch(df, "v", by="src")
+    sk = sketch.quantile_sketch(df, "v", by="src")
     qs = sketch.quantiles_from_sketch(sk, [0.5])
-    assert len(qs) == 2 and any(k is None or (isinstance(k, float))
-                                for k in qs)   # null group present
+    assert len(qs) == 2 and None in qs   # null group present
+
+
+def test_sketch_of_all_null_values_reads_none(spark):
+    """A key whose values are all NULL has an empty KLL sketch, which
+    kll_sketch_get_quantile_* rejects by aborting the job: its quantiles
+    read None and the other keys still read theirs, also after a merge."""
+    df = spark.createDataFrame(
+        [("empty", None)] * 5 + [("web", float(i)) for i in range(11)],
+        "src string, v double")
+    sk = sketch.quantile_sketch(df, "v", by="src")
+    assert sketch.quantiles_from_sketch(sk, [0.5, 0.95]) == {
+        "empty": None, "web": [5.0, 10.0]}
+    merged = sketch.merge_sketches(sk, sk.where("key = 'empty'"))
+    assert sketch.quantiles_from_sketch(merged, [0.5])["empty"] is None
+
+
+# Normalized rank error of a KLL sketch at Spark's default k = 200
+# (DataSketches KllSketch.getNormalizedRankError(200, false), 99 %
+# confidence over every rank).
+KLL_RANK_EPS = 0.0133
+
+
+def test_merged_sketch_within_rank_bound_of_union_sketch(spark):
+    """merge(sketch(A), sketch(B)) answers p50/p95 within KLL's rank bound
+    of sketch(A ∪ B), on inputs large enough that both compact. Values are
+    the distinct integers 0..n-1, so a value's rank is value / n."""
+    n = 40_000
+    df = spark.range(n).select(F.col("id").cast("double").alias("x"))
+    a, b = df.where("x % 7 < 2"), df.where("x % 7 >= 2")   # 2/7 vs 5/7
+    probs = [0.5, 0.95]
+    merged = sketch.quantiles_from_sketch(
+        sketch.merge_sketches(sketch.quantile_sketch(a, "x"),
+                              sketch.quantile_sketch(b, "x")), probs)["*"]
+    union = sketch.quantiles_from_sketch(
+        sketch.quantile_sketch(df, "x"), probs)["*"]
+    for p, qm, qu in zip(probs, merged, union):
+        assert abs(qu / n - p) <= KLL_RANK_EPS, (p, qu)
+        assert abs(qm / n - qu / n) <= 2 * KLL_RANK_EPS, (p, qm, qu)
+
+
+def test_tdigest_accuracy_query_jobs(spark, tmp_path):
+    """Sketch and exact quantiles come from one aggregate: building plus
+    collecting tdigest_accuracy takes at most 3 Spark jobs (the parquet
+    read, then the aggregate)."""
+    from schemasaurus_spark.queries import q_tdigest_accuracy
+
+    spark.range(3000).selectExpr(
+        "id AS doc_id", "element_at(array('en', 'de', NULL), "
+        "CAST(id % 3 AS INT) + 1) AS lang", "(id * 7919) % 5000 AS n_chars",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    with spark_jobs(spark, "tdigest_accuracy") as jobs:
+        rows = q_tdigest_accuracy(spark, str(tmp_path)).collect()
+    assert len(rows) == 6 and all(r["within_tol"] for r in rows)
+    assert len(jobs) <= 3, jobs
 
 
 def test_referential_scaled_matches_broadcast_variant(spark):

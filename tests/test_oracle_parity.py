@@ -55,8 +55,20 @@ SLOW_DATA_FILTERS = re.compile(
     r"lambdafunction|md5\(|regexp_replace\(|size\((?!\w+#\d+L?[,)])")
 
 
+# Executor-Python plan nodes. Only the queries whose kernels are Arrow
+# UDFs by design may carry them: ann_ivf and multimodal (mapInPandas
+# kernels) and conformance_all (the pandas_udf Conform family).
+PYTHON_EXEC_NODES = {"MapInPandasExec", "FlatMapGroupsInPandasExec",
+                     "ArrowEvalPythonExec", "BatchEvalPythonExec"}
+PYTHON_BY_DESIGN = {"ann_ivf", "multimodal", "conformance_all"}
+
+
 def _assert_plan_pins(name, sdf):
     nodes = executed_nodes(sdf)
+    if name not in PYTHON_BY_DESIGN:
+        py = [n.getClass().getSimpleName() for n in nodes
+              if n.getClass().getSimpleName() in PYTHON_EXEC_NODES]
+        assert not py, f"{name}: executor-Python nodes {py}"
     # DataFilters read from the scan nodes: the plan string abbreviates
     # each list to 100 characters
     filters = [n.dataFilters().mkString(", ") for n in nodes

@@ -104,6 +104,18 @@ def test_write_split_clean_table_empty_quarantine(spark, tmp_path):
                       "out_dir": str(tmp_path / "s2")}
 
 
+def test_write_split_append_counts_only_its_own_rows(spark, tmp_path):
+    """A second append reports the rows it wrote, not its predecessor's
+    files under the same partition directories."""
+    res = validate(_table(spark, tmp_path), _suite())
+    out_dir = str(tmp_path / "appended")
+    first = res.write_split(out_dir, mode="append")
+    second = res.write_split(out_dir, mode="append")
+    assert first == second == {"n_valid": 2, "n_quarantined": 4,
+                               "out_dir": out_dir}
+    assert spark.read.parquet(out_dir).count() == 12
+
+
 def test_job_quarantine_flag(spark, tmp_path):
     """--quarantine DIR on the packaged job: report carries the split
     counts and the clean partition holds exactly the passing rows."""

@@ -51,23 +51,23 @@ def test_column_stats_fused_quantiles(spark):
 def test_tdigest_quantiles_accuracy_and_merge(spark):
     """Sketch quantiles land within rank tolerance of the exact quantiles,
     and merging two half-sketches equals sketching the whole (mergeability
-    is what makes the digest checkpointable across snapshots)."""
+    is what makes the sketch checkpointable across snapshots)."""
     import pyspark.sql.functions as F
     from schemasaurus_spark.operators.sketch import (
-        merge_sketches, quantiles_from_sketch, tdigest_sketch,
+        merge_sketches, quantile_sketch, quantiles_from_sketch,
     )
 
     n = 20_000
     df = spark.range(n).select(
         (F.col("id") % 1000).cast("double").alias("x"))  # uniform 0..999
-    sk = tdigest_sketch(df, "x", compression=64)
+    sk = quantile_sketch(df, "x")
     q = quantiles_from_sketch(sk, [0.5, 0.95])["*"]
     assert abs(q[0] - 499.5) < 25          # p50 of uniform(0..999)
     assert abs(q[1] - 949.5) < 25
 
-    a = tdigest_sketch(df.where("x < 500"), "x", compression=64)
-    b = tdigest_sketch(df.where("x >= 500"), "x", compression=64)
-    merged = merge_sketches(a, b, compression=64)
+    a = quantile_sketch(df.where("x < 500"), "x")
+    b = quantile_sketch(df.where("x >= 500"), "x")
+    merged = merge_sketches(a, b)
     qm = quantiles_from_sketch(merged, [0.5])["*"]
     assert abs(qm[0] - 499.5) < 30
 
