@@ -260,13 +260,14 @@ def main() -> int:
             print(f"error: --stat-bounds is not valid JSON: {e}",
                   file=sys.stderr)
             return 2
-        known_sb = {"min_mean", "max_mean", "min_value", "max_value"}
+        from schemasaurus_spark.operators.aggregates import STAT_BOUND_KEYS
+
         if not isinstance(bounds, dict) or not all(
-                isinstance(s, dict) and not (set(s) - known_sb)
+                isinstance(s, dict) and not (set(s) - STAT_BOUND_KEYS)
                 and all(isinstance(x, (int, float)) for x in s.values())
                 for s in bounds.values()):
             print(f"error: --stat-bounds must map columns to "
-                  f"{{{'/'.join(sorted(known_sb))}: number}} specs",
+                  f"{{{'/'.join(sorted(STAT_BOUND_KEYS))}: number}} specs",
                   file=sys.stderr)
             return 2
     null_rate = None
@@ -459,123 +460,21 @@ def main() -> int:
     }
     agg_pass = True
     if args.aggregate:
-        from schemasaurus_spark.operators import aggregates as agg
+        from schemasaurus_spark.engine import AggregateChecks, aggregate_checks
         from schemasaurus_spark.plans.baseline import BaselineStore
+        from schemasaurus_spark.session import local_frame
 
         df = store.read(spark, args.snapshot)
         if pre_transform is not None:
             # aggregates must see the SAME view of the table as row
             # validation (defaults/casts/pruning applied)
             df = pre_transform(df)
-        uniq_key = ([k.strip() for k in args.unique_key.split(",")]
-                    if args.unique_key else suite.id_column)
-        if isinstance(uniq_key, list):
-            missing = [k for k in uniq_key if k not in df.columns]
-            if missing:
-                print(f"error: --unique-key columns {missing} are not "
-                      f"columns of the table", file=sys.stderr)
-                return 2
-        uniq = agg.uniqueness_check(df, uniq_key)
-        report["unique_total"] = uniq.screen_total
-        report["unique_distinct"] = uniq.screen_distinct
-        report["unique_pass"] = uniq.screened_clean
-        agg_pass &= uniq.screened_clean
-
-        ref_dim_df = None
-        if args.ref_dim:
-            if args.ref_column not in df.columns:
-                print(f"error: --ref-column {args.ref_column!r} is not a "
-                      f"column of the table", file=sys.stderr)
-                return 2
-            dim = spark.read.parquet(args.ref_dim)
-            if args.ref_scaled:
-                # the scaled path must never broadcast the dim, so it
-                # cannot ride the fused (broadcast-join) scan; its screen
-                # already counted the missing rows (no semi-join re-count)
-                n_ref = agg.referential_check_scaled(
-                    df, dim, args.ref_column,
-                    id_column=suite.id_column).n_rows
-                report["ref_missing_rows"] = int(n_ref)
-                report["ref_pass"] = n_ref == 0
-                agg_pass &= n_ref == 0
-            else:
-                # broadcastable dim: the miss COUNT rides the fused scan
-                # below — no dedicated referential pass over the facts
-                ref_dim_df = dim
-
-        edges = [float(x) for x in args.drift_edges.split(",")]
         drift_by = None if args.drift_by in ("", "none") else args.drift_by
-        # table-dependent config validation (columns exist, numeric dtype)
-        # — still exit 2, not a mid-run crash wearing exit 1
-        from pyspark.sql import types as T
-
-        nr_missing = [c for c in (null_rate or {}) if c not in df.columns]
-        if nr_missing:
-            print(f"error: --null-rate columns {nr_missing} are not "
-                  f"columns of the table", file=sys.stderr)
-            return 2
-        for c in (bounds or {}):
-            if c not in df.columns:
-                print(f"error: --stat-bounds column {c!r} is not a "
-                      f"column of the table", file=sys.stderr)
-                return 2
-            if not isinstance(df.schema[c].dataType, T.NumericType):
-                print(f"error: --stat-bounds column {c!r} is "
-                      f"{df.schema[c].dataType.simpleString()} — "
-                      f"mean/min/max bounds need a numeric column",
-                      file=sys.stderr)
-                return 2
-
-        def _row_dicts(checked):
-            return [
-                {"group": r["doc_id"], "constraint_id": r["constraint_id"],
-                 "column": r["column"], "value": r["value"], "arg": r["arg"]}
-                for r in checked.violations.collect()]
-
-        def _report_stat_bounds(fused):
-            ok = True
-            if bounds:
-                sbv = _row_dicts(agg.stat_bound_violations_from_stats(
-                    spark, fused, bounds))
-                report["stat_bound_violations"] = sbv
-                ok &= not sbv
-            if null_rate:
-                nrv = _row_dicts(agg.null_rate_violations_from_stats(
-                    spark, fused, null_rate))
-                report["null_rate_violations"] = nrv
-                ok &= not nrv
-            if ref_dim_df is not None:
-                n_ref = int(fused.ref_missing_total())
-                report["ref_missing_rows"] = n_ref
-                report["ref_pass"] = n_ref == 0
-                ok &= n_ref == 0
-            return ok
-
-        need_extra_fused = bool(bounds or null_rate
-                                or ref_dim_df is not None)
-
         bs = BaselineStore(args.state)
         loaded = bs.load(spark, args.drift_column)
         if loaded is None:
-            # bootstrap: freeze the histogram AND how it was built —
-            # comparing later runs under a different grouping/form would
-            # silently flag every group as drifted (round-4 review)
-            hist_fn = (agg.array_histogram if args.drift_array
-                       else agg.histogram)
-            cur_hist = hist_fn(df, args.drift_column, edges, by=drift_by)
-            bs.save(cur_hist, args.drift_column, edges,
-                    config={"drift_by": drift_by,
-                            "is_array": bool(args.drift_array)})
-            report["drift"] = "baseline_bootstrapped"
-            if need_extra_fused:
-                # no drift compare on the bootstrap run: stat bounds,
-                # null-rate ceilings, and the referential miss count share
-                # ONE fused pass of their own, grouped like the drift
-                agg_pass &= _report_stat_bounds(agg.fused_aggregate_pass(
-                    df, null_rate_by=drift_by,
-                    null_rate_cols=list(null_rate or []),
-                    dim=ref_dim_df, ref_column=args.ref_column,
-                    stat_bound_cols=list(bounds or [])))
+            base_hist = None
+            edges = [float(x) for x in args.drift_edges.split(",")]
         else:
             frozen = bs.config(args.drift_column)
             if frozen and (frozen.get("drift_by") != drift_by
@@ -586,36 +485,66 @@ def main() -> int:
                       f"--drift-by/--drift-array or re-baseline under a "
                       f"fresh --state", file=sys.stderr)
                 return 2
-            base_hist, base_edges = loaded
-            # ONE fused scan for the drift histogram AND any
-            # --stat-bounds/--null-rate partials and the --ref-dim miss
-            # count (the facade's shape): none of them cost an extra pass
-            # over the table in compare mode
-            fused = agg.fused_aggregate_pass(
-                df,
-                null_rate_by=drift_by,
-                null_rate_cols=list(null_rate or []),
-                dim=ref_dim_df, ref_column=args.ref_column,
-                drift_column=args.drift_column,
-                edges=list(base_edges),
-                drift_by=drift_by,
-                drift_is_array=bool(args.drift_array),
-                stat_bound_cols=list(bounds or []),
-            )
-            results = agg.drift_from_counts(
-                fused.drift_counts(),
-                agg.hist_rows_to_map(base_hist.collect()),
-                len(base_edges) - 1, args.drift_column,
-                psi_threshold=0.2, ks_threshold=0.15)
+            base_hist, edges = loaded
+        # one engine call: uniqueness is one scan, and the drift histogram,
+        # --stat-bounds/--null-rate partials and the --ref-dim miss count
+        # share one fused scan, grouped like the drift
+        try:
+            res = aggregate_checks(df, AggregateChecks(
+                unique_key=([k.strip() for k in args.unique_key.split(",")]
+                            if args.unique_key else suite.id_column),
+                sources_dim=(spark.read.parquet(args.ref_dim)
+                             if args.ref_dim else None),
+                ref_column=args.ref_column, ref_scaled=args.ref_scaled,
+                null_rate_max=null_rate, null_rate_by=drift_by,
+                stat_bounds=bounds, drift_baseline=base_hist,
+                drift_column=args.drift_column, drift_edges=edges,
+                drift_by=drift_by, drift_is_array=bool(args.drift_array),
+            ), suite.id_column)
+        except ValueError as e:
+            # a table-dependent config error is exit 2, not a mid-run
+            # crash wearing exit 1
+            print(f"error: {e}", file=sys.stderr)
+            return 2
+        agg_pass = res.n_agg == 0
+        report["unique_total"] = res.unique.screen_total
+        report["unique_distinct"] = res.unique.screen_distinct
+        report["unique_pass"] = res.unique.screened_clean
+        if res.ref_missing_rows is not None:
+            report["ref_missing_rows"] = res.ref_missing_rows
+            report["ref_pass"] = res.ref_missing_rows == 0
+        for key, checked in (("stat_bound_violations", res.stat_bounds),
+                             ("null_rate_violations", res.null_rate)):
+            if checked is not None:
+                report[key] = [
+                    {"group": r["doc_id"], "constraint_id": r["constraint_id"],
+                     "column": r["column"], "value": r["value"],
+                     "arg": r["arg"]}
+                    for r in checked.violations.collect()]
+        if loaded is None:
+            # bootstrap: freeze the histogram AND how it was built —
+            # comparing later runs under a different grouping/form would
+            # silently flag every group as drifted (round-4 review). The
+            # keys keep the group column's type, as later compares read it.
+            gtype = (df.schema[drift_by].dataType.simpleString()
+                     if drift_by else "string")
+            bs.save(local_frame(
+                spark, [(g, b, n) for g, m in res.drift_counts.items()
+                        for b, n in m.items()],
+                f"group_key {gtype}, bucket int, count bigint"),
+                args.drift_column, edges,
+                config={"drift_by": drift_by,
+                        "is_array": bool(args.drift_array)})
+            report["drift"] = "baseline_bootstrapped"
+        else:
             report["drift"] = [
                 {"group": r.group_key, "psi": round(r.psi, 6),
                  "ks": round(r.ks, 6), "pass": r.passed}
-                for r in results
+                for r in res.drift
             ]
-            agg_pass &= all(r.passed for r in results)
-            if need_extra_fused:
-                agg_pass &= _report_stat_bounds(fused)
         if args.embedding_column:
+            from schemasaurus_spark.operators import aggregates as agg
+
             ecol = args.embedding_column
             key = f"{ecol}__centroid"
             eloaded = bs.load(spark, key)

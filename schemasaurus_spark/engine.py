@@ -7,8 +7,14 @@ one run over a sequences table:
 * per-partition pass/fail verdicts                          → verdicts
 * doc_id uniqueness (exact salted two-phase, unconditional) → violations
 * referential check against the sources dimension           → violations
-* per-source null-rate thresholds                           → violations
+* per-source null-rate thresholds and stat bounds           → violations
 * PSI/KS drift vs a checkpointed baseline histogram         → violations
+
+``aggregate_checks`` is the aggregate half on its own, and the only code
+that orchestrates the aggregate family. Its callers: ``run_full_validation``
+(the library, the ``full_validation`` registry query, the benchmark's gate)
+and the cluster job's ``--aggregate`` (``jobs/validate_job.py``), whose row
+validation is the checkpointed, resumable run instead.
 
 All violation families share one schema
 (doc_id, constraint_id, column, value, arg, message) and stack with
@@ -23,7 +29,6 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from schemasaurus_spark.compiler import VIOLATIONS_COL
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.operators import aggregates as agg
 from schemasaurus_spark.session import local_frame
@@ -45,7 +50,7 @@ AUTO_UNIQUE_KEY = "__auto_doc_id__"
 class AggregateChecks:
     """Configuration for the aggregate/statistical half of the suite."""
 
-    unique_key: Optional[str] = AUTO_UNIQUE_KEY
+    unique_key: str | Sequence[str] | None = AUTO_UNIQUE_KEY  # list = composite
     sources_dim: Optional[DataFrame] = None
     ref_column: str = "source"
     # True = the dimension is too large to broadcast (a doc-id-like FK
@@ -80,13 +85,28 @@ class AggregateChecks:
 
 
 @dataclass
-class FullValidationResult:
-    row: ValidationResult
+class AggregateResult:
+    """What :func:`aggregate_checks` found, per check family. Every field
+    but ``agg_violations`` is already on the driver: reading it runs
+    nothing."""
+
     agg_violations: DataFrame  # stacked aggregate-check violations (lazy)
     # rows of agg_violations, counted on the driver from the totals each
     # check already brought back — agg_violations is never run to count it
     n_agg: int
-    drift: list = field(default_factory=list)
+    unique: Optional[agg.UniquenessResult] = None  # None: no unique_key
+    ref_missing_rows: Optional[int] = None         # None: no sources_dim
+    null_rate: Optional[agg.CheckViolations] = None    # local relation
+    stat_bounds: Optional[agg.CheckViolations] = None  # local relation
+    drift: list = field(default_factory=list)  # DriftResult; [] = no baseline
+    # {group_key: {bucket: count}} of this table, keyed like a baseline
+    # histogram — what a caller without a baseline bootstraps one from
+    drift_counts: dict = field(default_factory=dict)
+
+
+@dataclass(kw_only=True)
+class FullValidationResult(AggregateResult):
+    row: ValidationResult
 
     def violations(self) -> DataFrame:
         """Row-level + aggregate violations, one schema."""
@@ -117,138 +137,156 @@ def _empty_violations_df(spark) -> DataFrame:
                    "value string, arg string, message string")
 
 
-def run_full_validation(df: DataFrame, suite: Suite,
-                        checks: AggregateChecks | None = None
-                        ) -> FullValidationResult:
-    """Scan budget (SURVEY §4 "one-pass stats", round-3 VERDICT #1): the
-    ENTIRE aggregate family — every null-rate column, the drift histogram,
-    and the referential miss count — is ONE fused grouped-aggregation scan
-    (``fused_aggregate_pass``); uniqueness is a second scan (its grouping
-    key is the row key, not a dimension — unfusable by shape). All
-    null-rate, stat-bound and drift violation frames are then driver-built
-    LocalTableScans. ``agg_violations`` stays lazy: on a CLEAN table
-    consuming it re-reads nothing, but on a DIRTY one its uniqueness part
-    re-runs the salted aggregation and its referential part the anti-join
-    (or the scaled semi-join) — both re-scan the table to list offending
-    rows. ``n_agg`` never runs it: every check's violation count is
-    already on the driver (uniqueness ``screen_total - screen_distinct``,
-    the fused referential miss total, the scaled screen's row count, the
-    lengths of the driver-built row lists) —
-    tests/test_scan_budget.py pins the 2-scan budget."""
-    checks = checks or AggregateChecks()
-    spark = df.sparkSession
-    row_res = validate(df, suite)
+def _resolve(df: DataFrame, checks: AggregateChecks):
+    """The (unique_key, drift_by) that ``checks`` resolve to on ``df``.
+    Raises ValueError before any Spark job for every column the config
+    names that ``df`` lacks: a misconfigured check must be LOUD, never a
+    silent skip (a false clean verdict) nor an opaque UNRESOLVED_COLUMN
+    from inside a pass that runs after the uniqueness scan."""
+    cols = set(df.columns)
+
+    def require(what, names, hint=""):
+        missing = [c for c in names if c not in cols]
+        if missing:
+            raise ValueError(
+                f"AggregateChecks.{what} {missing} not column(s) of the "
+                f"table ({sorted(cols)}){hint}")
 
     unique_key = checks.unique_key
     if unique_key == AUTO_UNIQUE_KEY:
         # default behavior: check doc_id when present, skip when absent —
         # only an EXPLICITLY configured missing key is a hard error
-        unique_key = "doc_id" if "doc_id" in df.columns else None
-    elif unique_key and unique_key not in df.columns:
-        # silent skip = false clean verdict on a duplicate-ridden table;
-        # a misconfigured check must be LOUD, not absent
-        raise ValueError(
-            f"AggregateChecks.unique_key '{checks.unique_key}' is not a "
-            f"column of the table ({sorted(df.columns)}); set "
-            f"unique_key=None to opt out of the uniqueness check")
-    if checks.sources_dim is not None and checks.ref_column not in df.columns:
-        raise ValueError(
-            f"AggregateChecks.ref_column '{checks.ref_column}' is not a "
-            f"column of the table; referential check cannot run")
-    for c in (checks.stat_bounds or {}):
-        if c not in df.columns:
-            raise ValueError(
-                f"AggregateChecks.stat_bounds column '{c}' is not a "
-                f"column of the table ({sorted(df.columns)})")
+        unique_key = "doc_id" if "doc_id" in cols else None
+    elif unique_key:
+        require("unique_key",
+                [unique_key] if isinstance(unique_key, str) else unique_key,
+                "; set unique_key=None to opt out of the uniqueness check")
     if checks.ref_scaled and checks.sources_dim is None:
-        # a misconfigured check must be LOUD, not absent (same contract
-        # as unique_key above and the job's --ref-scaled-without---ref-dim
-        # exit-2 gate)
         raise ValueError(
             "AggregateChecks.ref_scaled=True without sources_dim — the "
             "scaled referential check has no dimension to check against")
-    if ((checks.null_rate_max or checks.stat_bounds)
-            and checks.null_rate_by is not None
-            and checks.null_rate_by not in df.columns):
-        # the default null_rate_by='source' must not crash sourceless
-        # tables with an opaque UNRESOLVED_COLUMN from inside the fused
-        # pass (round-4 fixed the drift-only variant of this)
-        raise ValueError(
-            f"AggregateChecks.null_rate_by '{checks.null_rate_by}' is not "
-            f"a column of the table — set null_rate_by=None for a global "
-            f"(ungrouped) null-rate/stat-bound check")
+    if checks.sources_dim is not None:
+        require("ref_column", [checks.ref_column])
+    require("null_rate_max", checks.null_rate_max or {})
+    agg.check_stat_bounds(checks.stat_bounds or {}, df.schema)
+    if (checks.null_rate_max or checks.stat_bounds) and checks.null_rate_by:
+        require("null_rate_by", [checks.null_rate_by],
+                " — set null_rate_by=None for a global (ungrouped) "
+                "null-rate/stat-bound check")
     if checks.drift_baseline is not None and not checks.drift_edges:
         raise ValueError(
             "AggregateChecks.drift_baseline is set but drift_edges is "
             "empty — the frozen bucket edges are required to compare "
             "against the checkpointed baseline")
-
-    # every check's violations with their count, known on the driver
-    parts: list[agg.CheckViolations] = []
-    if unique_key:
-        uniq = agg.uniqueness_check(df, unique_key)
-        # sequence(2, occ) emits occ - 1 rows per duplicated key
-        parts.append(agg.CheckViolations(
-            uniq.violations, uniq.screen_total - uniq.screen_distinct))
-
-    # ONE fused scan for null-rate + drift + referential-miss-count.
-    null_rate_max = checks.null_rate_max or {}
     drift_by = (checks.null_rate_by
                 if checks.drift_by == "__same_as_null_rate_by__"
                 else checks.drift_by)
+    if checks.drift_edges:
+        require("drift_column", [checks.drift_column])
+        if drift_by:
+            require("drift_by", [drift_by],
+                    " (an unset drift_by falls back to null_rate_by) — set "
+                    "drift_by=None for one global histogram")
+    return unique_key, drift_by
+
+
+def aggregate_checks(df: DataFrame, checks: AggregateChecks | None = None,
+                     id_column: str = "doc_id") -> AggregateResult:
+    """Every aggregate check ``checks`` configures, over ``df``.
+
+    Scan budget (SURVEY §4 "one-pass stats", round-3 VERDICT #1): the
+    ENTIRE aggregate family — every null-rate and stat-bound column, the
+    drift histogram, and the referential miss count — is ONE fused
+    grouped-aggregation scan (``fused_aggregate_pass``); uniqueness is a
+    second scan (its grouping key is the row key, not a dimension —
+    unfusable by shape). All null-rate, stat-bound and drift violation
+    frames are then driver-built LocalTableScans. ``agg_violations`` stays
+    lazy: on a CLEAN table consuming it re-reads nothing, but on a DIRTY
+    one its uniqueness part re-runs the salted aggregation and its
+    referential part the anti-join (or the scaled semi-join) — both
+    re-scan the table to list offending rows. ``n_agg`` never runs it:
+    every check's violation count is already on the driver —
+    tests/test_scan_budget.py pins the 2-scan budget.
+
+    The drift histogram rides the fused pass whenever ``drift_edges`` is
+    set; PSI/KS are compared only against a ``drift_baseline``. Without
+    one, ``drift_counts`` carries this table's histogram to bootstrap
+    from. ``id_column`` names the offending rows of a dirty referential
+    check."""
+    checks = checks or AggregateChecks()
+    spark = df.sparkSession
+    unique_key, drift_by = _resolve(df, checks)
+    null_rate_max = checks.null_rate_max or {}
+    stat_bounds = checks.stat_bounds or {}
     # scaled referential keeps the dim OUT of the fused pass (the fused
     # ref-miss count broadcasts the dim, which ref_scaled says it cannot)
     fused_dim = None if checks.ref_scaled else checks.sources_dim
-    stat_bounds = checks.stat_bounds or {}
-    need_fused = (bool(null_rate_max) or bool(stat_bounds)
-                  or fused_dim is not None
-                  or checks.drift_baseline is not None)
-    drift_results = []
+    res = AggregateResult(_empty_violations_df(spark), 0)
+    # every check's violations with their count, known on the driver
+    parts: list[agg.CheckViolations] = []
+    if unique_key:
+        res.unique = agg.uniqueness_check(df, unique_key)
+        # sequence(2, occ) emits occ - 1 rows per duplicated key
+        parts.append(agg.CheckViolations(
+            res.unique.violations,
+            res.unique.screen_total - res.unique.screen_distinct))
     if checks.sources_dim is not None and checks.ref_scaled:
         parts.append(agg.referential_check_scaled(
             df, checks.sources_dim, checks.ref_column,
-            id_column=suite.id_column))
-    if need_fused:
+            id_column=id_column))
+        res.ref_missing_rows = parts[-1].n_rows
+    if (null_rate_max or stat_bounds or fused_dim is not None
+            or checks.drift_edges):
         fused = agg.fused_aggregate_pass(
             df,
             null_rate_cols=list(null_rate_max),
             null_rate_by=checks.null_rate_by,
             dim=fused_dim,
             ref_column=checks.ref_column,
-            drift_column=(checks.drift_column
-                          if checks.drift_baseline is not None else None),
+            drift_column=checks.drift_column if checks.drift_edges else None,
             edges=list(checks.drift_edges),
             drift_by=drift_by,
             drift_is_array=checks.drift_is_array,
             stat_bound_cols=list(stat_bounds),
         )
-        n_ref_missing = (fused.ref_missing_total()
-                         if fused_dim is not None else 0)
-        if n_ref_missing > 0:
-            # dirty path only: a targeted anti-join lists the offending
-            # rows; the clean path never takes this scan
-            parts.append(agg.CheckViolations(agg.referential_check(
-                df, checks.sources_dim, checks.ref_column,
-                id_column=suite.id_column), n_ref_missing))
+        if fused_dim is not None:
+            res.ref_missing_rows = fused.ref_missing_total()
+            if res.ref_missing_rows > 0:
+                # dirty path only: a targeted anti-join lists the
+                # offending rows; the clean path never takes this scan
+                parts.append(agg.CheckViolations(agg.referential_check(
+                    df, checks.sources_dim, checks.ref_column,
+                    id_column=id_column), res.ref_missing_rows))
         if null_rate_max:
-            parts.append(agg.null_rate_violations_from_stats(
-                spark, fused, null_rate_max))
+            res.null_rate = agg.null_rate_violations_from_stats(
+                spark, fused, null_rate_max)
+            parts.append(res.null_rate)
         if stat_bounds:
-            parts.append(agg.stat_bound_violations_from_stats(
-                spark, fused, stat_bounds))
+            res.stat_bounds = agg.stat_bound_violations_from_stats(
+                spark, fused, stat_bounds)
+            parts.append(res.stat_bounds)
+        res.drift_counts = fused.drift_counts()
         if checks.drift_baseline is not None:
-            n = len(checks.drift_edges) - 1
-            drift_results = agg.drift_from_counts(
-                fused.drift_counts(),
+            res.drift = agg.drift_from_counts(
+                res.drift_counts,
                 agg.hist_rows_to_map(checks.drift_baseline.collect()),
-                n, checks.drift_column,
+                len(checks.drift_edges) - 1, checks.drift_column,
                 checks.psi_threshold, checks.ks_threshold)
             parts.append(agg.drift_violations(
-                spark, drift_results, checks.psi_threshold,
+                spark, res.drift, checks.psi_threshold,
                 checks.ks_threshold))
-
-    stacked = _empty_violations_df(spark)
     for p in parts:
-        stacked = stacked.unionByName(p.violations.select(*VIOLATION_COLS))
-    return FullValidationResult(row_res, stacked,
-                                sum(p.n_rows for p in parts), drift_results)
+        res.agg_violations = res.agg_violations.unionByName(
+            p.violations.select(*VIOLATION_COLS))
+    res.n_agg = sum(p.n_rows for p in parts)
+    return res
+
+
+def run_full_validation(df: DataFrame, suite: Suite,
+                        checks: AggregateChecks | None = None
+                        ) -> FullValidationResult:
+    """The row-level suite (:func:`validate`) plus
+    :func:`aggregate_checks` over the same table."""
+    row = validate(df, suite)
+    return FullValidationResult(
+        row=row, **vars(aggregate_checks(df, checks, suite.id_column)))

@@ -36,7 +36,7 @@ import math
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from schemasaurus_spark.messages import render_message
 from schemasaurus_spark.session import local_frame
@@ -55,8 +55,6 @@ def column_stats(df: DataFrame, columns: list[str] | None = None,
     The whole stats suite is ONE job / ONE scan — see module docstring.
     """
     if columns is None:
-        from pyspark.sql import types as T
-
         # MapType is unorderable (min/max raise); default to everything else
         columns = [f.name for f in df.schema.fields
                    if not isinstance(f.dataType, T.MapType)]
@@ -243,21 +241,11 @@ def fused_aggregate_pass(
     for c in null_rate_cols:
         aggs.append(F.sum(F.col(c).isNull().cast("long"))
                     .alias(f"{c}__nulls"))
+    check_stat_bounds(dict.fromkeys(stat_bound_cols, ()), df.schema)
     for c in stat_bound_cols:
         # Deequ-style stat bounds ride the SAME fused scan: count/sum/
         # min/max are all decomposable (map-side combined) and nulls are
         # skipped natively by the aggregate functions.
-        # Non-numeric columns must refuse LOUDLY: cast("double") on a
-        # string column yields all-NULL stats and the check silently
-        # passes forever (the worst failure mode for a validator)
-        from pyspark.sql import types as T
-
-        dt = df.schema[c].dataType
-        if not isinstance(dt, T.NumericType):
-            raise ValueError(
-                f"stat_bound column {c!r} has non-numeric type "
-                f"{dt.simpleString()} — mean/min/max bounds need a "
-                f"numeric column")
         x = F.col(c).cast("double")
         aggs += [F.count(x).alias(f"{c}__sb_n"),
                  F.sum(x).alias(f"{c}__sb_sum"),
@@ -327,6 +315,37 @@ def null_rate_violations_from_stats(spark, fused: FusedAggStats,
     ), len(offender_rows))
 
 
+# the spec keys of one stat_bounds column: per-group mean bounds and hard
+# bounds on the group's observed min/max
+STAT_BOUND_KEYS = frozenset({"min_mean", "max_mean", "min_value", "max_value"})
+
+
+def check_stat_bounds(stat_bounds: dict, schema: T.StructType | None = None
+                      ) -> None:
+    """Refuse a stat_bounds config before any scan: an unknown spec key,
+    and, given the table's ``schema``, a missing or non-numeric column.
+    cast("double") on a string column yields all-NULL stats and the check
+    silently passes forever (the worst failure mode for a validator)."""
+    for c, spec in stat_bounds.items():
+        bad = set(spec) - STAT_BOUND_KEYS
+        if bad:
+            raise ValueError(
+                f"unknown stat_bounds keys {sorted(bad)} for column {c!r}; "
+                f"known: {sorted(STAT_BOUND_KEYS)}")
+        if schema is None:
+            continue
+        if c not in schema.names:
+            raise ValueError(
+                f"stat_bounds column {c!r} is not a column of the table "
+                f"({sorted(schema.names)})")
+        dt = schema[c].dataType
+        if not isinstance(dt, T.NumericType):
+            raise ValueError(
+                f"stat_bounds column {c!r} has non-numeric type "
+                f"{dt.simpleString()} — mean/min/max bounds need a "
+                f"numeric column")
+
+
 def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
                                      stat_bounds: dict) -> CheckViolations:
     """Driver-built Deequ-style aggregate assertions from the fused pass
@@ -337,13 +356,7 @@ def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
     A group whose column is entirely NULL has no mean and no observed
     min/max — it emits nothing (null PRESENCE belongs to null_rate/
     NotNull, the engine-wide convention)."""
-    known = {"min_mean", "max_mean", "min_value", "max_value"}
-    for c, spec in stat_bounds.items():
-        bad = set(spec) - known
-        if bad:
-            raise ValueError(
-                f"unknown stat_bounds keys {sorted(bad)} for column {c!r}; "
-                f"known: {sorted(known)}")
+    check_stat_bounds(stat_bounds)
     rows = []
 
     def _emit(gk, code, c, observed, kind, bound):

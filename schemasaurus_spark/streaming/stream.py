@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from schemasaurus_spark.compiler import VIOLATIONS_COL, compile_suite
 from schemasaurus_spark.dsl import Suite
+from schemasaurus_spark.operators.aggregates import check_stat_bounds
 
 
 def apply_plan_stream(stream_df: DataFrame, suite: Suite) -> DataFrame:
@@ -137,13 +138,9 @@ def windowed_drift(stream_df: DataFrame, column: str, edges: list[float],
     n = len(edges) - 1
     if len(baseline_probs) != n:
         raise ValueError(f"need {n} baseline probs, got {len(baseline_probs)}")
-    known = {"min_mean", "max_mean", "min_value", "max_value"}
-    for c, spec in (stat_bounds or {}).items():
-        bad = set(spec) - known
-        if bad:
-            raise ValueError(
-                f"unknown stat_bounds keys {sorted(bad)} for column {c!r}; "
-                f"known: {sorted(known)}")
+    # the batch engine's config check: an all-null-window skip over a
+    # non-numeric column's all-NULL stats would be a silent forever-pass
+    check_stat_bounds(stat_bounds or {}, stream_df.schema)
     x = F.col(column).cast("double")
     w = stream_df.withWatermark(time_col, watermark)
     extra_aggs = []
@@ -153,17 +150,6 @@ def windowed_drift(stream_df: DataFrame, column: str, edges: list[float],
             extra_aggs.append(F.sum(F.col(c).isNull().cast("long"))
                               .alias(f"__{c}_nulls"))
     for c in (stat_bounds or {}):
-        from pyspark.sql import types as T
-
-        dt = stream_df.schema[c].dataType
-        if not isinstance(dt, T.NumericType):
-            # cast("double") of a string column = all-NULL stats = the
-            # all-null-window skip fires every window: a silent forever-
-            # pass. Refuse loudly (same rule as the batch fused pass).
-            raise ValueError(
-                f"stat_bound column {c!r} has non-numeric type "
-                f"{dt.simpleString()} — mean/min/max bounds need a "
-                f"numeric column")
         xc = F.col(c).cast("double")
         extra_aggs += [F.avg(xc).alias(f"__{c}_mean"),
                        F.min(xc).alias(f"__{c}_min"),

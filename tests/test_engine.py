@@ -4,8 +4,11 @@ import pyspark.sql.functions as F
 
 from schemasaurus_spark import Enum, Minimum, NotNull, Pattern, Suite
 from schemasaurus_spark import datagen
-from schemasaurus_spark.engine import AggregateChecks, run_full_validation
+from schemasaurus_spark.engine import (
+    AggregateChecks, aggregate_checks, run_full_validation)
 from schemasaurus_spark.operators import aggregates as agg
+
+from plan_walk import spark_jobs
 
 
 def _suite():
@@ -159,8 +162,44 @@ def test_full_validation_misconfig_is_loud(spark):
         run_full_validation(df, suite, AggregateChecks(
             null_rate_max={"x": 0.1}))
 
+    # every column the config names is checked before the first Spark job
+    # (the uniqueness scan used to run before a bad stat-bound column or a
+    # drift grouping failed inside the fused pass)
+    text = spark.createDataFrame([(1, "a")], "doc_id long, s string")
+    edges = [0.0, 1.0, 2.0]
+    for frame, checks, match in [
+            # drift_by falls back to the default null_rate_by='source'
+            (df, AggregateChecks(drift_column="x", drift_edges=edges),
+             "drift_by"),
+            (df, AggregateChecks(drift_column="nope", drift_edges=edges,
+                                 drift_by=None), "drift_column"),
+            (df, AggregateChecks(null_rate_max={"nope": 0.1},
+                                 null_rate_by=None), "null_rate_max"),
+            (text, AggregateChecks(stat_bounds={"s": {"max_mean": 1.0}},
+                                   null_rate_by=None), "non-numeric"),
+            (df, AggregateChecks(unique_key=["doc_id", "nope"]),
+             "unique_key")]:
+        with spark_jobs(spark, "misconfig") as jobs:
+            with pytest.raises(ValueError, match=match):
+                run_full_validation(frame, suite, checks)
+        assert jobs == [], (match, jobs)
+
     # ...and the global form works
     res = run_full_validation(df, suite, AggregateChecks(
         stat_bounds={"x": {"max_mean": 10.0}}, null_rate_max={"x": 0.5},
         null_rate_by=None))
     assert res.is_valid()
+
+
+def test_composite_unique_key_matches_uniqueness_check(spark):
+    """A list unique_key is a composite key through the engine: the same
+    screen numbers and violation rows as uniqueness_check itself."""
+    df = datagen.finalize(datagen.gen_sequences(spark, 300, 4))
+    key = ["source", "n_tok"]                 # collides heavily
+    want = agg.uniqueness_check(df, key)
+    got = aggregate_checks(df, AggregateChecks(unique_key=key)).unique
+    assert not want.screened_clean
+    assert ((got.screen_total, got.screen_distinct, got.screened_clean)
+            == (want.screen_total, want.screen_distinct, False))
+    assert (sorted(map(tuple, got.violations.collect()))
+            == sorted(map(tuple, want.violations.collect())))

@@ -2,6 +2,7 @@
 checks with baseline bootstrap/compare (north rule: packaged job,
 resumable, drift vs checkpointed baseline)."""
 
+import importlib.util
 import json
 import os
 import subprocess
@@ -25,6 +26,21 @@ def _run_job(*args):
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     assert lines, f"no JSON from job:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}"
     return json.loads(lines[-1]), out.returncode
+
+
+def _run_inproc(monkeypatch, capsys, *argv):
+    """Run the job's ``main()`` in this process and session — no JVM
+    start, and a test can intercept its Spark actions. Returns (report,
+    exit code)."""
+    spec = importlib.util.spec_from_file_location(
+        "validate_job_inproc", os.path.join(REPO, "jobs", "validate_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(sys, "argv", ["validate_job.py", *argv])
+    rc = job.main()
+    out = [l for l in capsys.readouterr().out.splitlines()
+           if l.startswith("{")]
+    return json.loads(out[-1]), rc
 
 
 def test_job_aggregate_baseline_bootstrap_then_drift(spark, tmp_path):
@@ -265,17 +281,10 @@ def test_job_aggregate_scan_budget_on_resume(spark, tmp_path, monkeypatch,
     (uniqueness screen + drift histogram = exactly 2 actions). Pinned by
     intercepting every eager collect IN-PROCESS and counting executed
     plans whose file-scan reads the table path."""
-    import importlib.util
-
     from pyspark.sql.classic.dataframe import DataFrame
 
     from schemasaurus_spark import datagen
     from schemasaurus_spark.sources.storage import SnapshotStore
-
-    spec = importlib.util.spec_from_file_location(
-        "validate_job_inproc", os.path.join(REPO, "jobs", "validate_job.py"))
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
 
     table = str(tmp_path / "tbl")
     state = str(tmp_path / "state")
@@ -283,11 +292,7 @@ def test_job_aggregate_scan_budget_on_resume(spark, tmp_path, monkeypatch,
         datagen.finalize(datagen.gen_sequences(spark, 400, 4)))
 
     def run(argv):
-        monkeypatch.setattr(sys, "argv", ["validate_job.py", *argv])
-        rc = job.main()
-        out = [l for l in capsys.readouterr().out.splitlines()
-               if l.startswith("{")]
-        return json.loads(out[-1]), rc
+        return _run_inproc(monkeypatch, capsys, *argv)
 
     args = ["--table", table, "--state", state, "--aggregate",
             "--drift-by", "none"]
@@ -661,3 +666,103 @@ def test_job_config_cli_precedence_and_typing(spark, tmp_path):
             capture_output=True, text=True, timeout=300, cwd=REPO,
             env=_job_env())
         assert out2.returncode == 2, (bad, out2.stderr[-300:])
+
+
+def test_job_bootstrap_baseline_equals_histogram(spark, tmp_path,
+                                                 monkeypatch, capsys):
+    """A bootstrap saves the engine's fused drift counts as the baseline:
+    the same rows as agg.histogram (scalar) and agg.array_histogram
+    (--drift-array), with the group key in the group column's own type —
+    so the next run's compare reads the same keys (no drift)."""
+    import pyspark.sql.functions as F
+
+    from schemasaurus_spark import datagen
+    from schemasaurus_spark.operators import aggregates as agg
+    from schemasaurus_spark.plans.baseline import BaselineStore
+    from schemasaurus_spark.sources.storage import SnapshotStore
+
+    table = str(tmp_path / "tbl")
+    store = SnapshotStore(table)
+    store.append(datagen.finalize(
+        datagen.gen_sequences(spark, 400, 4)
+        .withColumn("shard", (F.col("i") % 3).cast("int"))))
+    df = store.read(spark)
+
+    def baseline(state, column, hist_fn, by):
+        hist, edges = BaselineStore(state).load(spark, column)
+        want = hist_fn(df, column, edges, by=by)
+        assert (hist.schema["group_key"].dataType
+                == want.schema["group_key"].dataType)
+        return set(map(tuple, hist.collect())), set(map(tuple, want.collect()))
+
+    scalar = str(tmp_path / "s1")
+    args = ["--table", table, "--state", scalar, "--aggregate",
+            "--drift-by", "shard"]
+    rep, _ = _run_inproc(monkeypatch, capsys, *args)
+    assert rep["drift"] == "baseline_bootstrapped"
+    got, want = baseline(scalar, "n_tok", agg.histogram, "shard")
+    assert got == want and {g for g, _, _ in got} == {0, 1, 2}
+    rep2, _ = _run_inproc(monkeypatch, capsys, *args)
+    assert sorted(d["group"] for d in rep2["drift"]) == [0, 1, 2]
+    assert all(d["pass"] and d["psi"] == 0 for d in rep2["drift"]), rep2
+
+    array = str(tmp_path / "s2")
+    rep3, _ = _run_inproc(
+        monkeypatch, capsys, "--table", table, "--state", array,
+        "--aggregate", "--drift-by", "none", "--drift-column", "tokens",
+        "--drift-array", "--drift-edges", "0,1000,5000,10000,25000,50257")
+    assert rep3["drift"] == "baseline_bootstrapped"
+    got, want = baseline(array, "tokens", agg.array_histogram, None)
+    assert got == want and got
+
+
+def test_job_bootstrap_with_extra_checks_reads_table_twice(
+        spark, tmp_path, monkeypatch, capsys):
+    """A bootstrap with --stat-bounds/--null-rate takes 2 table-reading
+    actions (uniqueness + the fused pass, which also carries the drift
+    histogram the baseline is saved from), not 3: no histogram scan of
+    its own. Counted over every collect and parquet write whose plan
+    reads the table, on a resume so row validation reads nothing."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from schemasaurus_spark import datagen
+    from schemasaurus_spark.sources.storage import SnapshotStore
+
+    table = str(tmp_path / "tbl")
+    state = str(tmp_path / "state")
+    SnapshotStore(table).append(
+        datagen.finalize(datagen.gen_sequences(spark, 400, 4)))
+    _, rc = _run_inproc(monkeypatch, capsys, "--table", table,
+                        "--state", state)
+    assert rc == 0
+
+    reads: list[str] = []
+    real_collect, real_parquet = DataFrame.collect, DataFrameWriter.parquet
+
+    def note(df):
+        if any(table in f for f in df.inputFiles()):
+            reads.append(df._jdf.queryExecution().toString())
+
+    def counting_collect(self):
+        note(self)
+        return real_collect(self)
+
+    def counting_parquet(self, *a, **kw):
+        note(self._df)
+        return real_parquet(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    rep, rc = _run_inproc(
+        monkeypatch, capsys, "--table", table, "--state", state,
+        "--aggregate", "--drift-by", "none",
+        "--stat-bounds", '{"n_tok": {"min_value": 1, "max_value": 2048}}',
+        "--null-rate", '{"n_tok": 0.5}')
+    monkeypatch.setattr(DataFrame, "collect", real_collect)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+
+    assert rc == 0 and rep["drift"] == "baseline_bootstrapped", rep
+    assert rep["files_validated"] == 0
+    assert rep["stat_bound_violations"] == rep["null_rate_violations"] == []
+    assert len(reads) == 2, f"expected 2 table reads, saw {len(reads)}"
