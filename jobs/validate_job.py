@@ -332,7 +332,10 @@ def main() -> int:
     from schemasaurus_spark.sources.storage import SnapshotStore
     from schemasaurus_spark.plans.lineage import ValidationCheckpoint
 
-    spark = get_spark("validate_job")
+    # no console progress bar: its \r-joined text would run into the
+    # job's own `error: …` line on stderr
+    spark = get_spark("validate_job",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     store = SnapshotStore(args.table)
     if args.suggest:
         from schemasaurus_spark import suite_to_json_schema

@@ -1,12 +1,23 @@
-"""ConstraintCompiler — DSL → Catalyst expression plan.
+"""ConstraintCompiler — DSL → one SQL expression per plan.
 
 The Spark re-expression of the reference compiler
 (``/root/reference/src/compiler.js``): where the reference walks the schema
 once and emits specialized JavaScript source (``compiler.js:135-211``), this
 compiler walks the :class:`~schemasaurus_spark.dsl.Suite` once and emits
-Catalyst ``Column`` expression trees. WholeStageCodegen then plays the role
-of ``new Function(...)`` + inlining (``compiler.js:194-211``,
-``src/int/code.js:42-57``): the per-row work is fused JVM bytecode.
+Spark SQL text with every constraint argument folded in as a literal
+(:mod:`schemasaurus_spark.sqlexpr`). ``F.expr`` parses the finished text
+once — the analog of ``new Function(...)`` (``compiler.js:194-211``) — and
+WholeStageCodegen fuses the per-row work into JVM bytecode
+(``src/int/code.js:42-57``). Compiling makes no py4j round trip.
+
+SQL text has two traps, handled in ``sqlexpr`` and nowhere else: Spark
+substitutes ``${…}`` everywhere in the text before parsing (string
+literals and backticked names included), and a bare ``1.5`` parses as
+``DECIMAL(2,1)``. Literals and names therefore only enter the text through
+``sqlexpr.render``/``sqlexpr.col``. Columns supplied by callers —
+``Conform`` callables, ``dsl.register_constraint`` hooks — are combined
+in mixed mode: a builder that receives one lifts its SQL operands with
+``F.expr`` and returns a Column-backed value.
 
 Design invariants (SURVEY.md §4):
 
@@ -52,18 +63,17 @@ Both contexts derive from them, like the reference's one recursive
 from __future__ import annotations
 
 import json
-import operator
 from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
-from functools import reduce
 from types import MappingProxyType
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from schemasaurus_spark import dsl
+from schemasaurus_spark import dsl, sqlexpr as S
 from schemasaurus_spark.functions.formats import get_format
 from schemasaurus_spark.messages import render_message
+from schemasaurus_spark.sqlexpr import Sql
 
 # Uniform violation record — field-for-field analog of the reference error
 # object {code, message, value, arg, path} (v4validator.js:45-51); the path
@@ -89,76 +99,36 @@ def _render_arg(arg) -> Optional[str]:
     return str(arg)
 
 
-# Lazily-built constant Columns, cached per process (round 6): every
-# pyspark function call is a ~1ms py4j round trip, and the compiler builds
-# the SAME constant expressions (empty violation array, true/false/null
-# literals) once per fragment — hundreds of times per suite, tens of
-# thousands of times in the batched conformance/official harnesses.
-# Columns are immutable expression trees, safe to share across plans,
-# sessions and threads; lazy because F.lit needs a live gateway.
-_CONST_CACHE: dict = {}
-
-
-def _const(key, make) -> Column:
-    c = _CONST_CACHE.get(key)
-    if c is None:
-        if len(_CONST_CACHE) > 10_000:
-            # bound the per-process cache: keys include user-authored
-            # message/code strings, and a long-lived service compiling
-            # unbounded ad-hoc suites must not leak — past the cap just
-            # build uncached
-            return make()
-        c = _CONST_CACHE[key] = make()
-    return c
-
-
-def _lit_true() -> Column:
-    return _const("true", lambda: F.lit(True))
-
-
-def _lit_false() -> Column:
-    return _const("false", lambda: F.lit(False))
-
-
-def _lit_null_str() -> Column:
-    return _const("null_str", lambda: F.lit(None).cast("string"))
-
-
-def _vio_struct(code: str, column, value: Column, arg, message: str) -> Column:
-    # `column` is usually a static label; PatternProperties passes a Column
-    # expression so the label can carry the offending map key (col[key]).
-    # Constraint codes, column labels, messages and rendered args repeat
-    # heavily across fragments (233-case conformance batches reuse a
-    # handful of codes), so the fully-aliased literal sub-Columns are
-    # cached by value — only the `value` cast is built per call.
+def _vio_struct(code: str, column, value, arg, message: str) -> Sql:
+    # `column` is usually a static label; PatternProperties passes an
+    # expression so the label can carry the offending map key (col[key])
     rendered = _render_arg(arg)
-    return F.struct(
-        _const(("cid", code),
-               lambda: F.lit(code).alias("constraint_id")),
-        (column.alias("column") if isinstance(column, Column)
-         else _const(("col", column),
-                     lambda: F.lit(column).alias("column"))),
-        value.cast("string").alias("value"),
-        _const(("arg", rendered),
-               lambda: (_lit_null_str() if rendered is None
-                        else F.lit(rendered).cast("string")).alias("arg")),
-        _const(("msg", message),
-               lambda: F.lit(message).alias("message")),
+    return S.struct(
+        constraint_id=S.lit(code),
+        column=column if isinstance(column, Sql) else S.lit(column),
+        value=S.as_sql(value).cast("string"),
+        arg=S.lit(None).cast("string") if rendered is None else S.lit(rendered),
+        message=S.lit(message),
     )
 
 
-def _empty_violations() -> Column:
-    return _const("empty_violations",
-                  lambda: F.lit([]).cast(VIOLATION_ARRAY_TYPE))
+def _empty_violations() -> Sql:
+    # untyped: CASE/concat coerce it to the violation struct array of the
+    # other operand, and the text stays short (parse time is ~1 us a char)
+    return Sql("array()")
 
 
-def _scalar_fragment(
-    failed: Column, code: str, column: str, value: Column, arg, message: str
-) -> Column:
-    """0-or-1-element violation array for a scalar check."""
-    return F.when(failed, F.array(_vio_struct(code, column, value, arg, message))).otherwise(
-        _empty_violations()
-    )
+def _typed_empty_violations() -> Sql:
+    return Sql(f"CAST(array() AS {VIOLATION_ARRAY_TYPE.simpleString()})")
+
+
+def _scalar_fragment(failed, code: str, column: str, value, arg,
+                     message: str) -> Sql:
+    """0-or-1-element violation array for a scalar check. ``failed`` and
+    ``value`` may be Columns (extension hooks build their own)."""
+    return S.when(failed, S.array(_vio_struct(code, column, value, arg,
+                                              message))).otherwise(
+        _empty_violations())
 
 
 @dataclass
@@ -166,38 +136,42 @@ class CompiledColumn:
     """All fragments for one column, in DSL order."""
 
     column: str
-    fragments: list[Column] = dc_field(default_factory=list)  # array<struct> each
+    fragments: list[Sql] = dc_field(default_factory=list)  # array<struct> each
     # conjunction of all pass-predicates (used by combinator branches)
-    valid: Optional[Column] = None
+    valid: Optional[Sql] = None
 
-    def add_valid(self, ok: Column) -> None:
+    def add_valid(self, ok: Sql) -> None:
         self.valid = ok if self.valid is None else self.valid & ok
 
 
 @dataclass
 class ValidationPlan:
     """The compiled artifact — analog of the specialized closure the
-    reference returns (``compiler.js:201-211``). Holds the single violation
-    expression; ``apply`` projects it onto a DataFrame.
+    reference returns (``compiler.js:201-211``). Holds the row's violation
+    array and pass predicate as SQL; ``apply`` projects the array onto a
+    DataFrame, lifted to a Column with one ``F.expr`` (mixed mode: one per
+    run of SQL text next to a caller's Column).
 
-    Fast-path/slow-path split: ``row_valid`` is the conjunction of all pass
+    Fast-path/slow-path split: ``valid`` is the conjunction of all pass
     predicates — cheap (no struct/array construction). The violation-array
     concat is evaluated ONLY for failing rows, so the common clean row costs
     little more than the scan itself (the columnar analog of the reference's
     early-exit codegen, ``compiler.js:132`` / ``ctx.stop``)."""
 
     suite: dsl.Suite
-    fragments: list[Column]
+    violations: Sql  # the row's violation array
     suite_hash: str
-    row_valid: Optional[Column] = None
+    valid: Optional[Sql] = None
+
+    @property
+    def row_valid(self) -> Optional[Column]:
+        """The row's pass predicate, NULL counted as failing."""
+        if self.valid is None:
+            return None
+        return S.lift(S.coalesce(self.valid, False))
 
     def violations_expr(self) -> Column:
-        if not self.fragments:
-            return _empty_violations()
-        full = self.fragments[0] if len(self.fragments) == 1 else F.concat(*self.fragments)
-        if self.row_valid is not None:
-            return F.when(~self.row_valid, full).otherwise(_empty_violations())
-        return full
+        return S.lift(self.violations)
 
     def apply(self, df: DataFrame) -> DataFrame:
         """One narrow projection: df + ``__violations`` array column."""
@@ -215,9 +189,18 @@ class ValidationPlan:
         DataFilter, where it is evaluated interpreted per row — measured
         77 s vs 7 s for a 16M-row suite at 32 cores, with NEGATIVE core
         scaling (BENCH.md round 2 'filter-pushdown pathology')."""
-        cols = [F.col(self.suite.id_column), *[F.col(c) for c in extra_cols]]
-        return df.withColumn(VIOLATIONS_COL, self.violations_expr()).select(
-            *cols, F.posexplode(VIOLATIONS_COL).alias("__pos", "__v"))
+        return explode_validated(self.apply(df), self.suite.id_column,
+                                 *extra_cols)
+
+
+def explode_validated(validated: DataFrame, id_column: str,
+                      *extra_cols: str) -> DataFrame:
+    """The posexplode of :meth:`ValidationPlan.explode_violations` over a
+    frame that already carries ``__violations``: reusing the analysed
+    column skips a second parse and analysis of the plan's SQL."""
+    cols = [F.col(id_column), *[F.col(c) for c in extra_cols]]
+    return validated.select(
+        *cols, F.posexplode(VIOLATIONS_COL).alias("__pos", "__v"))
 
 
 class SuiteCompileError(ValueError):
@@ -284,11 +267,11 @@ def _has_path(schema: Optional[T.StructType], col: str) -> bool:
 @dataclass(frozen=True)
 class Keyword:
     """One scalar keyword: the dtypes it constrains (None = every dtype),
-    its pass predicate ``ok(compiler, constraint, x)`` over a value Column
-    and its violation arg."""
+    its pass predicate ``ok(compiler, constraint, x)`` over a value
+    expression and its violation arg."""
 
     kinds: Optional[tuple]
-    ok: Callable[..., Column]
+    ok: Callable[..., Sql]
     arg: Callable[[dsl.Constraint], object] = lambda c: c.value
 
 
@@ -298,20 +281,18 @@ def _no_arg(c):
 
 _STRING, _ARRAY, _MAP = (T.StringType,), (T.ArrayType,), (T.MapType,)
 
-# Module-level and never mutated, so the threads that build official-suite
-# batches share it safely.
 KEYWORDS = MappingProxyType({
     dsl.NotNull: Keyword(None, lambda k, c, x: x.isNotNull(), _no_arg),
     dsl.Enum: Keyword(None, lambda k, c, x: x.isin(list(c.values)),
                       lambda c: list(c.values)),
-    dsl.Minimum: Keyword(_NUMERIC, lambda k, c, x: x >= F.lit(c.value)),
+    dsl.Minimum: Keyword(_NUMERIC, lambda k, c, x: x >= S.lit(c.value)),
     dsl.ExclusiveMinimum: Keyword(_NUMERIC,
-                                  lambda k, c, x: x > F.lit(c.value)),
-    dsl.Maximum: Keyword(_NUMERIC, lambda k, c, x: x <= F.lit(c.value)),
+                                  lambda k, c, x: x > S.lit(c.value)),
+    dsl.Maximum: Keyword(_NUMERIC, lambda k, c, x: x <= S.lit(c.value)),
     dsl.ExclusiveMaximum: Keyword(_NUMERIC,
-                                  lambda k, c, x: x < F.lit(c.value)),
+                                  lambda k, c, x: x < S.lit(c.value)),
     dsl.MultipleOf: Keyword(
-        _NUMERIC, lambda k, c, x: (x / F.lit(float(c.value))) % 1.0 == 0.0),
+        _NUMERIC, lambda k, c, x: (x / S.lit(float(c.value))) % 1.0 == 0.0),
     dsl.MinLength: Keyword(_STRING, lambda k, c, x: k._str_len(x) >= c.value),
     dsl.MaxLength: Keyword(_STRING, lambda k, c, x: k._str_len(x) <= c.value),
     # JS .match() is an unanchored search → rlike, not full match
@@ -320,16 +301,16 @@ KEYWORDS = MappingProxyType({
     dsl.Format: Keyword(_STRING,
                         lambda k, c, x: x.rlike(get_format(c.name).regexp),
                         lambda c: get_format(c.name).message),
-    dsl.MinItems: Keyword(_ARRAY, lambda k, c, x: F.size(x) >= c.value),
-    dsl.MaxItems: Keyword(_ARRAY, lambda k, c, x: F.size(x) <= c.value),
+    dsl.MinItems: Keyword(_ARRAY, lambda k, c, x: S.size(x) >= c.value),
+    dsl.MaxItems: Keyword(_ARRAY, lambda k, c, x: S.size(x) <= c.value),
     # pass test only: the row context extracts duplicate occurrences itself
     dsl.UniqueItems: Keyword(
-        _ARRAY, lambda k, c, x: F.size(x) == F.size(F.array_distinct(x)),
+        _ARRAY, lambda k, c, x: S.size(x) == S.size(S.array_distinct(x)),
         _no_arg),
     dsl.MinProperties: Keyword(
-        _MAP, lambda k, c, x: F.size(F.map_keys(x)) >= c.value),
+        _MAP, lambda k, c, x: S.size(S.map_keys(x)) >= c.value),
     dsl.MaxProperties: Keyword(
-        _MAP, lambda k, c, x: F.size(F.map_keys(x)) <= c.value),
+        _MAP, lambda k, c, x: S.size(S.map_keys(x)) <= c.value),
 })
 
 # dtype guards of the container keywords, which compile through their own
@@ -353,7 +334,7 @@ def applies(c: dsl.Constraint, dt) -> bool:
     return dt is None or kinds is None or isinstance(dt, kinds)
 
 
-def _null_aware_true(x: Column) -> Column:
+def _null_aware_true(x: Sql) -> Sql:
     """Element predicate of a keyword that does not apply to the element
     dtype: it never fails a present value. Items, ``fields=`` and map-value
     compilers skip it (``static_true``); a tuple POSITION stays null-strict,
@@ -373,7 +354,7 @@ def _element_fail(field: Optional[str], pred, required: bool):
         v = x if field is None else x[field]
         if required:
             return v.isNull()
-        return v.isNotNull() & ~F.coalesce(pred(v), _lit_false())
+        return v.isNotNull() & ~S.coalesce(pred(v), False)
     return fail
 
 
@@ -381,7 +362,7 @@ def _strict_fail(pred):
     """Null-strict fail builder (tuple positions and extras): a null
     element fails."""
     def fail(x):
-        return ~F.coalesce(pred(x), _lit_false())
+        return ~S.coalesce(pred(x), False)
     return fail
 
 
@@ -399,6 +380,9 @@ class ConstraintCompiler:
         # cycle guards — the reference's $$visited marker (compiler.js:136-141)
         self._visiting: set[int] = set()   # nested constraint objects in flight
         self._ref_stack: set[str] = set()  # Ref names in flight
+        # one typed empty array for the conform fragments and the plan's
+        # fast path: next to a Conform's Column it is lifted once, not twice
+        self._empty = _typed_empty_violations()
 
     # -- public -------------------------------------------------------------
 
@@ -420,21 +404,32 @@ class ConstraintCompiler:
                 raise SuiteCompileError(
                     f"suite references missing column(s) {missing}; "
                     f"available: {sorted(self.schema.fieldNames())}")
-        fragments: list[Column] = []
-        valids: list[Column] = []
+        fragments: list[Sql] = []
+        valids: list[Sql] = []
         for col_name, constraints in self.suite.columns.items():
             cc = self._compile_column(col_name, list(constraints))
             fragments.extend(cc.fragments)
             if cc.valid is not None:
-                valids.append(F.coalesce(cc.valid, _lit_false()))
+                valids.append(cc.valid)
         for label, constraint in self.suite.row:
-            cc = self._compile_one(label, F.col(label) if self._has(label) else F.lit(None), constraint, null_guard=False)
+            cc = self._compile_one(
+                label, S.col(label) if self._has(label) else S.lit(None),
+                constraint, null_guard=False)
             fragments.extend(cc.fragments)
             if cc.valid is not None:
-                valids.append(F.coalesce(cc.valid, _lit_false()))
-        row_valid = _and_all(valids) if valids else None
-        return ValidationPlan(self.suite, fragments, self.suite.fingerprint(),
-                              row_valid)
+                valids.append(cc.valid)
+        # the typed empty array gives the result the violation struct's
+        # type, every field nullable, whatever literals the fragments hold
+        if not valids:
+            return ValidationPlan(self.suite,
+                                  S.concat(self._empty, *fragments),
+                                  self.suite.fingerprint())
+        row_valid = _and_all(valids)
+        # a NULL ``valid`` evaluates the fragments, which are exact
+        violations = S.when(row_valid, self._empty).otherwise(
+            _concat_all(fragments))
+        return ValidationPlan(self.suite, violations,
+                              self.suite.fingerprint(), row_valid)
 
     # -- internals ----------------------------------------------------------
 
@@ -445,7 +440,7 @@ class ConstraintCompiler:
         return render_message(code, arg, overrides=self.suite.messages,
                               gettext=getattr(self.suite, "gettext", None))
 
-    def _str_len(self, col: Column) -> Column:
+    def _str_len(self, col: Sql) -> Sql:
         """String length under the suite's strLength mode (the reference's
         pluggable strLength, v4validator.js:15-17) — all expression-only:
         codepoints = length(); utf16 = astral chars count 2 (JS
@@ -453,18 +448,18 @@ class ConstraintCompiler:
         into their base character."""
         mode = getattr(self.suite, "str_length", "codepoints")
         if mode == "codepoints":
-            return F.length(col)
+            return S.length(col)
         if mode == "utf16":
-            return F.length(
-                F.regexp_replace(col, r"[\x{10000}-\x{10FFFF}]", "__"))
+            return S.length(
+                S.regexp_replace(col, r"[\x{10000}-\x{10FFFF}]", "__"))
         if mode == "graphemes":
-            return F.length(F.regexp_replace(col, r"\p{M}", ""))
+            return S.length(S.regexp_replace(col, r"\p{M}", ""))
         raise SuiteCompileError(f"unknown str_length mode '{mode}'")
 
     def _compile_column(self, col_name: str, constraints: list[dsl.Constraint]) -> CompiledColumn:
-        col = F.col(col_name)
+        col = S.col(col_name)
         cc = CompiledColumn(col_name)
-        valids: list[Column] = []
+        valids: list[Sql] = []
         for c in constraints:
             # null short-circuit parity (ctx.stop(), v4validator.js:80):
             # every non-required check null-skips via its guard, so a null
@@ -477,7 +472,7 @@ class ConstraintCompiler:
         return cc
 
     def _compile_one(
-        self, col_name: str, col: Column, c: dsl.Constraint, null_guard: bool
+        self, col_name: str, col: Sql, c: dsl.Constraint, null_guard: bool
     ) -> CompiledColumn:
         """Cycle-guarded dispatch: a combinator/Ref whose branch structure
         reaches itself would recurse forever (the reference marks visited
@@ -499,7 +494,7 @@ class ConstraintCompiler:
         return self._dispatch_one(col_name, col, c, null_guard)
 
     def _dispatch_one(
-        self, col_name: str, col: Column, c: dsl.Constraint, null_guard: bool
+        self, col_name: str, col: Sql, c: dsl.Constraint, null_guard: bool
     ) -> CompiledColumn:
         """Dispatch table — the analog of selector matching
         (``src/int/matchers.js:31-63``)."""
@@ -518,10 +513,10 @@ class ConstraintCompiler:
                 # for existing properties, v4validator.js:67-79 + the
                 # properties descent) — a null optional parent is silent;
                 # the parent's own NotNull governs its absence
-                parent = F.col(col_name.rsplit(".", 1)[0])
+                parent = S.col(col_name.rsplit(".", 1)[0])
                 failed = parent.isNotNull() & failed
             out.fragments.append(
-                _scalar_fragment(failed, "required", col_name, F.lit(None), None,
+                _scalar_fragment(failed, "required", col_name, S.lit(None), None,
                                  m or self._msg("required"))
             )
             out.valid = ~failed
@@ -533,7 +528,7 @@ class ConstraintCompiler:
             # `failed` must be null-safe; the guard converts null input →
             # pass for every non-required check (optional-absent
             # semantics, v4validator.js:67-79)
-            failed = F.coalesce(~kw.ok(self, c, col), _lit_true())
+            failed = S.coalesce(~kw.ok(self, c, col), True)
             if null_guard:
                 failed = col.isNotNull() & failed
             arg = kw.arg(c)
@@ -575,14 +570,14 @@ class ConstraintCompiler:
                 # absent (null) value skips combinator checks entirely —
                 # ctx.stop() on missing optional value (v4validator.js:67-79)
                 out.fragments = [
-                    F.when(col.isNotNull(), f).otherwise(_empty_violations())
+                    S.when(col.isNotNull(), f).otherwise(_empty_violations())
                     for f in out.fragments
                 ]
-                out.valid = col.isNull() | F.coalesce(out.valid, _lit_true())
+                out.valid = col.isNull() | S.coalesce(out.valid, True)
 
         elif isinstance(c, dsl.Not):
             sub = self._compile_branch(col_name, c.branch)
-            failed = F.coalesce(sub.valid, _lit_true())  # branch VALID ⇒ 'not' fails
+            failed = S.coalesce(sub.valid, True)  # branch VALID ⇒ 'not' fails
             if null_guard:
                 failed = col.isNotNull() & failed
             out.fragments.append(
@@ -607,8 +602,12 @@ class ConstraintCompiler:
             ext = dsl.get_extension(type(c))
             if ext is None:
                 raise SuiteCompileError(f"Unknown constraint {type(c).__name__}")
-            # V4Validator.extend analog: plugin appends fragments itself
-            ext(self, out, col_name, col, c, m, null_guard)
+            # V4Validator.extend analog: the plugin appends fragments itself,
+            # built from a real Column (mixed mode)
+            ext(self, out, col_name, S.lift(col), c, m, null_guard)
+            out.fragments = [S.as_sql(f) for f in out.fragments]
+            if out.valid is not None:
+                out.valid = S.as_sql(out.valid)
         return out
 
     @contextmanager
@@ -643,13 +642,13 @@ class ConstraintCompiler:
         types = c.type if isinstance(c.type, (list, tuple)) else [c.type]
         dt = _dtype(self.schema, col_name)
 
-        def runtime_probe(tname) -> Column:
+        def runtime_probe(tname) -> Sql:
             if tname == "null":
                 return col.isNull()
             if not c.runtime:
                 sm = _static_type_match(tname, dt)
                 if sm is not None:
-                    return F.lit(sm) | col.isNull()
+                    return S.lit(sm) | col.isNull()
             # cast-probe path (permissive string ingest; try_cast is ANSI-safe)
             if tname == "integer":
                 d = col.try_cast("double")
@@ -657,10 +656,10 @@ class ConstraintCompiler:
             if tname == "number":
                 return col.isNull() | col.try_cast("double").isNotNull()
             if tname == "boolean":
-                return col.isNull() | F.lower(col.cast("string")).isin("true", "false")
+                return col.isNull() | S.lower(col.cast("string")).isin(["true", "false"])
             if tname in ("string", "array", "object"):
                 sm = _static_type_match(tname, dt)
-                return F.lit(sm if sm is not None else True) | col.isNull()
+                return S.lit(sm if sm is not None else True) | col.isNull()
             raise SuiteCompileError(f"Unknown type '{tname}'")
 
         probes = [(t, runtime_probe(t)) for t in types]
@@ -668,12 +667,12 @@ class ConstraintCompiler:
         # note: `type: null` means the value MUST be null; a null value passes
         # any type per the guard convention except when explicitly checked.
         for tname, probe in probes:
-            failed = ~F.coalesce(any_ok, _lit_false()) & ~F.coalesce(probe, _lit_false())
+            failed = ~S.coalesce(any_ok, False) & ~S.coalesce(probe, False)
             if tname == "null":
-                failed = ~F.coalesce(any_ok, _lit_false())
+                failed = ~S.coalesce(any_ok, False)
             out.fragments.append(_scalar_fragment(
                 failed, tname, col_name, col, None, m or self._msg(tname)))
-        out.add_valid(F.coalesce(any_ok, _lit_false()))
+        out.add_valid(S.coalesce(any_ok, False))
 
     def _row_container_null(self, out, col_name, col, code, null_guard):
         """ROW-level (unguarded) container constraint on a NULL value: fail
@@ -714,16 +713,16 @@ class ConstraintCompiler:
         # among the first i elements; eqNullSafe so null duplicates (which
         # array_distinct folds, making has_dup fire) are also EXTRACTED —
         # plain == yields NULL on null elements and silently drops them
-        dup_occurrences = F.filter(
-            col, lambda x, i: F.exists(F.slice(col, 1, i),
+        dup_occurrences = S.filter(
+            col, lambda x, i: S.exists(S.slice(col, 1, i),
                                        lambda y: y.eqNullSafe(x))
         )
-        structs = F.transform(
+        structs = S.transform(
             dup_occurrences,
             lambda x: _vio_struct("uniqueItems", col_name, x, None, msg),
         )
         out.fragments.append(
-            F.when(has_dup, structs).otherwise(_empty_violations())
+            S.when(has_dup, structs).otherwise(_empty_violations())
         )
 
     def _items_checks(self, c: dsl.Items, et):
@@ -775,29 +774,25 @@ class ConstraintCompiler:
                 # coalesces NULL to failed — but empty arrays must PASS
                 # (reference semantics; round-1 ADVICE): gate on size>0 and
                 # coalesce these branches to False, never True.
-                bound = (F.array_min(col) if isinstance(sub, dsl.Minimum)
-                         else F.array_max(col))
-                failed_any = F.coalesce(
-                    (F.size(col) > 0) & ~KEYWORDS[type(sub)].ok(self, sub, bound),
-                    _lit_false())
+                bound = (S.array_min(col) if isinstance(sub, dsl.Minimum)
+                         else S.array_max(col))
+                failed_any = S.coalesce(
+                    (S.size(col) > 0) & ~KEYWORDS[type(sub)].ok(self, sub, bound),
+                    False)
             else:
-                failed_any = F.exists(col, fail)
+                failed_any = S.exists(col, fail)
             if null_guard:
-                # both defaults are equivalent (exists over a non-null array
-                # with a never-null lambda is never null); kept per accessor
-                # so plans stay byte-identical
-                failed_any = col.isNotNull() & F.coalesce(
-                    failed_any, _lit_true() if fname is None else _lit_false())
+                failed_any = col.isNotNull() & S.coalesce(failed_any, False)
             msg = sub.message or self._msg(code, arg)
             full_code = f"items.{code}" if fname is None else f"items.{fname}.{code}"
             if c.extract_offenders:
-                structs = F.transform(
-                    F.filter(col, fail),
+                structs = S.transform(
+                    S.filter(col, fail),
                     lambda x: _vio_struct(full_code, col_name,
                                           x if fname is None else x[fname],
                                           arg, msg))
                 out.fragments.append(
-                    F.when(failed_any, structs).otherwise(_empty_violations())
+                    S.when(failed_any, structs).otherwise(_empty_violations())
                 )
             else:
                 # codegen-friendly: one violation per array, value = array
@@ -834,9 +829,9 @@ class ConstraintCompiler:
         et = dt.elementType if isinstance(dt, T.ArrayType) else None
         positions, extra = self._tuple_checks(c, et)
         # 0-based, null-safe (ANSI element_at throws)
-        elems = [F.get(col, i) for i in range(len(c.specs))]
+        elems = [S.get(col, i) for i in range(len(c.specs))]
         for i, sub, code, arg, fail in positions:
-            failed = (F.size(col) > i) & fail(elems[i])
+            failed = (S.size(col) > i) & fail(elems[i])
             if null_guard:
                 failed = col.isNotNull() & failed
             msg = sub.message or self._msg(code, arg)
@@ -846,34 +841,34 @@ class ConstraintCompiler:
         if c.additional is True:
             return
         n_spec = len(c.specs)
-        has_extra = F.size(col) > n_spec
+        has_extra = S.size(col) > n_spec
         if null_guard:
             has_extra = col.isNotNull() & has_extra
-        extras = F.slice(col, n_spec + 1,
-                         F.greatest(F.size(col) - n_spec, F.lit(0)))
+        extras = S.slice(col, n_spec + 1,
+                         S.greatest(S.size(col) - n_spec, S.lit(0)))
         if c.additional is False or c.additional == ():
             # forbid form: one violation per extra element
             msg = c.message or self._msg("additionalItems")
-            structs = F.transform(
+            structs = S.transform(
                 extras,
                 lambda x: _vio_struct("additionalItems", col_name, x,
                                       None, msg))
             out.fragments.append(
-                F.when(has_extra, structs).otherwise(_empty_violations()))
+                S.when(has_extra, structs).otherwise(_empty_violations()))
             out.add_valid(~has_extra)
         # draft-4 SCHEMA form: each extra element must satisfy the
         # sub-schema — null-strict like spec'd positions
         for sub, code, arg, fail in extra:
             msg = sub.message or self._msg(code, arg)
             full_code = f"additionalItems.{code}"
-            bad = F.filter(extras, fail)
-            structs = F.transform(
+            bad = S.filter(extras, fail)
+            structs = S.transform(
                 bad,
                 lambda x: _vio_struct(full_code, col_name, x, arg, msg))
-            any_bad = has_extra & (F.size(bad) > 0)
+            any_bad = has_extra & (S.size(bad) > 0)
             out.fragments.append(
-                F.when(any_bad, structs).otherwise(_empty_violations()))
-            out.add_valid(~F.coalesce(any_bad, _lit_false()))
+                S.when(any_bad, structs).otherwise(_empty_violations()))
+            out.add_valid(~S.coalesce(any_bad, False))
 
     def _compile_key_pattern(self, out, col_name, col, c: dsl.KeyPattern, m,
                              null_guard):
@@ -881,19 +876,19 @@ class ConstraintCompiler:
         each emit `additionalProperties` carrying the key
         (processor.js:90-111 + v4validator.js:287)."""
         null_guard = self._row_container_null(out, col_name, col, "additionalProperties", null_guard)
-        bad_keys = F.filter(
-            F.map_keys(col),
+        bad_keys = S.filter(
+            S.map_keys(col),
             lambda k: ~_or_all([k.rlike(p) for p in c.patterns]))
-        has_bad = F.size(bad_keys) > 0
+        has_bad = S.size(bad_keys) > 0
         if null_guard:
-            has_bad = col.isNotNull() & F.coalesce(has_bad, _lit_false())
+            has_bad = col.isNotNull() & S.coalesce(has_bad, False)
         msg = m or self._msg("additionalProperties")
-        structs = F.transform(
+        structs = S.transform(
             bad_keys,
             lambda k: _vio_struct("additionalProperties", col_name, k,
                                   _render_arg(list(c.patterns)), msg))
         out.fragments.append(
-            F.when(has_bad, structs).otherwise(_empty_violations()))
+            S.when(has_bad, structs).otherwise(_empty_violations()))
         out.add_valid(~has_bad)
 
     def _compile_struct_closed(self, out, col_name, col, c: dsl.StructClosed,
@@ -925,7 +920,7 @@ class ConstraintCompiler:
                 failed = col.isNotNull() & failed
             out.fragments.append(_scalar_fragment(
                 failed, "additionalProperties", f"{col_name}.{fname}",
-                F.lit(fname), None, msg))
+                S.lit(fname), None, msg))
             out.add_valid(~failed)
 
     def _expand_element_refs(self, constraints):
@@ -948,7 +943,7 @@ class ConstraintCompiler:
         preds = [self._element_predicate(s, elem_type)[0] for s in branch]
 
         def bp(x):
-            return _and_all([F.coalesce(q(x), _lit_false()) for q in preds])
+            return _and_all([S.coalesce(q(x), False) for q in preds])
 
         return bp
 
@@ -963,7 +958,7 @@ class ConstraintCompiler:
         closures are factories — NO default-arg lambdas (the harness would
         read them as the two-arg (element, index) form)."""
         null_guard = self._row_container_null(out, col_name, col, "additionalProperties", null_guard)
-        entries = F.map_entries(col)
+        entries = S.map_entries(col)
 
         def bad_factory(regex, pred, is_required):
             def bad(e):
@@ -973,15 +968,15 @@ class ConstraintCompiler:
                     ~self._any_key_match(e["key"], c))
                 if is_required:
                     return matches & e["value"].isNull()
-                return matches & e["value"].isNotNull() & ~F.coalesce(
-                    pred(e["value"]), _lit_false())
+                return matches & e["value"].isNotNull() & ~S.coalesce(
+                    pred(e["value"]), False)
             return bad
 
         def vio_factory(code, arg, msg):
             def vio(e):
                 return _vio_struct(
                     code,
-                    F.concat(F.lit(col_name + "["), e["key"], F.lit("]")),
+                    S.concat(S.lit(col_name + "["), e["key"], S.lit("]")),
                     e["value"], arg, msg)
             return vio
 
@@ -994,44 +989,44 @@ class ConstraintCompiler:
                 if getattr(pred, "static_true", False):
                     continue
                 bad = bad_factory(regex, pred, isinstance(sub, dsl.NotNull))
-                offenders = F.filter(entries, bad)
-                has = F.size(offenders) > 0
+                offenders = S.filter(entries, bad)
+                has = S.size(offenders) > 0
                 if null_guard:
-                    has = col.isNotNull() & F.coalesce(has, _lit_false())
+                    has = col.isNotNull() & S.coalesce(has, False)
                 msg = sub.message or self._msg(code, arg)
-                structs = F.transform(offenders,
+                structs = S.transform(offenders,
                                       vio_factory(code, arg, msg))
                 out.fragments.append(
-                    F.when(has, structs).otherwise(_empty_violations()))
+                    S.when(has, structs).otherwise(_empty_violations()))
                 out.add_valid(~has)
 
         for regex, subs in c.spec_items():
             emit_value_checks(regex, subs)
 
         if c.additional is False:
-            unmatched = F.filter(
+            unmatched = S.filter(
                 entries, lambda e: ~self._any_key_match(e["key"], c))
-            has_bad = F.size(unmatched) > 0
+            has_bad = S.size(unmatched) > 0
             if null_guard:
-                has_bad = col.isNotNull() & F.coalesce(has_bad, _lit_false())
+                has_bad = col.isNotNull() & S.coalesce(has_bad, False)
             msg = c.message or self._msg("additionalProperties")
-            structs = F.transform(
+            structs = S.transform(
                 unmatched,
                 lambda e: _vio_struct("additionalProperties", col_name,
                                       e["key"],
                                       _render_arg([r for r, _ in
                                                    c.spec_items()]), msg))
             out.fragments.append(
-                F.when(has_bad, structs).otherwise(_empty_violations()))
+                S.when(has_bad, structs).otherwise(_empty_violations()))
             out.add_valid(~has_bad)
         elif c.additional is not None:
             emit_value_checks(None, list(c.additional))
 
-    def _any_key_match(self, key: Column, c: dsl.PatternProperties) -> Column:
+    def _any_key_match(self, key: Sql, c: dsl.PatternProperties) -> Sql:
         # declared `properties` names are never "additional" (draft-4,
         # v4validator.js:287) — exempt them from the additional policy
         return _or_all([key.rlike(r) for r, _ in c.spec_items()]
-                       + [key == F.lit(name) for name in c.allowed])
+                       + [key == S.lit(name) for name in c.allowed])
 
     def _compile_pattern_properties_struct(self, out, col_name, col,
                                            c: dsl.PatternProperties,
@@ -1070,8 +1065,8 @@ class ConstraintCompiler:
                     failed = _element_fail(
                         None, pred, isinstance(sub, dsl.NotNull))(fcol)
                     if null_guard:
-                        failed = col.isNotNull() & F.coalesce(failed,
-                                                              _lit_false())
+                        failed = col.isNotNull() & S.coalesce(failed,
+                                                              False)
                     msg = sub.message or self._msg(code, arg)
                     out.fragments.append(_scalar_fragment(
                         failed, code, label, fcol, arg, msg))
@@ -1115,10 +1110,10 @@ class ConstraintCompiler:
                 return pred_any, "anyOf", None
 
             def pred_one(x):
-                n = F.lit(0)
+                n = S.lit(0)
                 for bp in branch_preds:
                     n = n + bp(x).cast("int")
-                return n == F.lit(1)
+                return n == S.lit(1)
             return pred_one, "oneOf", None
         if isinstance(sub, dsl.Not):
             bp = self._element_branch_pred(sub.branch, elem_type)
@@ -1143,21 +1138,21 @@ class ConstraintCompiler:
             fails = [f for *_, f in self._items_checks(sub, inner)]
 
             def items_ok(x):
-                return F.forall(x, lambda y: _and_all([~f(y) for f in fails]))
+                return S.forall(x, lambda y: _and_all([~f(y) for f in fails]))
             return items_ok, "items", None
         if isinstance(sub, dsl.TupleItems):
             positions, extra = self._tuple_checks(sub, inner)
             n_spec = len(sub.specs)
 
             def tuple_ok(x):
-                ok = [~((F.size(x) > i) & f(F.get(x, i)))
+                ok = [~((S.size(x) > i) & f(S.get(x, i)))
                       for i, *_, f in positions]
                 if sub.additional is False or sub.additional == ():
-                    ok.append(~(F.size(x) > n_spec))
+                    ok.append(~(S.size(x) > n_spec))
                 for *_, f in extra:
-                    extras = F.slice(x, n_spec + 1,
-                                     F.greatest(F.size(x) - n_spec, F.lit(0)))
-                    ok.append(F.forall(extras, lambda e: ~f(e)))
+                    extras = S.slice(x, n_spec + 1,
+                                     S.greatest(S.size(x) - n_spec, S.lit(0)))
+                    ok.append(S.forall(extras, lambda e: ~f(e)))
                 return _and_all(ok)
             return tuple_ok, "items", None
         raise SuiteCompileError(
@@ -1185,16 +1180,16 @@ class ConstraintCompiler:
                 raise SuiteCompileError(f"Unknown type '{tname}'")
             static = _static_type_match(tname, elem_type)
             if static is None:  # integer on a fractional dtype
-                return lambda x: (x % F.lit(1.0)) == 0.0
+                return lambda x: (x % S.lit(1.0)) == 0.0
 
             # null-AWARE constant: a null element is NOT of type `tname`
             # (draft-4: null only matches "null"). Where the caller's null
             # convention skips nulls (items/fields/map values) the guard
             # hides this; where positions are null-strict (TupleItems) it
-            # must fail — a bare F.lit(static) made the verdict depend on
+            # must fail — a bare literal made the verdict depend on
             # the element's physical dtype (round-4 review finding).
             def const(x):
-                return x.isNotNull() & F.lit(static)
+                return x.isNotNull() & S.lit(static)
             const.static_value = static
             return const
 
@@ -1218,28 +1213,30 @@ class ConstraintCompiler:
     def _compile_conform(self, out, col_name, col, c: dsl.Conform, m, null_guard):
         if (c.expr is None) == (c.pandas_fn is None):
             raise SuiteCompileError("Conform needs exactly one of expr / pandas_fn")
-        extra = [F.col(x) for x in c.extra_cols]
+        # the callable gets real Columns; its predicate enters the plan in
+        # mixed mode
+        value, *extra = [S.lift(x) for x in [col, *map(S.col, c.extra_cols)]]
         if c.expr is not None:
-            pred = c.expr(col, *extra) if c.extra_cols else c.expr(col)
+            pred = c.expr(value, *extra)
         else:
-            udf = F.pandas_udf(c.pandas_fn, T.BooleanType())
-            pred = udf(col, *extra)
+            pred = F.pandas_udf(c.pandas_fn, T.BooleanType())(value, *extra)
         code = c.code
-        failed = ~F.coalesce(pred, _lit_false())
+        ok = S.as_sql(pred).eqNullSafe(True)  # a NULL predicate fails
         if null_guard:
             # column-level conform skips absent (null) values like every
             # other non-required check; row-level conform (null_guard=False)
             # sees raw values — the reference's custom fns decide themselves
-            failed = col.isNotNull() & failed
+            ok = col.isNull() | ok
         msg = m or (self._msg("custom") if code == "custom" else
                     render_message(code, self._msg("custom"),
                                    overrides=self.suite.messages,
                                    gettext=getattr(self.suite, "gettext",
                                                    None)))
-        out.fragments.append(
-            _scalar_fragment(failed, code, col_name, col, None, msg)
-        )
-        out.valid = ~failed
+        # built from ``ok``, not ``~ok``: each operation on the callable's
+        # Column is another round trip
+        out.fragments.append(S.when(ok, self._empty).otherwise(
+            S.array(_vio_struct(code, col_name, col, None, msg))))
+        out.valid = ok
 
     # -- combinators ------------------------------------------------------------
 
@@ -1249,12 +1246,12 @@ class ConstraintCompiler:
         a validity predicate."""
         cc = self._compile_column(col_name, list(constraints))
         if cc.valid is None:
-            cc.valid = _lit_true()
+            cc.valid = S.lit(True)
         return cc
 
     def _compile_combinator(self, out, col_name, col, c, m, null_guard):
         branches = [self._compile_branch(col_name, b) for b in c.branches]
-        valids = [F.coalesce(b.valid, _lit_false()) for b in branches]
+        valids = [S.coalesce(b.valid, False) for b in branches]
         sub_errs = [
             _concat_all([f for f in b.fragments]) if b.fragments else _empty_violations()
             for b in branches
@@ -1266,9 +1263,9 @@ class ConstraintCompiler:
             msg = m or self._msg("allOf")
             frags = []
             for v, errs in zip(valids, sub_errs):
-                head = F.array(_vio_struct("allOf", col_name, col, None, msg))
+                head = S.array(_vio_struct("allOf", col_name, col, None, msg))
                 frags.append(
-                    F.when(~v, F.concat(head, errs)).otherwise(_empty_violations())
+                    S.when(~v, S.concat(head, errs)).otherwise(_empty_violations())
                 )
             out.fragments.append(_concat_all(frags))
             allv = _and_all(valids)
@@ -1277,10 +1274,10 @@ class ConstraintCompiler:
         elif isinstance(c, dsl.AnyOf):
             any_ok = _or_all(valids)
             msg = m or self._msg("anyOf")
-            head = F.array(_vio_struct("anyOf", col_name, col, None, msg))
+            head = S.array(_vio_struct("anyOf", col_name, col, None, msg))
             all_errs = _concat_all(sub_errs)
             out.fragments.append(
-                F.when(~any_ok, F.concat(head, all_errs)).otherwise(_empty_violations())
+                S.when(~any_ok, S.concat(head, all_errs)).otherwise(_empty_violations())
             )
             out.valid = any_ok
 
@@ -1293,10 +1290,10 @@ class ConstraintCompiler:
             many_msg = m or self._msg("oneOf")
             all_errs = _concat_all(sub_errs)
             frag = (
-                F.when(count == 0,
-                       F.concat(F.array(_vio_struct("oneOf.zero", col_name, col, None, zero_msg)),
+                S.when(count == 0,
+                       S.concat(S.array(_vio_struct("oneOf.zero", col_name, col, None, zero_msg)),
                                 all_errs))
-                .when(count > 1, F.array(_vio_struct("oneOf", col_name, col, None, many_msg)))
+                .when(count > 1, S.array(_vio_struct("oneOf", col_name, col, None, many_msg)))
                 .otherwise(_empty_violations())
             )
             out.fragments.append(frag)
@@ -1306,48 +1303,44 @@ class ConstraintCompiler:
         """If `on` is present (non-null — the columnar analog of
         hasOwnProperty, v4validator.js:104-123): dependent requirements must
         hold; failure → 'dependency' error (arg = original spec) + sub-errors."""
-        on = F.col(c.on)
-        sub_frags: list[Column] = []
-        sub_valids: list[Column] = []
+        on = S.col(c.on)
+        sub_frags: list[Sql] = []
+        sub_valids: list[Sql] = []
         if c.requires:
             for req in c.requires:
                 b = self._compile_column(req, [dsl.NotNull()])
                 sub_frags.extend(b.fragments)
-                sub_valids.append(F.coalesce(b.valid, _lit_false()))
+                sub_valids.append(S.coalesce(b.valid, False))
             arg = list(c.requires)
         else:
             for target_col, constraint in c.constraints:
-                b = self._compile_one(target_col, F.col(target_col), constraint, null_guard=True)
+                b = self._compile_one(target_col, S.col(target_col), constraint, null_guard=True)
                 sub_frags.extend(b.fragments)
                 if b.valid is not None:
-                    sub_valids.append(F.coalesce(b.valid, _lit_false()))
+                    sub_valids.append(S.coalesce(b.valid, False))
             arg = f"schema({c.on})"
         dep_valid = _and_all(sub_valids)
         triggered = on.isNotNull()
         failed = triggered & ~dep_valid
         msg = m or self._msg("dependency", arg)
-        head = F.array(_vio_struct("dependency", col_name, on, arg, msg))
+        head = S.array(_vio_struct("dependency", col_name, on, arg, msg))
         errs = _concat_all(sub_frags) if sub_frags else _empty_violations()
         out.fragments.append(
-            F.when(failed, F.concat(head, errs)).otherwise(_empty_violations())
+            S.when(failed, S.concat(head, errs)).otherwise(_empty_violations())
         )
         out.valid = ~failed
 
 
-def _and_all(cols: list[Column]) -> Column:
-    return reduce(operator.and_, cols) if cols else _lit_true()
+def _and_all(preds: list[Sql]) -> Sql:
+    return S.and_all(preds) if preds else S.lit(True)
 
 
-def _or_all(cols: list[Column]) -> Column:
-    return reduce(operator.or_, cols) if cols else _lit_false()
+def _or_all(preds: list[Sql]) -> Sql:
+    return S.or_all(preds) if preds else S.lit(False)
 
 
-def _concat_all(frags: list[Column]) -> Column:
-    if not frags:
-        return _empty_violations()
-    if len(frags) == 1:
-        return frags[0]
-    return F.concat(*frags)
+def _concat_all(frags: list[Sql]) -> Sql:
+    return S.concat(*frags) if frags else _empty_violations()
 
 
 def compile_suite(suite: dsl.Suite, schema: Optional[T.StructType] = None) -> ValidationPlan:

@@ -406,31 +406,11 @@ def run_official_tests(spark: SparkSession, tests: list[OfficialTest],
             continue
         (solo if plan.defs else planned).append((t, plan))
 
-    # Round-6 sequencing note: a thread pool here FIRST measured useless
-    # (per-batch latency inflated ~8x, total unchanged) because the build
-    # was GIL-bound — per-API-call Python overhead (debug call-site
-    # capture, uncached constant Columns) dominated. After the compiler's
-    # constant-Column cache and dataFrameDebugging=false cut the work to
-    # ~49k py4j round trips, the cost became pure JVM-socket WAIT, which
-    # threads overlap fine: 21.3 s -> 8.4 s, byte-identical ordered
-    # results (pool.map preserves group order; each group appends to its
-    # own result). Optimize per-call cost BEFORE reaching for threads.
     groups = ([planned[i:i + batch_size]
                for i in range(0, len(planned), batch_size)]
               + [[tp] for tp in solo])
-
-    def _run_group(group):
-        r = SuiteRunResult()
-        _run_batch(spark, group, r)
-        return r
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for r in pool.map(_run_group, groups):
-            res.passed.extend(r.passed)
-            res.failed.extend(r.failed)
-            res.skipped.extend(r.skipped)
+    for group in groups:
+        _run_batch(spark, group, res)
     return res
 
 

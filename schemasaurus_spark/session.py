@@ -63,11 +63,10 @@ def get_spark(
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         # PySpark 4's DataFrame-debugging call-site capture wraps EVERY
         # Column/DataFrame API call with a conf read + stack inspection +
-        # origin set/clear — 3 extra py4j round trips per call. The DSL
-        # compiler makes tens of thousands of API calls per suite, so this
-        # debug aid (it only enriches error messages with user call sites)
-        # tripled plan-construction time. Off for the engine; re-enable
-        # ad hoc when debugging user suites.
+        # origin set/clear — 3 extra py4j round trips per call, on every
+        # aggregate builder and Conform callable; it only enriches error
+        # messages with user call sites. Off for the engine; re-enable ad
+        # hoc when debugging user suites.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

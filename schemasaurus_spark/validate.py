@@ -31,6 +31,7 @@ from schemasaurus_spark.compiler import (
     VIOLATIONS_COL,
     ValidationPlan,
     compile_suite,
+    explode_validated,
 )
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.session import local_frame
@@ -77,7 +78,7 @@ class ValidationResult:
         filter-pushdown pathology, BENCH.md round 2: 77 s vs 7 s at 16M
         rows / 32 cores)."""
         idc = self.id_column
-        v = self.plan.explode_violations(self.validated.drop(VIOLATIONS_COL))
+        v = explode_validated(self.validated, idc)
         out = v.select(
             idc,
             "__v.constraint_id",
@@ -245,8 +246,7 @@ class ValidationResult:
         costs nothing, is false by contract, and is NOT folded;
         tests/test_plans.py pins the scan's DataFilters empty."""
         rv = self.plan.row_valid
-        pred = (F.coalesce(rv, F.lit(False)) if rv is not None
-                else F.size(VIOLATIONS_COL) == 0)
+        pred = rv if rv is not None else F.size(VIOLATIONS_COL) == 0
         if not want_valid:
             pred = ~pred
         barrier = F.monotonically_increasing_id() < F.lit(0)  # always FALSE

@@ -1,7 +1,39 @@
 """Walk a physical plan's nodes for plan-shape pins (no Spark job), and
-count the Spark jobs a block of code starts."""
+count the Spark jobs and the py4j round trips a block of code makes."""
 
 from contextlib import contextmanager
+
+import py4j.clientserver
+import py4j.java_gateway
+
+# py4j's garbage-collection "delete object" command, sent on py4j's own
+# schedule; perfbench/tracing.py leaves it out of its count the same way
+_GC_DELETE = "m\nd\n"
+
+
+@contextmanager
+def py4j_calls():
+    """Yields a one-element list that, during and after the block, holds
+    the number of py4j round trips made in it (from any thread), GC
+    deletes excluded."""
+    n = [0]
+    patched = []
+    for cls in (py4j.clientserver.ClientServerConnection,
+                py4j.java_gateway.GatewayConnection):
+        orig = cls.send_command
+
+        def send_command(conn, command, *args, _orig=orig, **kwargs):
+            if not command.startswith(_GC_DELETE):
+                n[0] += 1
+            return _orig(conn, command, *args, **kwargs)
+
+        patched.append((cls, orig))
+        cls.send_command = send_command
+    try:
+        yield n
+    finally:
+        for cls, orig in patched:
+            cls.send_command = orig
 
 
 @contextmanager

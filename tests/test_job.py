@@ -159,6 +159,9 @@ def test_job_drift_config_mismatch_is_usage_error(spark, tmp_path):
         env=_job_env())
     assert out.returncode == 2
     assert "drift baseline" in out.stderr
+    # split on "\n" only: str.splitlines also splits on the progress
+    # bar's "\r" and would hide a bar run into the error line
+    assert any(line.startswith("error:") for line in out.stderr.split("\n"))
 
 
 def test_job_usage_errors_exit_2(spark, tmp_path):
