@@ -62,7 +62,6 @@ Both contexts derive from them, like the reference's one recursive
 
 from __future__ import annotations
 
-import json
 from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 from types import MappingProxyType
@@ -72,7 +71,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from schemasaurus_spark import dsl, sqlexpr as S
 from schemasaurus_spark.functions.formats import get_format
-from schemasaurus_spark.messages import render_message
+from schemasaurus_spark.messages import format_arg, render_message
 from schemasaurus_spark.sqlexpr import Sql
 
 # Uniform violation record — field-for-field analog of the reference error
@@ -92,11 +91,7 @@ VIOLATIONS_COL = "__violations"
 
 
 def _render_arg(arg) -> Optional[str]:
-    if arg is None:
-        return None
-    if isinstance(arg, (list, tuple)):
-        return json.dumps(list(arg))
-    return str(arg)
+    return None if arg is None else format_arg(arg)
 
 
 def _vio_struct(code: str, column, value, arg, message: str) -> Sql:

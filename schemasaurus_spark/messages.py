@@ -16,6 +16,8 @@ A per-suite / per-constraint override map plays the role of the reference's
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import logging
 
 _log = logging.getLogger("schemasaurus_spark")
@@ -112,7 +114,7 @@ def render_message(
             if "%d" in msg:
                 msg = msg.replace("%d", str(arg))
             if "%s" in msg:
-                msg = msg.replace("%s", _fmt_arg(arg))
+                msg = msg.replace("%s", format_arg(arg))
         except Exception:
             # keep the template uninterpolated rather than fail the compile
             _log.warning("message %r: could not interpolate arg %r",
@@ -120,9 +122,17 @@ def render_message(
     return msg
 
 
-def _fmt_arg(arg: object) -> str:
+def format_arg(arg: object) -> str:
+    """A constraint argument as text: a list as JSON (dates, timestamps
+    and Decimals as their ``str``), anything else as ``str``."""
     if isinstance(arg, (list, tuple)):
         import json
 
-        return json.dumps(list(arg))
+        return json.dumps(list(arg), default=_json_scalar)
     return str(arg)
+
+
+def _json_scalar(v: object) -> str:
+    if isinstance(v, (datetime.date, datetime.time, decimal.Decimal)):
+        return str(v)
+    raise TypeError(f"{type(v).__name__} is not JSON serializable")

@@ -22,7 +22,7 @@ Two traps of ``F.expr`` shape the rendering, and :func:`render` and
 
 Mixed mode: an :class:`Sql` may hold a pyspark Column instead of text — a
 ``Conform`` callable's predicate, an extension hook's fragment, a top-level
-name with ``${``. An operator or function that receives one lifts its text
+name with ``${``, a literal :func:`render` cannot type (a timestamp). An operator or function that receives one lifts its text
 operands with ``F.expr`` (consecutive text terms of an n-ary ``AND``/``OR``/
 ``concat`` share one) and returns a Column-backed :class:`Sql`.
 
@@ -38,6 +38,8 @@ import itertools
 import math
 import operator
 import threading
+from datetime import date, datetime
+from decimal import Decimal
 from functools import reduce
 
 from pyspark.sql import Column, functions as F
@@ -114,12 +116,15 @@ class Sql:
 
     def isin(self, values) -> Sql:
         values = list(values)
-        if self.col is not None:
-            return Sql(col=self.col.isin(values))
-        if not values:  # `x IN ()` does not parse; In(x, []) is this
-            return Sql(f"IF({self.text} IS NULL, CAST(NULL AS BOOLEAN), "
-                       f"false)")
-        return Sql(f"({self.text} IN ({', '.join(map(render, values))}))")
+        try:
+            texts = [render(v) for v in values]
+        except TypeError:  # a value only F.lit can type: mixed mode
+            texts = None
+        if self.col is not None or texts is None:
+            return Sql(col=_operand(self).isin(values))
+        if not texts:  # `x IN ()` does not parse; In(x, []) is false
+            return Sql("false")
+        return Sql(f"({self.text} IN ({', '.join(texts)}))")
 
     def rlike(self, regex: str) -> Sql:
         if self.col is not None:
@@ -146,23 +151,30 @@ class Sql:
 
 
 def render(v) -> str:
-    """SQL literal of a Python value, typed as ``F.lit`` types it."""
+    """SQL literal of a Python value, typed as ``F.lit`` types it. Raises
+    ``TypeError`` for a value it has no such literal for (see :func:`lit`)."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, int):
+        v = int(v)
         if -(2 ** 31) <= v < 2 ** 31:
             return str(v)
         if -(2 ** 63) <= v < 2 ** 63:
             return f"{v}L"
         return f"{v}BD"  # F.lit refuses ints beyond bigint; exact decimal
     if isinstance(v, float):
+        v = float(v)  # a numpy float64's repr is np.float64(…)
         if math.isnan(v):
             return "CAST('NaN' AS DOUBLE)"
         if math.isinf(v):
             return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
         return f"{v!r}D"
+    if isinstance(v, Decimal) and v.is_finite():
+        return f"{v}BD"  # the BigDecimal of str(v): F.lit's precision, scale
+    if isinstance(v, date) and not isinstance(v, datetime):
+        return f"DATE'{v.isoformat()}'"
     if isinstance(v, str):
         return "'" + (v.replace("\\", "\\\\").replace("'", "\\'")
                       .replace("$", "\\u0024")) + "'"
@@ -172,7 +184,13 @@ def render(v) -> str:
 
 
 def lit(v) -> Sql:
-    return Sql(render(v))
+    """A literal: its SQL text, or (mixed mode) ``F.lit`` for a value
+    :func:`render` cannot type — a timestamp, whose ``F.lit`` reads a naive
+    value in the Python process's time zone, or a numpy integer."""
+    try:
+        return Sql(render(v))
+    except TypeError:
+        return Sql(col=F.lit(v))
 
 
 def col(name: str) -> Sql:

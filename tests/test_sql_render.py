@@ -4,15 +4,20 @@ the value and type ``F.lit`` gives — including strings that Spark's
 variable substitution would rewrite (``${…}``) and doubles that would
 parse as DECIMAL."""
 
+import datetime
 import json
 import math
+from decimal import Decimal
 from pathlib import Path
+
+import numpy as np
 
 import pyspark.sql.functions as F
 import pytest
 
 from schemasaurus_spark import dsl, sqlexpr
 from schemasaurus_spark.functions.formats import DEFAULT_FORMATS
+from schemasaurus_spark.profiler import suggest_suite
 from schemasaurus_spark.validate import validate
 
 CORPUS = Path(__file__).parent / "data" / "official_draft4"
@@ -26,6 +31,11 @@ NUMBERS = [0, -1, 2 ** 31, -(2 ** 31), -(2 ** 63), 2 ** 63 - 1, 1.5, -0.0,
            1e308, 5e-324, 0.1, float("nan"), float("inf"), float("-inf")]
 OTHERS = [True, False, None, [], [[1, 2], []], ["a", "${env:HOME}"],
           [1.5, -2.0]]
+# what Spark hands back for DECIMAL / DATE columns (profiler bounds), and a
+# numpy float64 (a float subclass whose repr does not parse)
+TYPED = [Decimal("1.5"), Decimal("-0.001"), Decimal("1.50"), Decimal("1E+2"),
+         Decimal("12345678901234567890.123"), datetime.date(2024, 2, 29),
+         np.float64(1.5), np.float64(-0.0), [Decimal("0.10"), None]]
 
 
 def _same(a, b) -> bool:
@@ -53,7 +63,7 @@ def _round_trip(spark, values):
 
 
 def test_render_matches_lit(spark):
-    values = STRINGS + NUMBERS + OTHERS
+    values = STRINGS + NUMBERS + OTHERS + TYPED
     for v, (lv, lt, ev, et) in zip(values, _round_trip(spark, values)):
         assert et == lt, (v, lt, et)
         assert _same(ev, lv), (v, lv, ev)
@@ -63,6 +73,71 @@ def test_render_types_doubles_as_double_not_decimal():
     assert sqlexpr.render(1.5) == "1.5D"
     assert sqlexpr.render(2 ** 31) == "2147483648L"
     assert "$" not in sqlexpr.render("${spark.app.name}")
+
+
+def test_lit_falls_back_to_a_column_for_what_render_cannot_type(spark):
+    """A timestamp or a numpy integer has no text literal with F.lit's value
+    and type: ``lit`` hands the value to ``F.lit`` (mixed mode)."""
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    for v in [ts, np.int64(7), datetime.timedelta(seconds=3)]:
+        with pytest.raises(TypeError):
+            sqlexpr.render(v)
+        got = sqlexpr.lit(v)
+        assert got.col is not None
+        df = spark.range(1).select(got.col.alias("g"), F.lit(v).alias("l"))
+        assert df.schema["g"].dataType == df.schema["l"].dataType
+        row = df.collect()[0]
+        assert row["g"] == row["l"]
+    assert sqlexpr.Sql("`x`").isin([ts]).col is not None
+    assert sqlexpr.Sql("`x`").isin([]).text == "false"
+
+
+def test_decimal_date_and_timestamp_bounds_validate(spark):
+    """Bounds and enums of the values Spark returns for DECIMAL, DATE and
+    TIMESTAMP columns compile and check like F.lit did, and their messages
+    interpolate the values."""
+    D, d, ts = Decimal, datetime.date, datetime.datetime
+    df = spark.createDataFrame(
+        [(1, D("1.25"), d(2024, 1, 1), ts(2024, 1, 1, 12)),
+         (2, D("2.50"), d(2024, 3, 1), ts(2024, 1, 2, 0)),
+         (3, None, None, None)],
+        "id int, amount decimal(10,2), day date, at timestamp")
+    suite = dsl.Suite(id_column="id", columns={
+        "amount": [dsl.Minimum(D("1.5")), dsl.Maximum(np.float64(2.0)),
+                   dsl.Enum([D("1.25"), D("9.99")])],
+        "day": [dsl.Enum([d(2024, 1, 1)])],
+        "at": [dsl.Enum([ts(2024, 1, 1, 12)])],
+    })
+    got = sorted((r["id"], r["column"], r["constraint_id"], r["arg"],
+                  r["message"])
+                 for r in validate(df, suite).violations().collect())
+    enum_msg = "shall be one of values "
+    assert got == [
+        (1, "amount", "minimum", "1.5", "shall be >= 1.5"),
+        (2, "amount", "enum", '["1.25", "9.99"]',
+         enum_msg + '["1.25", "9.99"]'),
+        (2, "amount", "maximum", "2.0", "shall be <= 2.0"),
+        (2, "at", "enum", '["2024-01-01 12:00:00"]',
+         enum_msg + '["2024-01-01 12:00:00"]'),
+        (2, "day", "enum", '["2024-01-01"]', enum_msg + '["2024-01-01"]'),
+    ]
+
+
+def test_suggested_suite_of_a_decimal_column_validates(spark):
+    """``suggest_suite`` bounds a DECIMAL column with the Decimals Spark
+    returns; the suite compiles and its own table passes it."""
+    df = spark.createDataFrame(
+        [(i, Decimal(f"{i}.05"), i * 0.5) for i in range(1, 6)],
+        "id int, amount decimal(12,2), ratio double")
+    suite = suggest_suite(df, id_column="id").suite
+    assert {type(c).__name__ for c in suite.columns["amount"]} >= {
+        "Minimum", "Maximum"}
+    res = validate(df, suite)
+    assert res.violations().count() == 0
+    out = validate(df.where("id > 1").union(
+        spark.createDataFrame([(9, Decimal("0.01"), 1.0)], df.schema)), suite)
+    assert [(r["id"], r["constraint_id"]) for r in out.violations().where(
+        "column = 'amount'").collect()] == [(9, "minimum")]
 
 
 def _corpus_strings():
