@@ -15,9 +15,9 @@ substitutes ``${…}`` everywhere in the text before parsing (string
 literals and backticked names included), and a bare ``1.5`` parses as
 ``DECIMAL(2,1)``. Literals and names therefore only enter the text through
 ``sqlexpr.render``/``sqlexpr.col``. Columns supplied by callers —
-``Conform`` callables, ``dsl.register_constraint`` hooks — are combined
-in mixed mode: a builder that receives one lifts its SQL operands with
-``F.expr`` and returns a Column-backed value.
+``Conform`` callables, ``dsl.register_constraint`` hooks — enter it as
+reserved names bound during :meth:`ConstraintCompiler.compile`; the plan
+projects them as aliases under those names, below the one ``F.expr``.
 
 Design invariants (SURVEY.md §4):
 
@@ -136,7 +136,7 @@ class CompiledColumn:
     valid: Optional[Sql] = None
 
     def add_valid(self, ok: Sql) -> None:
-        self.valid = ok if self.valid is None else self.valid & ok
+        self.valid = ok if self.valid is None else S.and_all([self.valid, ok])
 
 
 @dataclass
@@ -144,8 +144,11 @@ class ValidationPlan:
     """The compiled artifact — analog of the specialized closure the
     reference returns (``compiler.js:201-211``). Holds the row's violation
     array and pass predicate as SQL; ``apply`` projects the array onto a
-    DataFrame, lifted to a Column with one ``F.expr`` (mixed mode: one per
-    run of SQL text next to a caller's Column).
+    DataFrame, lifted to a Column with one ``F.expr``, over the ``bound``
+    Columns the text names (:meth:`bind`; none: no extra projection).
+    CollapseProject inlines an alias of an attribute or literal; one used
+    twice (a Conform predicate) stays a ``Project`` in the same codegen
+    stage, evaluated once.
 
     Fast-path/slow-path split: ``valid`` is the conjunction of all pass
     predicates — cheap (no struct/array construction). The violation-array
@@ -157,20 +160,33 @@ class ValidationPlan:
     violations: Sql  # the row's violation array
     suite_hash: str
     valid: Optional[Sql] = None
+    bound: dict[str, Column] = dc_field(default_factory=dict)
 
     @property
     def row_valid(self) -> Optional[Column]:
-        """The row's pass predicate, NULL counted as failing."""
+        """The row's pass predicate, NULL counted as failing. It resolves
+        on a frame with the bound aliases (:meth:`bind`)."""
         if self.valid is None:
             return None
         return S.lift(S.coalesce(self.valid, False))
 
-    def violations_expr(self) -> Column:
-        return S.lift(self.violations)
+    def bind(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the bound Columns under their names, one by one: a
+        hook's Column may reference an earlier name."""
+        clash = [c for c in df.columns if self.bound
+                 and c.lower().startswith(S.BOUND_PREFIX)]
+        if clash:
+            raise ValueError(f"input column(s) {clash} use the prefix "
+                             f"'{S.BOUND_PREFIX}' reserved for bound Columns")
+        for name, c in self.bound.items():
+            df = df.withColumn(name, c)
+        return df
 
     def apply(self, df: DataFrame) -> DataFrame:
         """One narrow projection: df + ``__violations`` array column."""
-        return df.withColumn(VIOLATIONS_COL, self.violations_expr())
+        return (self.bind(df).withColumn(VIOLATIONS_COL,
+                                         S.lift(self.violations))
+                .drop(*self.bound))
 
     def explode_violations(self, df: DataFrame, *extra_cols: str) -> DataFrame:
         """Violation rows via ``posexplode`` with NO pre-filter: exploding
@@ -375,13 +391,19 @@ class ConstraintCompiler:
         # cycle guards — the reference's $$visited marker (compiler.js:136-141)
         self._visiting: set[int] = set()   # nested constraint objects in flight
         self._ref_stack: set[str] = set()  # Ref names in flight
-        # one typed empty array for the conform fragments and the plan's
-        # fast path: next to a Conform's Column it is lifted once, not twice
-        self._empty = _typed_empty_violations()
 
     # -- public -------------------------------------------------------------
 
     def compile(self) -> ValidationPlan:
+        with S.binding() as bound:
+            violations, valid = self._compile_row()
+        return ValidationPlan(self.suite, violations,
+                              self.suite.fingerprint(), valid, bound)
+
+    # -- internals ----------------------------------------------------------
+
+    def _compile_row(self) -> tuple[Sql, Optional[Sql]]:
+        """The row's violation array and pass predicate."""
         if self.schema is not None:
             # check EVERY column the suite reads — not just suite.columns:
             # Dependency.on/requires/schema-form targets, Conform
@@ -415,18 +437,13 @@ class ConstraintCompiler:
                 valids.append(cc.valid)
         # the typed empty array gives the result the violation struct's
         # type, every field nullable, whatever literals the fragments hold
+        empty = _typed_empty_violations()
         if not valids:
-            return ValidationPlan(self.suite,
-                                  S.concat(self._empty, *fragments),
-                                  self.suite.fingerprint())
+            return S.concat(empty, *fragments), None
         row_valid = _and_all(valids)
         # a NULL ``valid`` evaluates the fragments, which are exact
-        violations = S.when(row_valid, self._empty).otherwise(
-            _concat_all(fragments))
-        return ValidationPlan(self.suite, violations,
-                              self.suite.fingerprint(), row_valid)
-
-    # -- internals ----------------------------------------------------------
+        return (S.when(row_valid, empty).otherwise(_concat_all(fragments)),
+                row_valid)
 
     def _has(self, col_name: str) -> bool:
         return _has_path(self.schema, col_name)
@@ -598,11 +615,8 @@ class ConstraintCompiler:
             if ext is None:
                 raise SuiteCompileError(f"Unknown constraint {type(c).__name__}")
             # V4Validator.extend analog: the plugin appends fragments itself,
-            # built from a real Column (mixed mode)
+            # built from a real Column
             ext(self, out, col_name, S.lift(col), c, m, null_guard)
-            out.fragments = [S.as_sql(f) for f in out.fragments]
-            if out.valid is not None:
-                out.valid = S.as_sql(out.valid)
         return out
 
     @contextmanager
@@ -1208,8 +1222,7 @@ class ConstraintCompiler:
     def _compile_conform(self, out, col_name, col, c: dsl.Conform, m, null_guard):
         if (c.expr is None) == (c.pandas_fn is None):
             raise SuiteCompileError("Conform needs exactly one of expr / pandas_fn")
-        # the callable gets real Columns; its predicate enters the plan in
-        # mixed mode
+        # the callable gets real Columns; its predicate is bound
         value, *extra = [S.lift(x) for x in [col, *map(S.col, c.extra_cols)]]
         if c.expr is not None:
             pred = c.expr(value, *extra)
@@ -1227,9 +1240,7 @@ class ConstraintCompiler:
                                    overrides=self.suite.messages,
                                    gettext=getattr(self.suite, "gettext",
                                                    None)))
-        # built from ``ok``, not ``~ok``: each operation on the callable's
-        # Column is another round trip
-        out.fragments.append(S.when(ok, self._empty).otherwise(
+        out.fragments.append(S.when(ok, _typed_empty_violations()).otherwise(
             S.array(_vio_struct(code, col_name, col, None, msg))))
         out.valid = ok
 

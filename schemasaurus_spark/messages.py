@@ -19,6 +19,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import logging
+import numbers
 
 _log = logging.getLogger("schemasaurus_spark")
 
@@ -123,8 +124,9 @@ def render_message(
 
 
 def format_arg(arg: object) -> str:
-    """A constraint argument as text: a list as JSON (dates, timestamps
-    and Decimals as their ``str``), anything else as ``str``."""
+    """A constraint argument as text: a list as JSON (dates, timestamps,
+    intervals and Decimals as their ``str``, numpy integers as numbers),
+    anything else as ``str``."""
     if isinstance(arg, (list, tuple)):
         import json
 
@@ -132,7 +134,10 @@ def format_arg(arg: object) -> str:
     return str(arg)
 
 
-def _json_scalar(v: object) -> str:
-    if isinstance(v, (datetime.date, datetime.time, decimal.Decimal)):
+def _json_scalar(v: object):
+    if isinstance(v, (datetime.date, datetime.time, datetime.timedelta,
+                      decimal.Decimal)):
         return str(v)
+    if isinstance(v, numbers.Integral):
+        return int(v)
     raise TypeError(f"{type(v).__name__} is not JSON serializable")

@@ -14,51 +14,53 @@ Two traps of ``F.expr`` shape the rendering, and :func:`render` and
   too (``'${env:HOME}'`` parses as the home directory,
   ``'${spark.app.name}'`` as the application name). String literals
   therefore write ``$`` as ``\\u0024``; nested names use ``['…']`` string
-  extraction; a top-level name that contains ``${`` is referenced through
-  ``F.col`` (mixed mode, below).
+  extraction; a top-level name that contains ``${`` is bound (below).
 * **Literal types.** A bare ``1.5`` parses as ``DECIMAL(2,1)``: doubles
   render as ``1.5D`` (NaN and ±Infinity as casts), ints as ``F.lit``
   types them (int, then bigint beyond int32).
 
-Mixed mode: an :class:`Sql` may hold a pyspark Column instead of text — a
-``Conform`` callable's predicate, an extension hook's fragment, a top-level
-name with ``${``, a literal :func:`render` cannot type (a timestamp). An operator or function that receives one lifts its text
-operands with ``F.expr`` (consecutive text terms of an n-ary ``AND``/``OR``/
-``concat`` share one) and returns a Column-backed :class:`Sql`.
+Bound Columns: a pyspark Column that enters an expression — a ``Conform``
+callable's predicate, an extension hook's fragment, ``F.col`` of a
+top-level name with ``${``, ``F.lit`` of a value :func:`render` cannot type
+(a timestamp) — is bound to a reserved name (``__sx0``, ``__sx1``, … in
+binding order, one per Column object) and the text references that name.
+:func:`binding` collects them for one compile; the plan projects them as
+aliases under those names before it lifts the text.
 
-String literals assume Spark's default
+String literals are written for Spark's default
 ``spark.sql.parser.escapedStringLiterals=false`` (backslash escapes are
-processed).
+processed); :func:`lift` makes text with an escape fail under ``true``.
 """
 
 from __future__ import annotations
 
 import inspect
-import itertools
 import math
-import operator
-import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
 from datetime import date, datetime
 from decimal import Decimal
-from functools import reduce
 
 from pyspark.sql import Column, functions as F
 
+BOUND_PREFIX = "__sx"
+
+
+def _binop(op: str):
+    return lambda self, other: _binary(op, self, other)
+
 
 class Sql:
-    """One expression: SQL ``text``, or (mixed mode) a pyspark ``col``.
-    ``AND``/``OR``/``concat`` nodes keep their flattened terms so chains
-    render n-ary."""
+    """One expression's SQL ``text``. ``AND``/``OR``/``concat`` nodes keep
+    their flattened terms so chains render n-ary."""
 
-    __slots__ = ("text", "col", "_op", "_terms", "_lifted")
+    __slots__ = ("text", "_op", "_terms")
 
-    def __init__(self, text: str | None = None, col: Column | None = None,
-                 op: str | None = None, terms: tuple = ()):
-        self.text, self.col = text, col
-        self._op, self._terms, self._lifted = op, terms, None
+    def __init__(self, text: str, op: str | None = None, terms: tuple = ()):
+        self.text, self._op, self._terms = text, op, terms
 
     def __repr__(self) -> str:
-        return f"Sql({self.text!r})" if self.col is None else "Sql(<Column>)"
+        return f"Sql({self.text!r})"
 
     def __bool__(self):
         raise ValueError("an Sql expression has no truth value: "
@@ -71,73 +73,33 @@ class Sql:
         return or_all([self, other])
 
     def __invert__(self):
-        return _apply(lambda a: f"(NOT {a})", operator.invert, self)
+        return _apply(lambda a: f"(NOT {a})", self)
 
-    def __eq__(self, other):  # type: ignore[override]
-        return _binary("=", operator.eq, self, other)
-
-    def __ne__(self, other):  # type: ignore[override]
-        return _binary("<>", operator.ne, self, other)
-
-    def __lt__(self, other):
-        return _binary("<", operator.lt, self, other)
-
-    def __le__(self, other):
-        return _binary("<=", operator.le, self, other)
-
-    def __gt__(self, other):
-        return _binary(">", operator.gt, self, other)
-
-    def __ge__(self, other):
-        return _binary(">=", operator.ge, self, other)
-
-    def __add__(self, other):
-        return _binary("+", operator.add, self, other)
-
-    def __sub__(self, other):
-        return _binary("-", operator.sub, self, other)
-
-    def __truediv__(self, other):
-        return _binary("/", operator.truediv, self, other)
-
-    def __mod__(self, other):
-        return _binary("%", operator.mod, self, other)
-
+    __eq__, __ne__, eqNullSafe = map(_binop, ["=", "<>", "<=>"])
+    __lt__, __le__, __gt__, __ge__ = map(_binop, ["<", "<=", ">", ">="])
+    __add__, __sub__, __truediv__, __mod__ = map(_binop, "+-/%")
     __hash__ = None  # type: ignore[assignment]
 
-    def eqNullSafe(self, other) -> Sql:
-        return _binary("<=>", Column.eqNullSafe, self, other)
-
     def isNull(self) -> Sql:
-        return _apply(lambda a: f"({a} IS NULL)", Column.isNull, self)
+        return _apply(lambda a: f"({a} IS NULL)", self)
 
     def isNotNull(self) -> Sql:
-        return _apply(lambda a: f"({a} IS NOT NULL)", Column.isNotNull, self)
+        return _apply(lambda a: f"({a} IS NOT NULL)", self)
 
     def isin(self, values) -> Sql:
-        values = list(values)
-        try:
-            texts = [render(v) for v in values]
-        except TypeError:  # a value only F.lit can type: mixed mode
-            texts = None
-        if self.col is not None or texts is None:
-            return Sql(col=_operand(self).isin(values))
+        texts = [lit(v).text for v in values]
         if not texts:  # `x IN ()` does not parse; In(x, []) is false
             return Sql("false")
         return Sql(f"({self.text} IN ({', '.join(texts)}))")
 
     def rlike(self, regex: str) -> Sql:
-        if self.col is not None:
-            return Sql(col=self.col.rlike(regex))
         return Sql(f"({self.text} RLIKE {render(regex)})")
 
     def cast(self, dtype: str) -> Sql:
-        return _apply(lambda a: f"CAST({a} AS {dtype})",
-                      lambda c: c.cast(dtype), self)
+        return _apply(lambda a: f"CAST({a} AS {dtype})", self)
 
     def try_cast(self, dtype: str) -> Sql:
-        return _apply(lambda a: f"TRY_CAST({a} AS {dtype})",
-                      lambda c: c.try_cast(dtype), self)
+        return _apply(lambda a: f"TRY_CAST({a} AS {dtype})", self)
 
     def getField(self, name: str) -> Sql:
         return self[name]
@@ -145,8 +107,6 @@ class Sql:
     def __getitem__(self, key) -> Sql:
         # ['…'] string extraction: a struct field or map key, safe from
         # variable substitution (the key is a rendered literal)
-        if self.col is not None:
-            return Sql(col=self.col[key])
         return Sql(f"({self.text})[{render(key)}]")
 
 
@@ -183,14 +143,56 @@ def render(v) -> str:
     raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
 
 
+class _Scope:
+    """One compile's state: the bound Columns by name, a name per binding
+    key, and the nesting depth of the lambda being built."""
+
+    def __init__(self):
+        self.bound: dict[str, Column] = {}
+        self.names: dict = {}
+        self.depth = 0
+
+
+_SCOPE: ContextVar[_Scope | None] = ContextVar("sqlexpr_scope", default=None)
+
+
+@contextmanager
+def binding():
+    """Scope of one compile: yields the dict that collects the Columns the
+    text binds, by name, in binding order."""
+    token = _SCOPE.set(_Scope())
+    try:
+        yield _SCOPE.get().bound
+    finally:
+        _SCOPE.reset(token)
+
+
+def _scope() -> _Scope:
+    scope = _SCOPE.get()
+    if scope is None:
+        raise RuntimeError("sqlexpr binds Columns and names lambda "
+                           "variables only inside sqlexpr.binding()")
+    return scope
+
+
+def _bind(key, make) -> Sql:
+    """The reference to the Column ``make()`` builds, bound once per key."""
+    scope = _scope()
+    name = scope.names.get(key)
+    if name is None:
+        name = scope.names[key] = f"{BOUND_PREFIX}{len(scope.bound)}"
+        scope.bound[name] = make()
+    return Sql(f"`{name}`")
+
+
 def lit(v) -> Sql:
-    """A literal: its SQL text, or (mixed mode) ``F.lit`` for a value
+    """A literal: its SQL text, or a bound ``F.lit`` for a value
     :func:`render` cannot type — a timestamp, whose ``F.lit`` reads a naive
     value in the Python process's time zone, or a numpy integer."""
     try:
         return Sql(render(v))
     except TypeError:
-        return Sql(col=F.lit(v))
+        return _bind(("lit", type(v), repr(v)), lambda: F.lit(v))
 
 
 def col(name: str) -> Sql:
@@ -198,7 +200,7 @@ def col(name: str) -> Sql:
     extracted with ``['…']``."""
     top, *rest = name.split(".")
     if "${" in top:
-        out = Sql(col=F.col(top))
+        out = _bind(("col", top), lambda: F.col(top))
     else:
         out = Sql("`" + top.replace("`", "``") + "`")
     for part in rest:
@@ -207,76 +209,58 @@ def col(name: str) -> Sql:
 
 
 def as_sql(x) -> Sql:
-    """``x`` as an operand: Sql as is, a Column wrapped, a Python value as
+    """``x`` as an operand: Sql as is, a Column bound, a Python value as
     its literal."""
     if isinstance(x, Sql):
         return x
     if isinstance(x, Column):
-        return Sql(col=x)
+        return _bind(id(x), lambda: x)  # the scope keeps x, so id(x) holds
     return lit(x)
 
 
-def lift(x) -> Column:
+# Under spark.sql.parser.escapedStringLiterals=true Spark reads the
+# escapes render writes (\\ \' \u0024) literally, and a check would
+# compare against the wrong strings. '\\' is one backslash unless that
+# mode is on, so the guard folds to NULL and the coalesce away.
+_ESCAPES_GUARD = (
+    "coalesce(CASE WHEN '\\\\' <> char(92) THEN raise_error("
+    "'spark.sql.parser.escapedStringLiterals is true: the validation plan "
+    "writes string literals for false, set it to false to run it') END, {})")
+
+
+def lift(x: Sql) -> Column:
     """The Column of an expression: one ``F.expr`` of its text."""
-    x = as_sql(x)
-    return x.col if x.col is not None else F.expr(x.text)
+    text = x.text
+    return F.expr(_ESCAPES_GUARD.format(text) if "\\" in text else text)
 
 
-def _operand(x: Sql) -> Column:
-    """:func:`lift` for an operand of a mixed-mode operation, made once per
-    :class:`Sql` object: an operand used twice next to Columns (a shared
-    empty array) costs one ``F.expr``. Text-only plans lift once at the top
-    and keep no Column."""
-    if x.col is not None:
-        return x.col
-    if x._lifted is None:
-        x._lifted = F.expr(x.text)
-    return x._lifted
+def _apply(fmt, *args) -> Sql:
+    return Sql(fmt(*[as_sql(a).text for a in args]))
 
 
-def _apply(fmt, colfn, *args) -> Sql:
-    args = [as_sql(a) for a in args]
-    if all(a.col is None for a in args):
-        return Sql(fmt(*[a.text for a in args]))
-    return Sql(col=colfn(*map(_operand, args)))
+def _binary(op: str, a, b) -> Sql:
+    return _apply(lambda x, y: f"({x} {op} {y})", a, b)
 
 
-def _binary(op: str, colfn, a, b) -> Sql:
-    return _apply(lambda x, y: f"({x} {op} {y})", colfn, a, b)
-
-
-def _nary(op: str, fmt, colfn, xs) -> Sql:
+def _nary(op: str, fmt, xs) -> Sql:
     terms: list[Sql] = []
     for x in map(as_sql, xs):
         terms.extend(x._terms if x._op == op else (x,))
     if len(terms) == 1:
         return terms[0]
-    if all(t.col is None for t in terms):
-        return Sql(fmt([t.text for t in terms]), op=op, terms=tuple(terms))
-    runs = []
-    for is_text, run in itertools.groupby(terms, lambda t: t.col is None):
-        run = list(run)
-        if is_text:
-            runs.append(_operand(run[0] if len(run) == 1 else Sql(
-                fmt([t.text for t in run]))))
-        else:
-            runs.extend(t.col for t in run)
-    return Sql(col=colfn(runs))
+    return Sql(fmt([t.text for t in terms]), op=op, terms=tuple(terms))
 
 
 def and_all(xs) -> Sql:
-    return _nary("AND", lambda ts: f"({' AND '.join(ts)})",
-                 lambda cs: reduce(operator.and_, cs), xs)
+    return _nary("AND", lambda ts: f"({' AND '.join(ts)})", xs)
 
 
 def or_all(xs) -> Sql:
-    return _nary("OR", lambda ts: f"({' OR '.join(ts)})",
-                 lambda cs: reduce(operator.or_, cs), xs)
+    return _nary("OR", lambda ts: f"({' OR '.join(ts)})", xs)
 
 
 def concat(*xs) -> Sql:
-    return _nary("concat", lambda ts: f"concat({', '.join(ts)})",
-                 lambda cs: F.concat(*cs), xs)
+    return _nary("concat", lambda ts: f"concat({', '.join(ts)})", xs)
 
 
 class When:
@@ -289,17 +273,9 @@ class When:
         return When(self._branches + [(cond, value)])
 
     def otherwise(self, value) -> Sql:
-        parts = [as_sql(x) for b in self._branches for x in b]
-        other = as_sql(value)
-        if all(p.col is None for p in parts + [other]):
-            arms = " ".join(f"WHEN {c.text} THEN {v.text}"
-                            for c, v in zip(parts[::2], parts[1::2]))
-            return Sql(f"CASE {arms} ELSE {other.text} END")
-        lifted = [_operand(p) for p in parts]
-        out = F.when(lifted[0], lifted[1])
-        for c, v in zip(lifted[2::2], lifted[3::2]):
-            out = out.when(c, v)
-        return Sql(col=out.otherwise(_operand(other)))
+        arms = " ".join(f"WHEN {as_sql(c).text} THEN {as_sql(v).text}"
+                        for c, v in self._branches)
+        return Sql(f"CASE {arms} ELSE {as_sql(value).text} END")
 
 
 def when(cond, value) -> When:
@@ -308,66 +284,54 @@ def when(cond, value) -> When:
 
 def struct(**fields) -> Sql:
     """``named_struct`` in keyword order (``F.struct`` of aliased fields)."""
-    names = list(fields)
-    return _apply(
-        lambda *ts: "named_struct(" + ", ".join(
-            f"{render(n)}, {t}" for n, t in zip(names, ts)) + ")",
-        lambda *cs: F.struct(*[c.alias(n) for n, c in zip(names, cs)]),
-        *fields.values())
+    return Sql("named_struct(" + ", ".join(
+        f"{render(n)}, {as_sql(x).text}" for n, x in fields.items()) + ")")
 
 
-def _function(name: str, colfn):
+def _function(name: str):
     def call(*args) -> Sql:
-        return _apply(lambda *ts: f"{name}({', '.join(ts)})", colfn, *args)
+        return _apply(lambda *ts: f"{name}({', '.join(ts)})", *args)
     call.__name__ = name
     return call
 
 
-coalesce = _function("coalesce", F.coalesce)
-array = _function("array", F.array)
-size = _function("size", F.size)
-array_distinct = _function("array_distinct", F.array_distinct)
-array_min = _function("array_min", F.array_min)
-array_max = _function("array_max", F.array_max)
-map_keys = _function("map_keys", F.map_keys)
-map_entries = _function("map_entries", F.map_entries)
-slice = _function("slice", F.slice)  # noqa: A001 — the SQL function's name
-get = _function("get", F.get)
-greatest = _function("greatest", F.greatest)
-length = _function("length", F.length)
-lower = _function("lower", F.lower)
-regexp_replace = _function("regexp_replace", F.regexp_replace)
-
-# lambda variables are named by nesting depth, so an inner lambda never
-# shadows the outer one's variable and the same suite renders the same text
-_LAMBDA = threading.local()
+coalesce = _function("coalesce")
+array = _function("array")
+size = _function("size")
+array_distinct = _function("array_distinct")
+array_min = _function("array_min")
+array_max = _function("array_max")
+map_keys = _function("map_keys")
+map_entries = _function("map_entries")
+slice = _function("slice")  # noqa: A001 — the SQL function's name
+get = _function("get")
+greatest = _function("greatest")
+length = _function("length")
+lower = _function("lower")
+regexp_replace = _function("regexp_replace")
 
 
-def _higher_order(name: str, colfn):
+def _higher_order(name: str):
+    # lambda variables are named by nesting depth, so an inner lambda never
+    # shadows the outer one's variable and the same suite renders the same
+    # text
     def call(arr, fn) -> Sql:
-        arr = as_sql(arr)
-        nargs = len(inspect.signature(fn).parameters)
-        if arr.col is None:
-            depth = getattr(_LAMBDA, "depth", 0)
-            names = [f"__lv{depth}", f"__li{depth}"][:nargs]
-            _LAMBDA.depth = depth + 1
-            try:
-                body = as_sql(fn(*map(Sql, names)))
-            finally:
-                _LAMBDA.depth = depth
-            if body.col is None:
-                params = names[0] if nargs == 1 else f"({', '.join(names)})"
-                return Sql(f"{name}({arr.text}, {params} -> {body.text})")
-        # mixed: pyspark builds the lambda, its body sees Column operands
-        if nargs == 2:
-            return Sql(col=colfn(_operand(arr), lambda x, i: lift(
-                fn(Sql(col=x), Sql(col=i)))))
-        return Sql(col=colfn(_operand(arr), lambda x: lift(fn(Sql(col=x)))))
+        arr, scope = as_sql(arr), _scope()
+        depth = scope.depth
+        names = [f"__lv{depth}", f"__li{depth}"][
+            :len(inspect.signature(fn).parameters)]
+        scope.depth = depth + 1
+        try:
+            body = as_sql(fn(*map(Sql, names)))
+        finally:
+            scope.depth = depth
+        params = names[0] if len(names) == 1 else f"({', '.join(names)})"
+        return Sql(f"{name}({arr.text}, {params} -> {body.text})")
     call.__name__ = name
     return call
 
 
-exists = _higher_order("exists", F.exists)
-filter = _higher_order("filter", F.filter)  # noqa: A001
-transform = _higher_order("transform", F.transform)
-forall = _higher_order("forall", F.forall)
+exists = _higher_order("exists")
+filter = _higher_order("filter")  # noqa: A001
+transform = _higher_order("transform")
+forall = _higher_order("forall")

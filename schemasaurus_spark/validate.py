@@ -244,14 +244,16 @@ class ValidationResult:
         `rand() < -1` to false and drops the disjunct (verified).
         `monotonically_increasing_id() < 0` is flagged non-deterministic,
         costs nothing, is false by contract, and is NOT folded;
-        tests/test_plans.py pins the scan's DataFilters empty."""
+        tests/test_plans.py pins the scan's DataFilters empty. The pass
+        predicate resolves on the plan's bound aliases, projected here
+        again and dropped with the violations."""
         rv = self.plan.row_valid
         pred = rv if rv is not None else F.size(VIOLATIONS_COL) == 0
         if not want_valid:
             pred = ~pred
         barrier = F.monotonically_increasing_id() < F.lit(0)  # always FALSE
-        return (self.validated.where(pred | barrier)
-                .drop(VIOLATIONS_COL))
+        return (self.plan.bind(self.validated).where(pred | barrier)
+                .drop(VIOLATIONS_COL, *self.plan.bound))
 
     def valid_rows(self) -> DataFrame:
         return self._row_filter(True)

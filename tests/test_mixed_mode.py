@@ -1,7 +1,11 @@
-"""Mixed mode: Columns built by a suite's own callables (``Conform``) and
-by registered extension hooks combine with the compiler's SQL text inside
-combinator branches and dependency targets, with the same violations the
-reference emits — checked against hand-written rows, in emission order."""
+"""Bound Columns: Columns built by a suite's own callables (``Conform``),
+by registered extension hooks and by ``F.lit`` for values SQL text cannot
+type enter the compiler's SQL text as reserved names. They combine with it
+inside combinator branches, dependency targets and lambdas, with the same
+violations the reference emits — checked against hand-written rows, in
+emission order, and against the scalar check of each element."""
+
+import datetime
 
 from pyspark.sql import functions as F
 
@@ -49,3 +53,53 @@ def test_conform_and_extension_inside_combinators_and_dependency(spark):
         (3, "maximum", "s", "200", "100", "shall be <= 100"),
         (4, "oneOf", "b", "7", None, "does not meet exactly one requirement"),
     ]
+
+
+def _ids(frame, id_column="id"):
+    return sorted(r[id_column] for r in frame.select(id_column).collect())
+
+
+def test_row_filter_with_an_extension_hook(spark):
+    """valid_rows()/invalid_rows() project the hook's bound Columns again
+    and split the rows exactly as the violations do."""
+    Even = _ensure_even_registered()
+    df = spark.createDataFrame(
+        [(1, 4, 2), (2, 5, 3), (3, None, -1), (4, 8, None)],
+        "id int, s int, a int")
+    suite = dsl.Suite(id_column="id", columns={
+        "s": [Even()], "a": [dsl.Minimum(0)]})
+    res = validate(df, suite)
+    assert res.plan.bound
+    bad = sorted({r["id"] for r in res.violations().collect()})
+    assert bad == [2, 3]
+    assert _ids(res.invalid_rows()) == bad
+    assert _ids(res.valid_rows()) == [1, 4]
+    assert res.valid_rows().columns == df.columns
+
+
+def _offenders(res, code):
+    return sorted((r["id"], r["value"]) for r in res.violations().collect()
+                  if r["constraint_id"] == code)
+
+
+def test_bound_literal_inside_a_lambda(spark):
+    """An Enum of timestamps (bound ``F.lit`` values) inside ``Items`` and
+    inside ``Items(fields=…)`` flags the elements the same Enum flags on
+    the exploded elements."""
+    t0, t1 = datetime.datetime(2024, 1, 1, 12), datetime.datetime(2024, 1, 2)
+    rows = [(1, [t0, t0]), (2, [t0, t1, None]), (3, None), (4, []),
+            (5, [t1, t1])]
+    df = spark.createDataFrame(
+        [(i, a, None if a is None else [(x, k) for k, x in enumerate(a)])
+         for i, a in rows],
+        "id int, a array<timestamp>, s array<struct<at: timestamp, k: int>>")
+    enum = [dsl.Enum([t0])]
+    res = validate(df, dsl.Suite(id_column="id", columns={
+        "a": [dsl.Items(enum)], "s": [dsl.Items(fields={"at": enum})]}))
+    flat = validate(df.selectExpr("id", "explode(s) AS e")
+                    .selectExpr("id", "e.at AS at"),
+                    dsl.Suite(id_column="id", columns={"at": enum}))
+    expected = _offenders(flat, "enum")
+    assert [i for i, _ in expected] == [2, 5, 5]
+    assert _offenders(res, "items.enum") == expected
+    assert _offenders(res, "items.at.enum") == expected

@@ -155,3 +155,19 @@ def test_row_filter_barrier_blocks_constraint_pushdown(spark, tmp_path):
         assert m is not None and m.group(1).strip() == "", \
             f"constraint tree pushed into the scan: {m.group(1)[:200]}"
         assert frame.count() == n_expect
+    # the same suite plus a row-level Conform: its predicate is a bound
+    # alias, which the row filter projects again above the scan
+    n_bad = df.where("n_tok % 7 = 0").count()
+    assert 0 < n_bad < 500
+    res = validate(df, dsl.Suite(
+        id_column="doc_id", columns=suite.columns,
+        row=[("n_tok", dsl.Conform(name="not_mult7",
+                                   expr=lambda c: c % 7 != 0))]))
+    assert res.plan.bound
+    for frame, n_expect in [(res.valid_rows(), 500 - n_bad),
+                            (res.invalid_rows(), n_bad)]:
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        m = re.search(r"DataFilters: \[([^\]]*)\]", plan)
+        assert m is not None and m.group(1).strip() == "", \
+            f"constraint tree pushed into the scan: {m.group(1)[:200]}"
+        assert frame.count() == n_expect

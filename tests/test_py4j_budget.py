@@ -1,10 +1,10 @@
 """Round-trip budget of ``validate(df, suite)``. The compiler writes SQL
 text, so building the validation projection costs a handful of py4j round
-trips — the schema read, one ``F.expr`` per run of SQL text and the
-``withColumn`` — not one per ``Column`` call. Columns that a suite's own
-callables build stay theirs: the gate suite's row-level ``Conform`` makes
-its own calls, which are not the engine's, and combining its Column costs
-a few more."""
+trips — the schema read, one ``F.expr`` and the ``withColumn`` — not one
+per ``Column`` call. Columns that a suite's own callables build stay
+theirs: the gate suite's row-level ``Conform`` makes its own calls, which
+are not the engine's; its predicate is bound to a reserved name, which
+costs one projection to add it and one ``drop`` to remove it."""
 
 import sys
 from pathlib import Path
@@ -23,12 +23,11 @@ ROOT = Path(__file__).resolve().parents[1]
 CORPUS = ROOT / "tests" / "data" / "official_draft4"
 
 # measured on pyspark 4.1.2. A corpus batch: the schema read (2), one
-# F.expr (3), the withColumn (1). The gate suite: the schema read and the
-# withColumn (3), its Conform's argument (3), the null-safe test of the
-# predicate (4), the Conform fragment (10), the row's pass-predicate AND
-# (4), the fragments' concat (12) and the fast-path CASE (4); the callable
-# itself makes 10 more
-GATE_ENGINE_CALLS = 40
+# F.expr (3), the withColumn (1). The gate suite: the schema read (2), the
+# F.expr of its Conform's argument (3), the withColumn of the bound
+# predicate (1), the F.expr of the violation array (3), its withColumn (1)
+# and the drop of the bound name (6); the callable itself makes 10 more
+GATE_ENGINE_CALLS = 16
 CORPUS_BATCH_CALLS = 6
 
 

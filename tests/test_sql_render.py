@@ -16,8 +16,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from schemasaurus_spark import dsl, sqlexpr
+from schemasaurus_spark.compiler import compile_suite
 from schemasaurus_spark.functions.formats import DEFAULT_FORMATS
 from schemasaurus_spark.profiler import suggest_suite
+from schemasaurus_spark.session import local_frame
 from schemasaurus_spark.validate import validate
 
 CORPUS = Path(__file__).parent / "data" / "official_draft4"
@@ -76,20 +78,58 @@ def test_render_types_doubles_as_double_not_decimal():
 
 
 def test_lit_falls_back_to_a_column_for_what_render_cannot_type(spark):
-    """A timestamp or a numpy integer has no text literal with F.lit's value
-    and type: ``lit`` hands the value to ``F.lit`` (mixed mode)."""
+    """A timestamp, a numpy integer or a timedelta has no text literal with
+    F.lit's value and type: the compiled plan binds ``F.lit`` of it under a
+    reserved name, projected with F.lit's type and value, and an Enum of it
+    checks against that value. An empty Enum (``x IN ()``) is false."""
     ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
-    for v in [ts, np.int64(7), datetime.timedelta(seconds=3)]:
+    td = datetime.timedelta(seconds=3)
+    values = {"at": ts, "n": np.int64(7), "d": td}
+    for v in values.values():
         with pytest.raises(TypeError):
             sqlexpr.render(v)
-        got = sqlexpr.lit(v)
-        assert got.col is not None
-        df = spark.range(1).select(got.col.alias("g"), F.lit(v).alias("l"))
-        assert df.schema["g"].dataType == df.schema["l"].dataType
-        row = df.collect()[0]
-        assert row["g"] == row["l"]
-    assert sqlexpr.Sql("`x`").isin([ts]).col is not None
-    assert sqlexpr.Sql("`x`").isin([]).text == "false"
+    df = spark.createDataFrame(
+        [(1, ts, 7, td, "a"), (2, ts + td, 8, td * 2, None)],
+        "id int, at timestamp, n bigint, d interval day to second, s string")
+    suite = dsl.Suite(id_column="id", columns={
+        **{c: [dsl.Enum([v])] for c, v in values.items()},
+        "s": [dsl.Enum([])]})
+    plan = compile_suite(suite, df.schema)
+    names = list(plan.bound)
+    assert len(names) == len(values)
+    got = plan.bind(df).select(
+        *names, *[F.lit(v).alias(f"l{i}") for i, v in enumerate(values.values())])
+    row = got.collect()[0]
+    for i, name in enumerate(names):
+        assert got.schema[name].dataType == got.schema[f"l{i}"].dataType
+        assert row[name] == row[f"l{i}"]
+    assert sorted((r["id"], r["column"], r["constraint_id"])
+                  for r in validate(df, suite).violations().collect()) == [
+        (1, "s", "enum"), (2, "at", "enum"), (2, "d", "enum"),
+        (2, "n", "enum")]
+    with pytest.raises(ValueError, match="reserved"):
+        validate(df.withColumn("__SX0", F.lit(1)), suite)
+
+
+def test_escaped_string_literals_mode_fails_loudly(spark):
+    """Under ``spark.sql.parser.escapedStringLiterals=true`` Spark reads
+    the escapes ``render`` writes literally (``^a\\d$`` would become
+    ``^a\\\\d\\u0024`` and flag ``a1``): a plan whose text holds an escape
+    raises, naming the config, instead of a wrong verdict."""
+    df = local_frame(spark, [(1, "a1"), (2, "b")], "id int, s string")
+    suite = dsl.Suite(id_column="id", columns={"s": [dsl.Pattern(r"^a\d$")]})
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        res = validate(df, suite)
+        for frame in [res.violations(), res.valid_rows()]:
+            with pytest.raises(Exception, match="escapedStringLiterals"):
+                frame.collect()
+    finally:
+        spark.conf.unset(key)
+    res = validate(df, suite)
+    assert [r["id"] for r in res.violations().collect()] == [2]
+    assert [r["id"] for r in res.valid_rows().collect()] == [1]
 
 
 def test_decimal_date_and_timestamp_bounds_validate(spark):
