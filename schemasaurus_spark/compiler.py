@@ -139,7 +139,7 @@ class CompiledColumn:
         self.valid = ok if self.valid is None else S.and_all([self.valid, ok])
 
 
-@dataclass
+@dataclass(eq=False)
 class ValidationPlan:
     """The compiled artifact — analog of the specialized closure the
     reference returns (``compiler.js:201-211``). Holds the row's violation

@@ -17,8 +17,11 @@ partition-level assertions):
 * each test's ``data`` value becomes one COLUMN of a single-row DataFrame,
   typed from the data itself (object data → struct column, its schema's
   ``properties`` → dotted sub-columns);
-* ~24 tests batch into ONE frame + ONE compiled suite = one Spark job
-  (the round-3 batching strategy);
+* up to ``batch_size`` (64) tests batch into ONE frame + ONE compiled
+  suite (the round-3 batching strategy); the frame is a local relation,
+  the validation projection folds into it, and the driver reads the one
+  row's violation array, so a batch runs no Spark job — like the
+  reference, which calls the validator in-process once per case;
 * a test passes iff the engine emits no violation attributed to its column
   — mirroring the reference's ``{valid: errors.length === 0}``
   (v4validator.js:326).
@@ -55,7 +58,7 @@ from schemasaurus_spark.schema_json import (
     suite_from_json_schema,
 )
 from schemasaurus_spark.session import local_frame
-from schemasaurus_spark.validate import validate
+from schemasaurus_spark.validate import _collect_violations, validate
 
 # mirror of /root/reference/test/ignored.json (substring match on either
 # description, official_suite_spec.js:27-29)
@@ -385,16 +388,17 @@ def plan_test(t: OfficialTest, ref_loader=None) -> TestPlan:
 
 def run_official_tests(spark: SparkSession, tests: list[OfficialTest],
                        ignored: list[str] | None = None,
-                       batch_size: int = 24,
+                       batch_size: int = 64,
                        ref_loader=None) -> SuiteRunResult:
-    """Evaluate official-format tests, batched (~24 per Spark job).
+    """Evaluate official-format tests, ``batch_size`` to a frame.
 
-    A test whose schema carries ``definitions`` runs in its own frame
-    (batch suites merge columns into one Suite; definition names from
-    different schemas could collide)."""
+    Batch suites merge every test's ``definitions`` into one namespace, so
+    a test starts a new batch when the current one is full or binds one of
+    its definition names to a different definition."""
     ignored = REFERENCE_IGNORED if ignored is None else ignored
     res = SuiteRunResult()
-    planned, solo = [], []
+    groups: list[list[tuple[OfficialTest, TestPlan]]] = []
+    defs: dict = {}
     for t in tests:
         if is_ignored(t, ignored):
             res.skipped.append((t, "ignore-list"))
@@ -404,11 +408,13 @@ def run_official_tests(spark: SparkSession, tests: list[OfficialTest],
         except (_Untypeable, SchemaTranslationError) as e:
             res.skipped.append((t, str(e)))
             continue
-        (solo if plan.defs else planned).append((t, plan))
+        if (not groups or len(groups[-1]) >= batch_size
+                or any(defs.get(n, d) != d for n, d in plan.defs.items())):
+            groups.append([])
+            defs = {}
+        groups[-1].append((t, plan))
+        defs.update(plan.defs)
 
-    groups = ([planned[i:i + batch_size]
-               for i in range(0, len(planned), batch_size)]
-              + [[tp] for tp in solo])
     for group in groups:
         _run_batch(spark, group, res)
     return res
@@ -445,7 +451,7 @@ def _execute_batch(spark: SparkSession,
     suite = dsl.Suite(id_column="cid", columns=columns, row=rowcs,
                       definitions=defs)
     got: dict[int, bool] = {i: True for i in range(len(tests))}
-    for r in validate(df, suite).violations().collect():
+    for r in _collect_violations(validate(df, suite)):
         base = r["column"].split(".")[0].split("[")[0]
         got[int(base[1:])] = False
     for i, (t, _) in enumerate(tests):

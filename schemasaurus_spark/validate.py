@@ -19,13 +19,17 @@ Execution shape (scale notes):
   runs no Spark job.
 * ``violations()`` explodes the violation arrays — rows flow only for
   failing checks, so a clean 10^12-row table emits nothing.
+* Small driver-built frames (the official corpus batches,
+  :func:`make_value_validator`) read the same rows with
+  :func:`_collect_violations`, which flattens the collected arrays on the
+  driver and runs no Spark job over a local relation.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Row, functions as F, types as T
 
 from schemasaurus_spark.compiler import (
     VIOLATIONS_COL,
@@ -88,20 +92,10 @@ class ValidationResult:
             "__v.message",
             F.col("__pos").alias("pos"),
         )
-        extra = self.undeclared_columns()
+        extra = _undeclared_violation_rows(self)
         if extra:
-            # additionalProperty=false analog (v4validator.js:287): the
-            # schema is static, so one violation per undeclared COLUMN
-            # (doc_id null), not per row — documented divergence.
-            from schemasaurus_spark.messages import render_message
-
-            spark = self.validated.sparkSession
-            msg = render_message("additionalProperties",
-                                 overrides=self.plan.suite.messages)
-            rows = [(None, "additionalProperties", c, None, None, msg, 0)
-                    for c in extra]
-            schema_cols = out.schema
-            out = out.unionByName(local_frame(spark, rows, schema_cols))
+            out = out.unionByName(
+                local_frame(self.validated.sparkSession, extra, out.schema))
         return out
 
     def undeclared_columns(self) -> list[str]:
@@ -322,6 +316,40 @@ class ValidationResult:
         return all(r[3] for r in self.verdict_rows())
 
 
+def _undeclared_violation_rows(res: ValidationResult) -> list[tuple]:
+    """The static rows :meth:`ValidationResult.violations` appends, in its
+    column order: additionalProperty=false analog (v4validator.js:287) —
+    the schema is static, so one violation per undeclared COLUMN (doc_id
+    null), not per row; documented divergence."""
+    extra = res.undeclared_columns()
+    if not extra:
+        return []
+    from schemasaurus_spark.messages import render_message
+
+    msg = render_message("additionalProperties",
+                         overrides=res.plan.suite.messages)
+    return [(None, "additionalProperties", c, None, None, msg, 0)
+            for c in extra]
+
+
+def _collect_violations(res: ValidationResult) -> list[Row]:
+    """The rows of ``res.violations().collect()``, flattened on the driver
+    from the collected ``(id, __violations)`` projection instead of a
+    ``posexplode``. Over a local relation (``session.local_frame``) the
+    projection folds into the relation at optimization
+    (``ConvertToLocalRelation``) and the collect runs no Spark job; a
+    ``Generate`` does not fold, so ``violations()`` over the same frame is
+    planned, code-generated and scheduled as a job. For small driver-built
+    frames only: every violation array comes to the driver."""
+    sel = res.validated.select(F.col(res.id_column), VIOLATIONS_COL)
+    row = Row(sel.columns[0], "constraint_id", "column", "value", "arg",
+              "message", "pos")
+    out = [row(rid, *v, pos)
+           for rid, vs in sel.collect()
+           for pos, v in enumerate(vs or ())]
+    return out + [row(*r) for r in _undeclared_violation_rows(res)]
+
+
 def split_frame(validated: DataFrame, flag_col: str = "quarantined",
                 report_col: str = "violation_report") -> DataFrame:
     """The quarantine-split projection shared by the batch sink
@@ -357,16 +385,19 @@ def make_value_validator(spark, suite: Suite, schema: str):
     with plain dicts; each error carries the reference's record fields
     (code, message, value, arg, path=[column]).
 
-    This is a convenience for parity/tests and small interactive checks —
-    it round-trips one row through a local DataFrame, so it is NOT the
-    scale path (tables go through :func:`validate`)."""
+    Each call builds a one-row local frame, applies the compiled plan and
+    reads the row's violation array on the driver: the projection folds
+    into the local relation, so a call runs no Spark job (unless the suite
+    holds a pandas ``Conform``, which needs a Python worker). It is for
+    parity/tests and small interactive checks, NOT the scale path (tables
+    go through :func:`validate`)."""
     t = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
     plan = compile_suite(suite, t)
 
     def validator(value: dict) -> dict:
         row = tuple(value.get(f.name) for f in t.fields)
         df = local_frame(spark, [row], t)
-        rows = ValidationResult(plan, plan.apply(df)).violations().collect()
+        rows = _collect_violations(ValidationResult(plan, plan.apply(df)))
         errors = [
             {"code": r["constraint_id"], "message": r["message"],
              "value": r["value"], "arg": r["arg"], "path": [r["column"]]}

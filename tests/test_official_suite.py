@@ -12,7 +12,7 @@ from pathlib import Path
 
 import pytest
 
-from plan_walk import executed_nodes, python_rdd_scans
+from plan_walk import executed_nodes, python_rdd_scans, spark_jobs
 from schemasaurus_spark import official_suite
 from schemasaurus_spark.official_suite import (
     OfficialTest, REFERENCE_IGNORED, is_ignored, load_official_suite,
@@ -88,6 +88,59 @@ def test_corpus_batch_frame_is_local_relation(spark, monkeypatch):
         nodes = executed_nodes(df)
         assert not python_rdd_scans(nodes)
         assert [n.nodeName() for n in nodes] == ["LocalTableScan"]
+
+
+def _recorded_frames(monkeypatch) -> list:
+    """Patch ``official_suite.validate`` to record each batch's frame."""
+    frames = []
+    real_validate = official_suite.validate
+
+    def recording_validate(df, suite):
+        frames.append(df)
+        return real_validate(df, suite)
+
+    monkeypatch.setattr(official_suite, "validate", recording_validate)
+    return frames
+
+
+def test_corpus_batches_run_no_spark_job(spark):
+    """A batch's validation projection folds into its local relation and
+    the driver reads the violation arrays, so no batch starts a job."""
+    tests = [t for f in ("definitions.json", "ref.json", "minimum.json")
+             for t in load_official_suite(CORPUS / f)]
+    with spark_jobs(spark, "official-corpus") as jobs:
+        res = run_official_tests(spark, tests)
+    assert res.passed and not res.failed
+    assert jobs == []
+
+
+def test_definitions_cases_share_frames(spark, monkeypatch):
+    """``ref.json``'s ``definitions`` cases batch with the rest instead of
+    one frame per case."""
+    frames = _recorded_frames(monkeypatch)
+    res = run_official_tests(spark, load_official_suite(CORPUS / "ref.json"))
+    assert res.passed and not res.failed
+    assert sum(1 for t in res.passed if "definitions" in t.schema) >= 10
+    assert len(frames) == 1
+
+
+def test_conflicting_definition_names_split_frames(spark, monkeypatch):
+    """Two schemas that bind the same definition name to different
+    definitions cannot share one suite's namespace: they land in different
+    frames, and each grades against its own definition."""
+    def case(kind, data, valid):
+        schema = {"definitions": {"d": {"type": kind}},
+                  "$ref": "#/definitions/d"}
+        return OfficialTest("hand.json", f"ref to d as {kind}",
+                            f"{data!r}", schema, data, valid)
+
+    tests = [case("integer", 5, True), case("string", 5, False),
+             case("integer", "x", False), case("string", "x", True)]
+    frames = _recorded_frames(monkeypatch)
+    res = run_official_tests(spark, tests)
+    assert not res.failed and not res.skipped
+    assert len(res.passed) == len(tests)
+    assert len(frames) == len(tests)
 
 
 def test_corpus_has_at_least_300_tests():

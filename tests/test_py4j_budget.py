@@ -17,7 +17,7 @@ from schemasaurus_spark.official_suite import (
     REFERENCE_IGNORED, is_ignored, load_official_suite, plan_test,
 )
 from schemasaurus_spark.session import local_frame
-from schemasaurus_spark.validate import validate
+from schemasaurus_spark.validate import _collect_violations, validate
 
 ROOT = Path(__file__).resolve().parents[1]
 CORPUS = ROOT / "tests" / "data" / "official_draft4"
@@ -29,6 +29,12 @@ CORPUS = ROOT / "tests" / "data" / "official_draft4"
 # and the drop of the bound name (6); the callable itself makes 10 more
 GATE_ENGINE_CALLS = 16
 CORPUS_BATCH_CALLS = 6
+# a whole corpus batch, as official_suite runs it: the Arrow local_frame
+# (24: the DDL parse 3, session and conf reads 15, the Arrow file read 3,
+# toDataFrame 3), validate (6, as above) and the driver-side collect of
+# the violation arrays (22: two F.col 6, their toSeq 6, the select 1, the
+# schema read 2, the collect with its call sites 3, the result socket 4)
+CORPUS_BATCH_RUN_CALLS = 52
 
 
 @pytest.fixture(scope="module")
@@ -69,7 +75,9 @@ def test_gate_suite_validate_budget(spark, gate_suite):
     assert n[0] - own[0] <= GATE_ENGINE_CALLS <= 40
 
 
-def test_corpus_batch_validate_budget(spark):
+def _corpus_batch(n: int = 24) -> tuple[list, str, dsl.Suite]:
+    """The first ``n`` graded corpus tests without ``definitions``, merged
+    into one batch: (row, frame DDL, suite)."""
     planned = []
     for t in load_official_suite(CORPUS):
         if is_ignored(t, REFERENCE_IGNORED):
@@ -81,14 +89,32 @@ def test_corpus_batch_validate_budget(spark):
         if not plan.defs:
             planned.append(plan)
     fields, row, columns, rowcs = ["cid string"], ["t0"], {}, []
-    for i, plan in enumerate(planned[:24]):
+    for i, plan in enumerate(planned[:n]):
         cols, rcs = plan.columns_for(f"c{i}")
         fields.append(f"c{i} {plan.ddl}")
         row.append(plan.value)
         columns.update(cols)
         rowcs.extend(rcs)
-    df = local_frame(spark, [tuple(row)], ", ".join(fields))
     suite = dsl.Suite(id_column="cid", columns=columns, row=rowcs)
+    return [tuple(row)], ", ".join(fields), suite
+
+
+def test_corpus_batch_validate_budget(spark):
+    rows, ddl, suite = _corpus_batch()
+    df = local_frame(spark, rows, ddl)
     with py4j_calls() as n:
         validate(df, suite)
     assert n[0] <= CORPUS_BATCH_CALLS <= 40
+
+
+def test_corpus_batch_run_budget(spark):
+    """Frame, validate and the driver-side collect of one corpus batch.
+    The first run in a process also resolves py4j's JVM class handles, so
+    the budget is read on the second."""
+    rows, ddl, suite = _corpus_batch()
+    for _ in range(2):
+        with py4j_calls() as n:
+            got = _collect_violations(validate(local_frame(spark, rows, ddl),
+                                               suite))
+    assert got
+    assert n[0] <= CORPUS_BATCH_RUN_CALLS
