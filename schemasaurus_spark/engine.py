@@ -5,7 +5,8 @@ one run over a sequences table:
 
 * row-level constraint suite (compiled, single-pass)        → violations
 * per-partition pass/fail verdicts                          → verdicts
-* doc_id uniqueness (exact salted two-phase, unconditional) → violations
+* doc_id uniqueness (exact map-side-combined groupBy, unconditional)
+                                                            → violations
 * referential check against the sources dimension           → violations
 * per-source null-rate thresholds and stat bounds           → violations
 * PSI/KS drift vs a checkpointed baseline histogram         → violations
@@ -16,6 +17,13 @@ that orchestrates the aggregate family. Its callers: ``run_full_validation``
 and the cluster job's ``--aggregate`` (``jobs/validate_job.py``), whose row
 validation is the checkpointed, resumable run instead.
 
+A gate op over a small table is bound by per-action latency, not by work:
+each Spark action pays its job and stage scheduling in turn. So the
+independent actions of one call — the aggregate checks' and, under
+``run_full_validation``, the row result's counts aggregate — run at once
+on threads that inherit the caller's job group, and the driver assembles
+the result after the last one ends.
+
 All violation families share one schema
 (doc_id, constraint_id, column, value, arg, message) and stack with
 ``unionByName`` — the columnar form of the reference's single error list
@@ -24,10 +32,12 @@ All violation families share one schema
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.util import inheritable_thread_target
 
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.operators import aggregates as agg
@@ -190,6 +200,21 @@ def _resolve(df: DataFrame, checks: AggregateChecks):
     return unique_key, drift_by
 
 
+def _run_concurrently(spark, actions: list) -> list:
+    """Run each zero-argument callable of ``actions`` on its own thread and
+    return their results in order. The pool lives for this call only.
+    Each thread inherits the caller's job group, description, scheduler
+    pool and tags (``inheritable_thread_target``), so its jobs are the
+    caller's jobs. The first error, in ``actions`` order, re-raises after
+    every action has ended."""
+    if not actions:
+        return []
+    with ThreadPoolExecutor(len(actions)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(a))
+                   for a in actions]
+        return [f.result() for f in futures]
+
+
 def aggregate_checks(df: DataFrame, checks: AggregateChecks | None = None,
                      id_column: str = "doc_id") -> AggregateResult:
     """Every aggregate check ``checks`` configures, over ``df``.
@@ -202,18 +227,32 @@ def aggregate_checks(df: DataFrame, checks: AggregateChecks | None = None,
     unfusable by shape). All null-rate, stat-bound and drift violation
     frames are then driver-built LocalTableScans. ``agg_violations`` stays
     lazy: on a CLEAN table consuming it re-reads nothing, but on a DIRTY
-    one its uniqueness part re-runs the salted aggregation and its
+    one its uniqueness part re-runs the per-key aggregation and its
     referential part the anti-join (or the scaled semi-join) — both
     re-scan the table to list offending rows. ``n_agg`` never runs it:
     every check's violation count is already on the driver —
-    tests/test_scan_budget.py pins the 2-scan budget.
+    tests/test_scan_budget.py pins the scan budget.
+
+    The Spark actions a config needs — uniqueness, the scaled referential
+    screen, the fused pass and the drift baseline's collect — are
+    mutually independent, and on a small table each costs mostly fixed
+    per-action latency, so they run at once, on a pool that lives for
+    this call (:func:`_run_concurrently`); the driver then assembles the
+    result from what they brought back. Config errors (:func:`_resolve`)
+    still raise before any job.
 
     The drift histogram rides the fused pass whenever ``drift_edges`` is
     set; PSI/KS are compared only against a ``drift_baseline``. Without
     one, ``drift_counts`` carries this table's histogram to bootstrap
     from. ``id_column`` names the offending rows of a dirty referential
     check."""
-    checks = checks or AggregateChecks()
+    return _aggregate_checks(df, checks or AggregateChecks(), id_column)
+
+
+def _aggregate_checks(df: DataFrame, checks: AggregateChecks,
+                      id_column: str, *also) -> AggregateResult:
+    """:func:`aggregate_checks`, with the zero-argument callables ``also``
+    run concurrently with the checks' own actions, for their effect."""
     spark = df.sparkSession
     unique_key, drift_by = _resolve(df, checks)
     null_rate_max = checks.null_rate_max or {}
@@ -221,23 +260,15 @@ def aggregate_checks(df: DataFrame, checks: AggregateChecks | None = None,
     # scaled referential keeps the dim OUT of the fused pass (the fused
     # ref-miss count broadcasts the dim, which ref_scaled says it cannot)
     fused_dim = None if checks.ref_scaled else checks.sources_dim
-    res = AggregateResult(_empty_violations_df(spark), 0)
-    # every check's violations with their count, known on the driver
-    parts: list[agg.CheckViolations] = []
+    actions = {}
     if unique_key:
-        res.unique = agg.uniqueness_check(df, unique_key)
-        # sequence(2, occ) emits occ - 1 rows per duplicated key
-        parts.append(agg.CheckViolations(
-            res.unique.violations,
-            res.unique.screen_total - res.unique.screen_distinct))
+        actions["unique"] = lambda: agg.uniqueness_check(df, unique_key)
     if checks.sources_dim is not None and checks.ref_scaled:
-        parts.append(agg.referential_check_scaled(
-            df, checks.sources_dim, checks.ref_column,
-            id_column=id_column))
-        res.ref_missing_rows = parts[-1].n_rows
+        actions["ref_scaled"] = lambda: agg.referential_check_scaled(
+            df, checks.sources_dim, checks.ref_column, id_column=id_column)
     if (null_rate_max or stat_bounds or fused_dim is not None
             or checks.drift_edges):
-        fused = agg.fused_aggregate_pass(
+        actions["fused"] = lambda: agg.fused_aggregate_pass(
             df,
             null_rate_cols=list(null_rate_max),
             null_rate_by=checks.null_rate_by,
@@ -249,6 +280,25 @@ def aggregate_checks(df: DataFrame, checks: AggregateChecks | None = None,
             drift_is_array=checks.drift_is_array,
             stat_bound_cols=list(stat_bounds),
         )
+    if checks.drift_baseline is not None:
+        actions["baseline"] = checks.drift_baseline.collect
+    done = dict(zip(actions, _run_concurrently(
+        spark, [*actions.values(), *also])))
+
+    res = AggregateResult(_empty_violations_df(spark), 0)
+    # every check's violations with their count, known on the driver
+    parts: list[agg.CheckViolations] = []
+    if "unique" in done:
+        res.unique = done["unique"]
+        # sequence(2, occ) emits occ - 1 rows per duplicated key
+        parts.append(agg.CheckViolations(
+            res.unique.violations,
+            res.unique.screen_total - res.unique.screen_distinct))
+    if "ref_scaled" in done:
+        parts.append(done["ref_scaled"])
+        res.ref_missing_rows = parts[-1].n_rows
+    if "fused" in done:
+        fused = done["fused"]
         if fused_dim is not None:
             res.ref_missing_rows = fused.ref_missing_total()
             if res.ref_missing_rows > 0:
@@ -266,10 +316,9 @@ def aggregate_checks(df: DataFrame, checks: AggregateChecks | None = None,
                 spark, fused, stat_bounds)
             parts.append(res.stat_bounds)
         res.drift_counts = fused.drift_counts()
-        if checks.drift_baseline is not None:
+        if "baseline" in done:
             res.drift = agg.drift_from_counts(
-                res.drift_counts,
-                agg.hist_rows_to_map(checks.drift_baseline.collect()),
+                res.drift_counts, agg.hist_rows_to_map(done["baseline"]),
                 len(checks.drift_edges) - 1, checks.drift_column,
                 checks.psi_threshold, checks.ks_threshold)
             parts.append(agg.drift_violations(
@@ -286,7 +335,11 @@ def run_full_validation(df: DataFrame, suite: Suite,
                         checks: AggregateChecks | None = None
                         ) -> FullValidationResult:
     """The row-level suite (:func:`validate`) plus
-    :func:`aggregate_checks` over the same table."""
+    :func:`aggregate_checks` over the same table. The row result's counts
+    aggregate (:meth:`ValidationResult._counts`, behind ``verdicts()``,
+    ``metrics()`` and ``is_valid()``) runs here, concurrently with the
+    aggregate checks' actions, so reading those surfaces afterwards starts
+    no Spark job."""
     row = validate(df, suite)
-    return FullValidationResult(
-        row=row, **vars(aggregate_checks(df, checks, suite.id_column)))
+    return FullValidationResult(row=row, **vars(_aggregate_checks(
+        df, checks or AggregateChecks(), suite.id_column, row._counts)))

@@ -16,12 +16,12 @@ Scale design (the part that must survive 10^12 rows):
 * **column_stats** fuses every per-column aggregate into ONE ``agg`` so the
   table is scanned once; partial aggregation makes the shuffle
   O(groups × columns), not O(rows).
-* **uniqueness** is an UNCONDITIONAL two-phase salted exact count (phase 1
-  groups on (key, salt) so one hot key cannot skew a reducer; phase 2 sums
-  the tiny partials). An HLL screen cannot certify cleanliness — it
-  overestimates ~half the time, hiding duplicates — so the screen stats are
-  now exact numbers derived from the same aggregation tree (one scan; the
-  violations collection reuses the completed shuffle stages).
+* **uniqueness** is an UNCONDITIONAL exact count: one map-side-combined
+  ``groupBy`` on the key (partial aggregation folds a hot key to one row
+  per map task, so it cannot skew a reducer). An HLL screen cannot certify
+  cleanliness — it overestimates ~half the time, hiding duplicates — so the
+  screen stats are exact numbers derived from the same aggregation (one
+  scan).
 * **referential** broadcasts the dimension (it is small by definition) —
   an anti-join with zero shuffle of the fact table.
 * **drift** reduces the table to fixed-edge histogram counts (one groupBy
@@ -406,9 +406,8 @@ class UniquenessResult:
 def uniqueness_check(
     df: DataFrame,
     key: str | Sequence[str] = "doc_id",
-    salt_buckets: int = 64,
 ) -> UniquenessResult:
-    """Cross-row uniqueness — exact salted two-phase groupBy, ALWAYS run
+    """Cross-row uniqueness — exact groupBy on the key, ALWAYS run
     (north_star). Emits one violation per duplicate occurrence beyond the
     first, carrying the duplicated value — the cross-row generalization of
     uniqueItems (v4validator.js:233-246).
@@ -417,20 +416,22 @@ def uniqueness_check(
     overestimates ~half the time, so ``distinct >= total`` silently hides
     real duplicates (round-1 ADVICE, confirmed empirically at 1k-500k rows).
     The exact pass is therefore unconditional; ``screen_total`` /
-    ``screen_distinct`` / ``screened_clean`` are now the EXACT numbers,
-    computed from the same salted aggregation tree: one scan, one
-    map-side-combined shuffle of (key, salt) partials, and the violations
-    collection reuses the completed shuffle stages (same plan instance).
+    ``screen_distinct`` / ``screened_clean`` are the EXACT numbers,
+    computed from one aggregation: one scan and one map-side-combined
+    shuffle of per-key partial counts. The violations frame is lazy: on a
+    dirty table, collecting it runs that aggregation again.
 
-    ``key`` may be a single column or a list (composite key): phase 1 then
-    groups on all key columns + salt, and violation rows carry the
-    components joined with '|'.
+    A hot key cannot skew a reducer: partial aggregation folds it to one
+    row per map task before the exchange, so the reducer that owns it
+    merges at most one partial per task and no salt level is needed.
+
+    ``key`` may be a single column or a list (composite key): the
+    aggregation then groups on all key columns, and violation rows carry
+    the components joined with '|'.
     """
     keys = [key] if isinstance(key, str) else list(key)
     spark = df.sparkSession
 
-    # Phase 1: salted partial counts — immune to a single mega-hot key.
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
     # NULL keys are excluded (SQL UNIQUE semantics: NULL != NULL — for a
     # composite key, any NULL component); NULL presence belongs to
     # NotNull / null_rate_check.
@@ -440,22 +441,10 @@ def uniqueness_check(
     # group on the ACTUAL key columns — concat_ws('|') grouping would
     # collide distinct composite keys whose values contain '|'
     # (('x|y','z') vs ('x','y|z')); the joined form is display-only below
-    # __-prefixed staging column (repo convention): a bare 'salt' name
-    # silently OVERWROTE a user key column called 'salt', fragmenting its
-    # values across 64 random buckets — duplicates under-counted and the
-    # screen returned a false clean (round-4 review)
-    partial = (
-        df.where(not_null)
-        .select(*[F.col(kc) for kc in keys])
-        .withColumn("__salt", salt)
-        .groupBy(*keys, "__salt")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    # Phase 2: tiny re-agg over (key) — input is ≤ salt_buckets rows per key.
-    per_key = partial.groupBy(*keys).agg(F.sum("c").alias("occurrences"))
+    per_key = (df.where(not_null).groupBy(*keys)
+               .agg(F.count(F.lit(1)).alias("occurrences")))
 
-    # Exact screen stats from the same tree (ONE job; the per-key shuffle is
-    # tiny relative to the scan and is reused by the violations collection).
+    # Exact screen stats from the per-key aggregation.
     screen = per_key.agg(
         F.coalesce(F.sum("occurrences"), F.lit(0)).alias("total"),
         F.count(F.lit(1)).alias("distinct"),

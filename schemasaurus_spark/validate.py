@@ -54,7 +54,10 @@ class ValidationResult:
     ``metrics()``, ``is_valid()`` and ``register_views()`` read ONE counts
     aggregate that runs at the first of those calls and is kept for the
     life of the result, so calling them starts a Spark job at call time and
-    later calls see the input as it was then. If the input is re-read
+    later calls see the input as it was then. The row result of
+    ``engine.run_full_validation`` is the exception: that call runs the
+    counts aggregate itself, concurrently with its aggregate checks, so
+    reading these surfaces afterwards starts no job. If the input is re-read
     (a parquet path rewritten, an incremental snapshot advanced), call
     :func:`validate` again rather than mixing a fresh ``violations()`` with
     counts taken earlier."""

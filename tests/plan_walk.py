@@ -48,7 +48,19 @@ def spark_jobs(spark, group: str):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+        # the status store hears of a job through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         out.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def all_job_ids(spark) -> set:
+    """The ids of every job the status store holds, once the listener bus
+    has delivered every event posted so far: a before/after difference is
+    the set of jobs started in between, whatever their job group."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
 def plan_nodes(plan):

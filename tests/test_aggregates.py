@@ -159,7 +159,7 @@ def test_uniqueness_composite_key(spark):
         [("u1", "d1"), ("u1", "d2"), ("u1", "d1"),       # dup pair
          ("u2", None), ("u2", None)],                     # NULLs excluded
         "user string, day string")
-    res = agg.uniqueness_check(df, key=["user", "day"], salt_buckets=4)
+    res = agg.uniqueness_check(df, key=["user", "day"])
     assert not res.screened_clean
     assert res.screen_total == 3 and res.screen_distinct == 2
     rows = res.violations.collect()

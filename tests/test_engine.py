@@ -203,3 +203,44 @@ def test_composite_unique_key_matches_uniqueness_check(spark):
             == (want.screen_total, want.screen_distinct, False))
     assert (sorted(map(tuple, got.violations.collect()))
             == sorted(map(tuple, want.violations.collect())))
+
+
+def test_failed_action_raises_and_leaves_no_pool_thread(spark):
+    """A drift baseline whose collect fails makes run_full_validation raise
+    that error, after the actions running beside it have ended: no pool
+    thread outlives the call."""
+    import threading
+
+    import pytest
+
+    df = datagen.finalize(datagen.gen_sequences(spark, 200, 4))
+    edges = [0.0, 8, 16, 2048]
+    checks = AggregateChecks(drift_edges=edges,
+                             sources_dim=datagen.sources_dim(spark))
+    run_full_validation(df, _suite(), checks)   # settles lazy threads
+    threads = threading.active_count()
+    broken = spark.range(3).select(
+        F.raise_error(F.concat(F.lit("baseline boom "),
+                               F.col("id").cast("string")))
+        .cast("string").alias("group_key"),
+        F.lit(0).alias("bucket"), F.lit(1).cast("long").alias("count"))
+    checks.drift_baseline = broken
+    with pytest.raises(Exception, match="baseline boom"):
+        run_full_validation(df, _suite(), checks)
+    assert threading.active_count() == threads
+
+
+def test_nothing_to_run_starts_no_pool_and_no_job(spark, monkeypatch):
+    """A config with no aggregate check runs nothing: no pool is made and
+    no Spark job starts."""
+    from schemasaurus_spark import engine
+
+    def no_pool(*args, **kwargs):
+        raise AssertionError("a pool was made with nothing to run")
+
+    monkeypatch.setattr(engine, "ThreadPoolExecutor", no_pool)
+    df = datagen.finalize(datagen.gen_sequences(spark, 50, 4))
+    with spark_jobs(spark, "nothing_to_run") as jobs:
+        res = aggregate_checks(df, AggregateChecks(unique_key=None))
+    assert res.n_agg == 0 and res.unique is None
+    assert jobs == [], jobs

@@ -6,9 +6,11 @@ already holds.
 Pinned two ways:
 
 1. **job count** — a gate run (``run_full_validation`` + ``is_valid()``)
-   on a duplicate-key table with a local drift baseline takes at most 10
-   Spark jobs (uniqueness 4, fused pass 4, counts aggregate 2), and
-   collecting ``verdicts()`` and ``metrics()`` afterwards takes none.
+   on a duplicate-key table with a local drift baseline takes at most 9
+   Spark jobs (uniqueness 3, fused pass 4, counts aggregate 2), all of
+   them in the caller's job group although they run on the engine's pool
+   threads, and collecting ``verdicts()`` and ``metrics()`` afterwards
+   takes none.
 2. **parity** — every surface equals the per-surface expressions it
    replaced, written out inline below, on clean, duplicate-key,
    undeclared-column, scaled-referential, stat-bound, empty and
@@ -24,7 +26,7 @@ from schemasaurus_spark.engine import AggregateChecks, run_full_validation
 from schemasaurus_spark.operators import aggregates as agg
 from schemasaurus_spark.session import local_frame
 
-from plan_walk import spark_jobs
+from plan_walk import all_job_ids, spark_jobs
 
 EDGES = [0.0, 8, 16, 32, 64, 128, 256, 512, 1024, 2048]
 
@@ -63,13 +65,16 @@ def test_gate_job_count(spark, seq):
         sources_dim=datagen.sources_dim(spark),
         null_rate_max={"doc_id": 0.004},
         drift_baseline=_baseline(spark, seq), drift_edges=EDGES)
+    before = all_job_ids(spark)
     with spark_jobs(spark, "gate_counts_gate") as gate:
         res = run_full_validation(df, _suite(), checks)
         assert not res.is_valid()
+    # the pool threads' jobs carry the caller's group: none drops out of it
+    assert all_job_ids(spark) - before == set(gate), gate
     with spark_jobs(spark, "gate_counts_collect") as collect:
         verdicts = res.verdicts().collect()
         metrics = res.row.metrics().collect()
-    assert len(gate) + len(collect) <= 10, (gate, collect)
+    assert len(gate) + len(collect) <= 9, (gate, collect)
     assert collect == [], collect
     pseudo = [r for r in verdicts if r["partition_id"] == -1]
     assert pseudo[0]["n_violations"] == res.n_agg > 0

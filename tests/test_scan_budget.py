@@ -3,17 +3,20 @@
 SURVEY §4 mandates one-pass stats over the 10^12-row table; the engine's
 contract is: the ENTIRE aggregate check family — 5 null-rate columns +
 uniqueness + referential + drift — costs exactly TWO input scans
-(one fused grouped-aggregation, one salted uniqueness pass), and consuming
+(one fused grouped-aggregation, one uniqueness groupBy), and consuming
 the aggregate violations afterwards reads ZERO further input bytes (all
 violation frames are driver-built LocalTableScans on the clean-offender
-paths).
+paths). ``run_full_validation`` adds ONE more: the row result's counts
+aggregate, which it runs with the aggregate checks, so ``verdicts()``,
+``metrics()`` and ``is_valid()`` scan nothing afterwards.
 
 Pinned three ways:
 
 1. **action count × per-plan scan count**: every eager Spark action taken
-   inside ``run_full_validation`` is intercepted; the executed plan of each
-   is searched for file-scan nodes. Total file-scanning actions == 2, each
-   with exactly one scan node.
+   inside ``run_full_validation`` is intercepted (from any thread); the
+   executed plan of each is searched for file-scan nodes. Total
+   file-scanning actions == 3, each with exactly one scan node, and none
+   more while the row surfaces are read.
 2. **plan shape of the violations frame**: ``agg_violations`` contains no
    file-scan node at all (null-rate + drift violations fire in this config,
    so the pin covers the DIRTY path, not just empty frames).
@@ -101,10 +104,17 @@ def test_aggregate_path_is_two_scans(spark, table, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     res = run_full_validation(input_df, suite, checks)
+    # (1) exactly three eager input-scanning actions, run concurrently:
+    # fused stats, uniqueness and the row counts aggregate
+    assert sorted(scan_actions) == [1, 1, 1], scan_actions
+    # ...and the row surfaces read the counts the run already holds
+    b0 = _bytes_read(spark)
+    res.verdicts().collect()
+    res.row.metrics().collect()
+    res.is_valid()
+    assert scan_actions == [1, 1, 1], scan_actions
+    assert _bytes_read(spark) - b0 < 64 * 1024
     monkeypatch.undo()
-
-    # (1) exactly two eager input-scanning actions: fused stats + uniqueness
-    assert scan_actions == [1, 1], scan_actions
 
     # (3) consuming the violations reads ~nothing from disk (LocalTableScan
     # unions only; 64 KiB of slack for metadata noise)

@@ -53,14 +53,35 @@ def test_aqe_splits_skewed_join(spark):
 
 def test_salted_uniqueness_handles_hot_key(spark):
     """A pathologically hot duplicate key (50% of all rows share one doc_id)
-    must still produce exact occurrence counts via the two-phase salted
-    aggregation."""
+    must still produce exact occurrence counts via the map-side-combined
+    per-key aggregation."""
     from schemasaurus_spark.operators.aggregates import uniqueness_check
 
     df = datagen.finalize(datagen.gen_sequences(spark, 2_000, 8))
     hot = df.limit(2_000).withColumn("doc_id", F.lit("hot-0000000X"))
     both = df.unionAll(hot)
-    res = uniqueness_check(both, "doc_id", salt_buckets=16)
+    res = uniqueness_check(both, "doc_id")
     assert not res.screened_clean
     hot_viol = res.violations.where(F.col("value") == "hot-0000000X").count()
     assert hot_viol == 2_000 - 1  # one violation per extra occurrence
+
+
+def test_uniqueness_folds_hot_key_before_the_shuffle(spark):
+    """The per-key count is combined map-side: a ``partial_count``
+    HashAggregate sits below the plan's first Exchange, so each map task
+    ships one row per key however hot it is, and the aggregation needs
+    that one shuffle only (no salted (key, salt) level)."""
+    from schemasaurus_spark.operators.aggregates import uniqueness_check
+
+    from plan_walk import executed_nodes, plan_nodes
+
+    df = datagen.finalize(datagen.gen_sequences(spark, 2_000, 8))
+    both = df.unionAll(df.withColumn("doc_id", F.lit("hot-0000000X")))
+    res = uniqueness_check(both, "doc_id")
+    assert not res.screened_clean
+    exchanges = [n for n in executed_nodes(res.violations)
+                 if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert len(exchanges) == 1, exchanges
+    assert any(n.getClass().getSimpleName() == "HashAggregateExec"
+               and "partial_count" in n.toString()
+               for n in plan_nodes(exchanges[0].child()))
